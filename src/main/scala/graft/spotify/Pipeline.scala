@@ -1,12 +1,15 @@
 package graft.spotify
 
+import scala.util.{Failure, Success, Try}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The E→T→L driver (`scripts/etl_pipeline.py:184-237`) as a linear Spark
+/** The E→T→L driver (`scripts/etl_pipeline.py:184-237`) as a Spark
   * program. Stages hand off lazy DataFrames; executors run only at the
-  * write/count actions (SURVEY.md §3.1). Offline mode (no transport, a
-  * pre-existing raw file, or nothing at all) mirrors the DAG's test-mode
-  * fallback lattice (`dags/spotify_etl_dag.py:137-176`):
+  * count/write actions (SURVEY.md §3.1), one chain of them per table,
+  * concurrently. Offline mode (no transport, a pre-existing raw file, or
+  * nothing at all) mirrors the DAG's test-mode fallback lattice
+  * (`dags/spotify_etl_dag.py:137-176`):
   * explicit path → newest raw file → synthesized empty dataset.
   */
 object Pipeline {
@@ -27,7 +30,19 @@ object Pipeline {
       .option("multiLine", "true") // raw file is ONE pretty-printed doc (load.py:73)
       .json(path)
 
-  /** Full run. `client=None` + no raw file ⇒ empty-dataset offline run. */
+  /** Full run. `client=None` + no raw file ⇒ empty-dataset offline run.
+    *
+    * The output format is checked first, before extraction and any Spark
+    * work. The raw document is parsed once: it is cached, then each table
+    * is cached after its inputs (`Transforms.all` lists them in that
+    * order), so the tables fill from the parsed document and the merged
+    * view from the tracks and features caches. Each table then runs its
+    * own chain concurrently with the others: one count, then the processed
+    * and final zone writes. A table whose count is 0 is not written
+    * (`load.py:100-102`), and the count is its `stats` entry. `run` waits
+    * for every chain, on failure as well, before it releases the caches;
+    * the first failed table, in table order, fails the run.
+    */
   def run(spark: SparkSession, config: AppConfig,
       client: Option[SpotifyClient] = None,
       rawPathOverride: Option[String] = None): RunResult = {
@@ -39,6 +54,7 @@ object Pipeline {
     val format = config.getString("output.format", "csv")
     val ts = Writers.timestamp()
     try {
+      Writers.checkFormat(format)
       // extract (or offline fallback)
       val rawPath = rawPathOverride
         .orElse(client.map { c =>
@@ -58,26 +74,45 @@ object Pipeline {
         if (config.getBoolean("transformations.merge_tracks_features", true)) tables0
         else tables0 - "tracks_with_features"
 
-      // Each table feeds two zone writes + the empty-guard + stats; cache
-      // so the raw-JSON parse and flatten run once per table, and release
-      // the cache before returning (run() is eager, so unpersist is safe).
-      tables.values.foreach(_.persist())
+      // Cache the document, then the tables in dependency order; a local
+      // relation (categories) counts without a job, so it stays uncached.
+      // Released dependents first once every chain has finished.
+      val cached = raw +: tables.values.filterNot(_.isLocal).toSeq
+      cached.foreach(_.persist())
       try {
-        val outputs = for {
-          (name, df) <- tables
-          zone <- Seq(procDir, finalDir)
-          path <- Writers.writeTable(df, zone, name, format, ts = ts,
-            prefix = if (zone == finalDir) "spotify_final" else "spotify")
-        } yield s"$zone/$name" -> path
-
-        val stats = tables.map { case (n, df) => n -> df.count() }
+        val zones = Seq(procDir -> "spotify", finalDir -> "spotify_final")
+        val done = concurrently(tables.toSeq.map { case (name, df) => () =>
+          val rows = df.count()
+          val written = if (rows == 0) Nil else zones.map { case (zone, prefix) =>
+            s"$zone/$name" -> Writers.writeTable(df, zone, name, format, prefix, ts)
+          }
+          (name -> rows, written)
+        })
         RunResult("success", (System.nanoTime() - t0) / 1e9, Some(rawPath),
-          stats, outputs.toMap)
-      } finally tables.values.foreach(_.unpersist())
+          done.map(_._1).toMap, done.flatMap(_._2).toMap)
+      } finally cached.reverse.foreach(_.unpersist())
     } catch {
       case e: Exception =>
         RunResult("failed", (System.nanoTime() - t0) / 1e9, None,
           Map.empty, Map.empty, Some(e.getMessage))
     }
+  }
+
+  /** Runs each task on a thread of its own, one per task, and waits for
+    * all of them; returns their results in task order, or throws the first
+    * failed task's error. The threads are started by the calling thread,
+    * so they inherit its Spark local properties (job group, scheduler
+    * pool), and all of them have ended when this returns.
+    */
+  private def concurrently[T](tasks: Seq[() => T]): Seq[T] = {
+    val results = new Array[Try[T]](tasks.size)
+    val threads = tasks.zipWithIndex.map { case (task, i) =>
+      new Thread(() => {
+        results(i) = try Success(task()) catch { case t: Throwable => Failure(t) }
+      }, s"spotify-pipeline-$i")
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    results.toSeq.map(_.get)
   }
 }

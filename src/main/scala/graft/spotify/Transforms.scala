@@ -1,6 +1,8 @@
 package graft.spotify
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.immutable.ListMap
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The reference's normalization semantics (`scripts/transform.py`) as
@@ -102,19 +104,21 @@ object Transforms {
       .drop("extraction_date_audio")
 
   /** All five outputs (`transform.py:170-178`): albums, tracks,
-    * audio_features, always-empty categories, and the merged view.
+    * audio_features, always-empty categories, and the merged view, in
+    * dependency order: the merged view comes after its two inputs, so
+    * caching the tables in this order lets its cache read theirs.
+    * categories is an empty local relation, which counts without a job.
     */
   def all(spark: SparkSession, raw: DataFrame,
-      date: Option[String] = None): Map[String, DataFrame] = {
+      date: Option[String] = None): ListMap[String, DataFrame] = {
     val t = tracks(raw, date)
     val f = audioFeatures(raw, date)
-    Map(
+    ListMap(
       "albums" -> albums(raw, date),
       "tracks" -> t,
       "audio_features" -> f,
       "categories" -> spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        Schemas.categories),
+        java.util.List.of[Row](), Schemas.categories),
       "tracks_with_features" -> mergeTracksFeatures(t, f))
   }
 }

@@ -11,8 +11,7 @@ import org.apache.spark.sql.DataFrame
   * Differences from the reference, on purpose (SURVEY.md §2.7):
   *  - tables land as timestamped *directories* of part-files, because a
   *    distributed writer cannot produce one file without a `coalesce(1)`
-  *    bottleneck; `singleFile = true` restores byte-level parity for
-  *    small outputs;
+  *    bottleneck;
   *  - the latest-pointer is an overwritten `latest/<name>` directory
   *    (object-store safe) instead of a symlink — the reference's symlink
   *    (`load.py:166-195`) has no equivalent on S3/GCS; on a local
@@ -38,28 +37,30 @@ object Writers {
     path.toString
   }
 
-  /** Table sink (`load.py:81-121`): `{prefix}_{name}_{ts}.{format}` under
-    * the zone dir; skips empty tables (`load.py:100-102`); unsupported
-    * format throws (`load.py:114-116`). Returns Some(path) if written.
+  /** Unsupported output formats throw (`load.py:114-116`). */
+  def checkFormat(format: String): Unit =
+    if (!Seq("csv", "parquet", "json").contains(format))
+      throw new IllegalArgumentException(s"Formato no soportado: $format")
+
+  /** Table sink (`load.py:81-121`): writes `df` to
+    * `{prefix}_{name}_{ts}.{format}` under the zone dir, points the zone's
+    * latest-pointer at it and returns the written path. `format` must pass
+    * `checkFormat`. The reference's empty-table skip (`load.py:100-102`) is
+    * the caller's: `Pipeline.run` counts each table once, writes only
+    * tables with rows, and reports that count in its stats.
     */
   def writeTable(df: DataFrame, zoneDir: String, name: String,
       format: String = "csv", prefix: String = "spotify",
-      ts: String = timestamp(), singleFile: Boolean = false): Option[String] = {
-    if (!Seq("csv", "parquet", "json").contains(format))
-      throw new IllegalArgumentException(s"Formato no soportado: $format")
-    if (df.isEmpty) None
-    else {
-      val out = s"$zoneDir/${prefix}_${name}_$ts.$format"
-      val w = (if (singleFile) df.coalesce(1) else df)
-        .write.mode("overwrite")
-      format match {
-        case "csv" => w.option("header", "true").csv(out)
-        case "parquet" => w.parquet(out)
-        case "json" => w.json(out)
-      }
-      updateLatest(zoneDir, name, out, format)
-      Some(out)
+      ts: String = timestamp()): String = {
+    val out = s"$zoneDir/${prefix}_${name}_$ts.$format"
+    val w = df.write.mode("overwrite")
+    format match {
+      case "csv" => w.option("header", "true").csv(out)
+      case "parquet" => w.parquet(out)
+      case "json" => w.json(out)
     }
+    updateLatest(zoneDir, name, out, format)
+    out
   }
 
   /** Latest-pointer (`load.py:166-195`): object-store-safe manifest plus

@@ -2,11 +2,20 @@ package graft.spotify
 
 import graft.SparkSpec
 import java.nio.file.{Files, Paths}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.storage.StorageLevel
 
 /** End-to-end offline runs: explicit raw file, and the synthesized-empty
   * fallback (`dags/spotify_etl_dag.py:137-176` semantics).
   */
-class PipelineSpec extends SparkSpec {
+class PipelineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def tmpConfigFile(base: String, format: String = "parquet"): String = {
     val yaml = s"""output:
@@ -54,6 +63,113 @@ class PipelineSpec extends SparkSpec {
       rawPathOverride = Some(fixturePath("spotify_raw_fixture.json")))
     assert(res.status == "failed")
     assert(res.error.exists(_.contains("Formato no soportado")))
+  }
+
+  test("unsupported output format fails an all-empty run before extraction") {
+    val base = Files.createTempDirectory("graft_bad_empty").toString
+    val res = Pipeline.run(spark, tmpConfig(base, format = "xml"))
+    assert(res.status == "failed")
+    assert(res.error.exists(_.contains("Formato no soportado")))
+    // checked before the offline fallback would synthesize a raw file
+    assert(!Files.exists(Paths.get(base, "raw")))
+  }
+
+  /** The jobs and query executions `body` starts, in order, seen by a
+    * listener that records only between two marker jobs run before and
+    * after it: events of one listener queue arrive in order, so earlier
+    * events are left out and every later one has arrived once the end
+    * marker has. */
+  private def observed[T](body: => T): (T, Seq[SparkListenerJobStart], Seq[QueryExecution]) = {
+    val sc = spark.sparkContext
+    val jobs = mutable.ArrayBuffer[SparkListenerJobStart]()
+    val plans = mutable.ArrayBuffer[QueryExecution]()
+    val ended = new java.util.concurrent.CountDownLatch(1)
+    object recorder extends SparkListener with QueryExecutionListener {
+      @volatile var recording = false
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some("spec-start") => recording = true
+          case Some("spec-end") => recording = false; ended.countDown()
+          case _ => if (recording) jobs += js
+        }
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (recording) plans += qe
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        if (recording) plans += qe
+    }
+    def marker(group: String): Unit = {
+      sc.setJobGroup(group, group)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(recorder)
+    spark.listenerManager.register(recorder)
+    try {
+      marker("spec-start")
+      val result = body
+      marker("spec-end")
+      assert(ended.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      (result, jobs.toSeq, plans.toSeq)
+    } finally {
+      spark.listenerManager.unregister(recorder)
+      sc.removeSparkListener(recorder)
+    }
+  }
+
+  /** One entry per scan of the raw fixture in `plan`: the cache whose
+    * fill runs it, or None for a scan outside any cache. */
+  private def rawScans(plan: SparkPlan, via: Option[AnyRef] = None): Seq[Option[AnyRef]] =
+    collectWithSubqueries(plan) {
+      case s: FileSourceScanExec if s.relation.location.rootPaths
+          .exists(_.getName == "spotify_raw_fixture.json") => Seq(via)
+      case i: InMemoryTableScanExec =>
+        rawScans(i.relation.cachedPlan, Some(i.relation.cacheBuilder))
+    }.flatten
+
+  /** Nothing a run over the fixture started is left: no RDD persisted
+    * since `persisted` was read, no cached plan for the parsed fixture or
+    * any table over it (a later run would reuse one), no worker thread. */
+  private def assertReleased(persisted: collection.Set[Int]): Unit = {
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- persisted).isEmpty)
+    val raw = Pipeline.readRaw(spark, fixturePath("spotify_raw_fixture.json"))
+    assert((raw +: Transforms.all(spark, raw).values.toSeq)
+      .forall(_.storageLevel == StorageLevel.NONE))
+    assert(!Thread.getAllStackTraces.keySet.asScala
+      .exists(t => t.isAlive && t.getName.startsWith("spotify-pipeline-")))
+  }
+
+  test("run: caller's job group on every job, raw parsed once, nothing left behind") {
+    val base = Files.createTempDirectory("graft_shape").toString
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val (res, jobs, plans) = observed {
+      spark.sparkContext.setJobGroup("spec-run", "pipeline under test")
+      try Pipeline.run(spark, tmpConfig(base),
+        rawPathOverride = Some(fixturePath("spotify_raw_fixture.json")))
+      finally spark.sparkContext.clearJobGroup()
+    }
+    assert(res.status == "success", res.error)
+    // (a) the chains' threads inherit the caller's local properties
+    assert(jobs.nonEmpty)
+    assert(jobs.forall(_.properties.getProperty("spark.jobGroup.id") == "spec-run"),
+      jobs.map(j => j.jobId -> j.properties.getProperty("spark.jobGroup.id")))
+    // (b) every plan reads the raw file through one cache, which fills once
+    val scans = plans.flatMap(qe => rawScans(qe.executedPlan))
+    assert(scans.nonEmpty)
+    assert(!scans.contains(None), "raw file scanned outside the cache")
+    assert(scans.distinct.size == 1, s"raw file read by ${scans.distinct.size} caches")
+    // (c) caches released and worker threads ended
+    assertReleased(persisted)
+  }
+
+  test("run: a failed zone write fails the run after every chain has finished") {
+    val base = Files.createTempDirectory("graft_fail").toString
+    // a regular file where the processed zone's directory should be
+    Files.writeString(Paths.get(base, "processed"), "")
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val res = Pipeline.run(spark, tmpConfig(base),
+      rawPathOverride = Some(fixturePath("spotify_raw_fixture.json")))
+    assert(res.status == "failed")
+    assert(res.error.isDefined)
+    assertReleased(persisted)
   }
 
   test("CLI: offline run exits 0 and renders the full run report") {
