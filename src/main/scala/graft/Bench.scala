@@ -337,85 +337,22 @@ object Bench {
       if (results.nonEmpty) results.values.map(_._1).filter(_ >= 0).sum
       else 0.0
     println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"samples":$ns,"sf":"$sfDir"}""")
-    // Scale-strategy variant, timed but NOT in the total (it re-answers
-    // q69 with the 100×-scale join strategy): pagerank with the rank
-    // table SHUFFLE-joined per round instead of broadcast — the mode
-    // ScaleSpec plan-asserts for clusters where ranks outgrow a
-    // broadcast. Recording its cost alongside q69's makes the strategy
-    // switch a measured trade, not an assumed one.
-    // The four variants: q120 HITS with the per-half-round score join
-    // BROADCAST instead of the graded shuffle-hash default (flipped
-    // round 17 — for HITS the broadcast build cost lost the controlled
-    // A/B at sf0.1/local[32], and shuffle is the mode that survives
-    // 100 TB anyway; this variant keeps the counter-mode measured so
-    // the flip stays a recorded trade), q86 LPA
-    // (the label vector is exactly |nodes| rows — the first to outgrow
-    // a broadcast) and q90 personalized PageRank (sparse, but
-    // approaches |nodes| on well-connected graphs within two rounds).
-    val variantDefs: Seq[(String, () => Long)] = Seq(
-      "q69_shuffle_ranks" ->
-        (() => graft.ops.Graph.copurchasePagerankShuffle(spark, sfDir).count()),
-      "q120_broadcast_scores" ->
-        (() => graft.ops.Graph.purchaseHitsBroadcast(spark, sfDir).count()),
-      "q86_shuffle_labels" ->
-        (() => graft.ops.Graph.copurchaseCommunitiesShuffle(spark, sfDir).count()),
-      "q90_shuffle_ranks" ->
-        (() => graft.ops.Graph.seededPagerankShuffle(spark, sfDir).count()))
-    // Under SPARK_GRAFT_ONLY (dev subset runs) a variant runs ONLY when
-    // listed explicitly as "variant_<name>" — and then gets a warm-up
-    // pass plus min-of-3 (the controlled A/B statistic; round-17 change
-    // so broadcast-vs-shuffle A/Bs and the guard-triage script use ONE
-    // harness instead of a hand-built runner). Unlisted variants report
-    // -1 like a failure would, so a subset sidecar is visibly not a
-    // round artifact. The FULL pass keeps the round-record statistic:
-    // one sample each, after 270 queries have warmed the JVM.
-    def variantOnce(run: () => Long): Double = {
-      cleanup()
-      val t0 = System.nanoTime()
-      try { run(); (System.nanoTime() - t0) / 1e9 }
-      catch { case _: Throwable => -1.0 }
-    }
-    val variantSecs: Map[String, Double] = variantDefs.map { case (n, run) =>
-      val selected = only match {
-        case Some(set) => set.contains("variant_" + n)
-        case None      => true
-      }
-      val sec =
-        if (!selected) -1.0
-        else if (only.isEmpty) variantOnce(run)
-        else { // focused A/B: warm once (untimed), then min-of-3
-          variantOnce(run)
-          val ok = (1 to 3).map(_ => variantOnce(run)).filter(_ >= 0)
-          if (ok.isEmpty) -1.0 else ok.min
-        }
-      if (selected) System.err.println(f"variant $n: $sec%.3fs")
-      n -> sec
-    }.toMap
-    val variantSec = variantSecs("q69_shuffle_ranks")
-    val hitsVariantSec = variantSecs("q120_broadcast_scores")
-    val lpaVariantSec = variantSecs("q86_shuffle_labels")
-    val pprVariantSec = variantSecs("q90_shuffle_ranks")
     // The driver tail-captures only the LAST ~1.9KB of stdout (every
     // archived BENCH_r*.json is a ~2KB "tail" string), so the full
     // per-query dict above (~3KB) can never survive it. The lines below
     // are the self-contained round record, sized to fit that window,
-    // LEAST-critical first so truncation eats variants before times:
-    // the four ~70B variant lines, then a qNN-short-keyed times dict
-    // (~1.2KB; the qNN prefix is unique per query) with the list of
-    // queries that earned a third sample, and the headline total LAST —
-    // under the distinct key "total_tail" so the record never carries
-    // a duplicated "metric":"total".
+    // LEAST-critical first so truncation eats the box-sentinel line
+    // before times: then a qNN-short-keyed times dict (~1.2KB; the qNN
+    // prefix is unique per query) with the list of queries that earned
+    // a third sample, and the headline total LAST — under the distinct
+    // key "total_tail" so the record never carries a duplicated
+    // "metric":"total".
     def short(k: String): String = k.takeWhile(_ != '_')
     def r3(v: Double): Double = math.rint(v * 1000) / 1000
     val qt = results.toSeq.sortBy(_._1).map { case (k, (v, _)) =>
       "\"" + short(k) + "\":" + r3(v) }.mkString("{", ",", "}")
     val extra = results.toSeq.filter(_._2._2 > 2).map(_._1).sorted
       .map("\"" + short(_) + "\"").mkString("[", ",", "]")
-    println(s"""{"metric":"variant","name":"q69_shuffle_ranks","value":${r3(variantSec)},"unit":"sec"}""")
-    println(s"""{"metric":"variant","name":"q120_broadcast_scores","value":${r3(hitsVariantSec)},"unit":"sec"}""")
-    println(s"""{"metric":"variant","name":"q86_shuffle_labels","value":${r3(lpaVariantSec)},"unit":"sec"}""")
-    println(s"""{"metric":"variant","name":"q90_shuffle_ranks","value":${r3(pprVariantSec)},"unit":"sec"}""")
-    // sentinel prints AFTER the variants (truncation eats those first):
     // reading a round artifact's outliers starts with "was the box in a
     // degraded window?", which these two numbers answer directly.
     println(s"""{"metric":"box_sentinel","pre":${r3(sentinelPre)},"post":${r3(sentinelPost)},"cpu_pre":${r3(cpuPre)},"cpu_post":${r3(cpuPost)},"unit":"sec"}""")
@@ -428,9 +365,9 @@ object Bench {
     // place in every round artifact.
     println(s"""{"metric":"total_tail","value":$total,"unit":"sec","n_queries":${results.size},"n_failed":${results.values.count(_._1 < 0)},"sent_pre":${r3(sentinelPre)},"sent_post":${r3(sentinelPost)},"cpu_pre":${r3(cpuPre)},"cpu_post":${r3(cpuPost)},"sf":"$sfDir"}""")
     // Self-contained round record (round-13 fix for the BENCH_r12
-    // truncation): the FULL-KEY per-query times map, sample counts, the
-    // variant, and the total, written to a real file the round commits —
-    // no dependence on any stdout capture window. The DEFAULT path is a
+    // truncation): the FULL-KEY per-query times map, sample counts and
+    // the total, written to a real file the round commits — no
+    // dependence on any stdout capture window. The DEFAULT path is a
     // scratch location (round-16 fix for VERDICT r15 #2): with the old
     // repo-relative "bench_times.json" default, every ad-hoc or
     // driver-side bench silently clobbered the committed round artifact
@@ -450,10 +387,6 @@ object Bench {
     val json =
       s"""{"metric":"total","value":${r3(total)},"unit":"sec","sf":"$sfDir",
          |"n_queries":${results.size},"n_failed":${results.values.count(_._1 < 0)},
-         |"variant_q69_shuffle_ranks":${r3(variantSec)},
-         |"variant_q120_broadcast_scores":${r3(hitsVariantSec)},
-         |"variant_q86_shuffle_labels":${r3(lpaVariantSec)},
-         |"variant_q90_shuffle_ranks":${r3(pprVariantSec)},
          |"sentinel_pre":${r3(sentinelPre)},
          |"sentinel_post":${r3(sentinelPost)},
          |"cpu_sentinel_pre":${r3(cpuPre)},

@@ -48,16 +48,15 @@ object Graph {
     * Scale shape: the edge list is built once — distinct
     * `(order, part)` pairs self-joined on the order key (fan-out is
     * bounded by order size, so no skew blow-up) — and persisted
-    * PRE-JOINED with each source's out-degree, partitioned by `src`.
-    * Each iteration then joins the current rank vector (|nodes| rows —
-    * BROADCAST) to the stationary edge table: the 100-TB-shaped edge
-    * set never re-shuffles, and the only per-iteration exchange is the
-    * map-side-combined partial sum by `dst` (≤ |nodes| rows per
-    * partition). Ranks are `localCheckpoint`ed per round to keep the
-    * plan flat (same discipline as q40's components loop). For graphs
-    * whose rank vector outgrows a broadcast, the same loop holds with
-    * the broadcast hint dropped — AQE picks the shuffle join and the
-    * edge table's `src` partitioning is reused.
+    * PRE-JOINED with each source's out-degree. Each iteration then
+    * joins the current rank vector (|nodes| rows) to the stationary
+    * edge table, broadcast or shuffled as [[broadcastsVector]] derives
+    * from the node count: the 100-TB-shaped edge set never re-shuffles,
+    * and the per-iteration exchange is the map-side-combined partial
+    * sum by `dst` (≤ |nodes| rows per partition), plus the vector
+    * itself when it is shuffled. Ranks are `localCheckpoint`ed per
+    * round to keep the plan flat (same discipline as q40's components
+    * loop).
     *
     * The co-purchase graph is symmetric, so every node has out-degree
     * ≥ 1 and the mass a node emits always lands on ranked nodes —
@@ -72,22 +71,6 @@ object Graph {
     // the persist the lineitem self-join + distinct executed twice
     pagerank(CachedStages.track(
         copurchaseEdges(orderParts(spark, dir)).persist()), iters)
-      .select(col("id").as("part_id"), col("rank_fp"))
-      .orderBy(col("rank_fp").desc, col("part_id").asc)
-  }
-
-  /** q69 with the per-round rank join SHUFFLED instead of broadcast —
-    * the strategy a 1000-executor cluster needs once the rank table
-    * outgrows a broadcast (ScaleSpec plan-asserts the mode; Bench
-    * records its measured cost alongside q69's so the switch point is
-    * a known trade, not an assumption). Same answer by construction.
-    */
-  def copurchasePagerankShuffle(spark: SparkSession, dir: String,
-      iters: Int = 5): DataFrame = {
-    // same two-action persist rationale as [[copurchasePagerank]]
-    pagerank(CachedStages.track(
-        copurchaseEdges(orderParts(spark, dir)).persist()), iters,
-        broadcastRanks = false)
       .select(col("id").as("part_id"), col("rank_fp"))
       .orderBy(col("rank_fp").desc, col("part_id").asc)
   }
@@ -355,20 +338,6 @@ object Graph {
       .orderBy("part_id")
   }
 
-  /** q86 with the per-round label join SHUFFLED instead of broadcast —
-    * the q69/q120 escape hatch for LPA, whose label vector is exactly
-    * |nodes| rows every round and so outgrows a broadcast first among
-    * the iterative ops. Same answer by construction (the argmax is
-    * reduction-order-free).
-    */
-  def copurchaseCommunitiesShuffle(spark: SparkSession, dir: String,
-      iters: Int = 3): DataFrame = {
-    labelPropagation(copurchaseEdges(orderParts(spark, dir)), iters,
-        broadcastLabels = false)
-      .select(col("id").as("part_id"), col("community"))
-      .orderBy("part_id")
-  }
-
   /** Core synchronous LPA over a DIRECTED edge list that must already
     * contain both directions of every undirected edge (as the
     * co-purchase build does). Returns `(id, community)`.
@@ -380,29 +349,22 @@ object Graph {
     * while `groupBy(dst).min(src)` counts every src vote — asymmetric
     * inputs would get different (arguably more correct) round-1 labels
     * than the pre-round-20 shape produced. Symmetric inputs, i.e. every
-    * caller in this codebase, are bit-identical by construction.
+    * caller in this codebase, are bit-identical by construction. On an
+    * asymmetric list a node with no in-edge holds no label, so from
+    * round 2 on its votes drop (GraphSpec pins both rounds).
     *
-    * `broadcastLabels` picks the per-round join strategy AND the
-    * stationary edge partitioning, because the optimal layout differs:
-    *  - `true` (default, graded scale): edges persisted partitioned by
-    *    `dst` — the broadcast label join adds no exchange, and
-    *    HashPartitioning(dst) already satisfies the `(dst, lbl)` and
-    *    `dst` groupBys' clustering, so a whole LPA round runs with ZERO
-    *    exchanges.
-    *  - `false` (the 100 TB mode): edges persisted partitioned by
-    *    `src` — the SHUFFLE_HASH label join (hint pinned for the
-    *    pagerankRound reasons) reuses it exchange-free, and the round
-    *    pays one |edges|-row exchange into the `(dst, lbl)` aggregation
-    *    (map-side-combined). That exchange is the unavoidable price of
-    *    not broadcasting; the stationary side still never re-shuffles
-    *    for the JOIN (plan-asserted in ScaleSpec).
+    * The edges persist partitioned by `dst`, so round 1 and every
+    * broadcast round run their `(dst, lbl)` and `dst` groupBys with
+    * ZERO exchanges. When [[broadcastsVector]] picks the shuffle join
+    * instead, the rounds read a `src`-partitioned copy re-shuffled from
+    * that cache (the upstream edge build still runs once) and pay one
+    * |edges|-row, map-side-combined exchange into the `(dst, lbl)`
+    * count — the price of not broadcasting.
     */
-  def labelPropagation(edges: DataFrame, iters: Int,
-      broadcastLabels: Boolean = true): DataFrame = {
+  def labelPropagation(edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, s"need at least one iteration, got $iters")
-    val part = if (broadcastLabels) col("dst") else col("src")
-    val edgesCached = CachedStages.track(
-      edges.repartition(part).persist())
+    val byDst = CachedStages.track(
+      edges.repartition(col("dst")).persist())
     // ROUND-1 STRENGTH REDUCTION (round 20, guide §1.2 "don't compute
     // things you throw away"): labels start as (id, id), so round 1's
     // neighbor-label frequency over the DISTINCT edge list is all-ones —
@@ -411,33 +373,27 @@ object Graph {
     // build + checkpoint, the round-1 label join, AND the |E|-row
     // (dst, lbl) counting shuffle. Identical labels by construction
     // (all counts tie at 1; ties break toward the smallest label).
-    var labels = edgesCached.groupBy(col("dst"))
+    var labels = byDst.groupBy(col("dst"))
       .agg(min(col("src")).as("lbl"))
       .select(col("dst").as("id"), col("lbl")).localCheckpoint()
+    // one label per node under the both-directions contract
+    val bc = broadcastsVector(labels.count())
+    // lazy: filled by round 2's join, never when iters == 1
+    val edgesCached = if (bc) byDst
+      else CachedStages.track(byDst.repartition(col("src")).persist())
     for (_ <- 2 to iters) {
-      labels = lpaRound(edgesCached, labels, broadcastLabels)
+      labels = edgesCached
+        .join(joinSide(labels, bc), col("src") === col("id"))
+        .groupBy(col("dst"), col("lbl"))
+        .agg(count(lit(1)).as("cnt"))
+        // argmax by (cnt, -lbl): most frequent neighbor label, smallest
+        // label on ties — one partial-aggregable max, no window
+        .groupBy(col("dst"))
+        .agg(max(struct(col("cnt"), (-col("lbl")).as("neg"))).as("best"))
+        .select(col("dst").as("id"), (-col("best.neg")).as("lbl"))
         .localCheckpoint()
     }
     labels.select(col("id"), col("lbl").as("community"))
-  }
-
-  /** One LPA round — extracted so ScaleSpec can plan-audit the
-    * per-round join strategy directly (the loop's localCheckpoint hides
-    * it from the final frame's plan, exactly as for `pagerankRound`).
-    */
-  private[ops] def lpaRound(edgesCached: DataFrame, labels: DataFrame,
-      broadcastLabels: Boolean): DataFrame = {
-    val labelSide =
-      if (broadcastLabels) broadcast(labels) else labels.hint("shuffle_hash")
-    edgesCached
-      .join(labelSide, col("src") === col("id"))
-      .groupBy(col("dst"), col("lbl"))
-      .agg(count(lit(1)).as("cnt"))
-      // argmax by (cnt, -lbl): most frequent neighbor label, smallest
-      // label on ties — one partial-aggregable max, no window
-      .groupBy(col("dst"))
-      .agg(max(struct(col("cnt"), (-col("lbl")).as("neg"))).as("best"))
-      .select(col("dst").as("id"), (-col("best.neg")).as("lbl"))
   }
 
   /** Graded q90: PERSONALIZED PageRank from a quality seed set
@@ -477,27 +433,6 @@ object Graph {
       .orderBy(col("rank_fp").desc, col("part_id").asc)
   }
 
-  /** q90 with the per-round rank join SHUFFLED instead of broadcast —
-    * q69/q120's documented escape hatch applied to the personalized
-    * walk. The sparse rank frame usually stays seed-neighborhood-sized,
-    * but on a well-connected 100 TB graph it approaches |nodes| within
-    * two rounds, and a broadcast build of it fails exactly like the
-    * global-rank case. Same answer by construction.
-    */
-  def seededPagerankShuffle(spark: SparkSession, dir: String,
-      iters: Int = 5): DataFrame = {
-    val li = orderParts(spark, dir)
-    // same persist rationale and A/B as [[seededPagerank]]
-    val edges = CachedStages.track(copurchaseEdges(li).persist())
-    val seeds = Tables(spark, dir, "orders")
-      .filter(col("o_orderpriority") === "1-URGENT")
-      .select(col("o_orderkey").as("k"))
-      .join(li, "k").select(col("p").as("id")).distinct()
-    personalizedPagerank(edges, seeds, iters, broadcastRanks = false)
-      .select(col("id").as("part_id"), col("rank_fp"))
-      .orderBy(col("rank_fp").desc, col("part_id").asc)
-  }
-
   /** Core personalized PageRank: like [[pagerank]] but the teleport
     * vector is uniform over `seeds(id)` instead of all nodes. Returns
     * only nodes with nonzero rank.
@@ -510,16 +445,12 @@ object Graph {
     * construction).
     */
   def personalizedPagerank(edges: DataFrame, seeds: DataFrame,
-      iters: Int, broadcastRanks: Boolean = true): DataFrame = {
+      iters: Int): DataFrame = {
     require(iters >= 1, s"need at least one iteration, got $iters")
     // degree table as the node set + conditional edge repartition: the
     // [[pagerank]] round-21 disciplines, same rationale
     val deg = CachedStages.track(
       edges.groupBy("src").agg(count(lit(1)).as("deg")).persist())
-    val edgesDeg = CachedStages.track({
-      val ed = edges.join(deg, "src")
-      (if (broadcastRanks) ed else ed.repartition(col("src"))).persist()
-    })
     // seeds restricted to graph nodes HERE, against the degree cache
     // (round 21): a non-node seed has no out-edges and its teleport
     // mass would leak, so the restriction is part of this operator's
@@ -528,12 +459,20 @@ object Graph {
     val seedIds = CachedStages.track(seeds.select("id").distinct()
       .join(deg.select(col("src").as("id")), Seq("id"), "left_semi")
       .persist())
+    // one action fills both caches, so the seed and degree builds run
+    // concurrently rather than one after the other
     val nSeeds = seedIds.count()
     require(nSeeds > 0, "empty seed set")
     // the rank vector grows from the seeds toward the reachable node
-    // set, so its exchange width derives from |nodes| — a count of the
-    // already-filled degree cache, not a second distinct over the edges
-    val rankParts = vectorParts(deg.count())
+    // set, so |nodes| bounds it: it sizes the vector's exchange width
+    // and picks the round join before the edge table is laid out for it
+    val nNodes = deg.count()
+    val bc = broadcastsVector(nNodes)
+    val edgesDeg = CachedStages.track({
+      val ed = edges.join(deg, "src")
+      (if (bc) ed else ed.repartition(col("src"))).persist()
+    })
+    val rankParts = vectorParts(nNodes)
     val teleport = 3L * RankScale / (20L * nSeeds)
     val teleportRows = seedIds.coalesce(vectorParts(nSeeds))
       .select(col("id"), lit(teleport).as("rank_fp"))
@@ -541,26 +480,18 @@ object Graph {
     var ranks = seedIds.coalesce(vectorParts(nSeeds)).select(col("id"),
       lit(RankScale / nSeeds).as("rank_fp")).localCheckpoint()
     for (_ <- 1 to iters) {
-      ranks = pprRound(edgesDeg, teleportRows, ranks, broadcastRanks,
+      ranks = pprRound(edgesDeg, teleportRows, joinSide(ranks, bc),
         rankParts).localCheckpoint()
     }
     ranks
   }
 
-  /** One personalized-PageRank iteration — extracted so ScaleSpec can
-    * plan-audit the per-round join strategy directly, exactly as for
-    * `pagerankRound`. `broadcastRanks=false` pins SHUFFLE_HASH (same
-    * rationale as `pagerankRound`: the persisted edge side is
-    * partitioned-not-sorted, and without the hint a small-stat rank
-    * vector would silently re-broadcast); the edge side's in-memory
-    * scan keeps its `src` outputPartitioning, so only the sparse rank
-    * frame exchanges per round.
+  /** One personalized-PageRank iteration over the rank vector's join
+    * side (see [[joinSide]]) — extracted, like [[pagerankRound]], so
+    * RoundPlans can print a round's plan.
     */
   private[ops] def pprRound(edgesDeg: DataFrame, teleportRows: DataFrame,
-      ranks: DataFrame, broadcastRanks: Boolean,
-      rankParts: Int = 0): DataFrame = {
-    val rankSide =
-      if (broadcastRanks) broadcast(ranks) else ranks.hint("shuffle_hash")
+      rankSide: DataFrame, rankParts: Int): DataFrame = {
     // ONE exchange per round (round 21, guide §2.4): the former shape
     // aggregated damped mass by dst, then unioned the teleport rows and
     // aggregated AGAIN by id — a second |ranks|-row exchange every
@@ -582,35 +513,16 @@ object Graph {
       // keep the frame literally sparse: a node whose damped mass
       // floors to zero is indistinguishable from unreachable
       .filter(col("rank_fp") =!= 0L)
-    // rankParts > 0: NARROW-coalesce the per-round vector to the
-    // caller's node-count-derived width (guide §2.2 — a core-count-
-    // sized vector leaves 32 near-empty tasks per checkpoint, zero-row
-    // read and broadcast build every round at small scale). Safe by
-    // the round-20 cache-partitioning discipline: the map-side partial
-    // aggregation stays corpus-wide; only the ≤|nodes|-row final merge
-    // fuses into the coalesced task. 0 keeps the session default, the
-    // shape ScaleSpec plan-audits.
-    if (rankParts > 0) next.coalesce(rankParts) else next
+    // NARROW-coalesce the per-round vector to the caller's
+    // node-count-derived width (guide §2.2 — a core-count-sized vector
+    // leaves 32 near-empty tasks per checkpoint, zero-row read and
+    // broadcast build every round at small scale). Safe by the round-20
+    // cache-partitioning discipline: the map-side partial aggregation
+    // stays corpus-wide; only the ≤|nodes|-row final merge fuses into
+    // the coalesced task.
+    next.coalesce(rankParts)
   }
 
-  /** Core PageRank over any directed `(src, dst)` edge list in which
-    * every node has out-degree ≥ 1 (callers with dangling nodes add
-    * self-loops or drop them first). Returns `(id, rank_fp)` with
-    * `rank_fp` in [[RankScale]] fixed-point units.
-    *
-    * `broadcastRanks` picks the per-round rank-join strategy:
-    *  - `true` (default, the graded mode): the |nodes|-row rank vector
-    *    is broadcast to the stationary edge table — zero per-round
-    *    shuffle of either side. Right while the rank vector fits an
-    *    executor (~tens of millions of nodes at 16 B/row).
-    *  - `false` (the 100 TB mode): no hint — the rank vector shuffles
-    *    on `id` while the persisted edge table's `src` partitioning is
-    *    REUSED (its in-memory scan keeps its outputPartitioning, so the
-    *    join adds no Exchange on the edge side; plan-asserted in
-    *    ScaleSpec). Per-round cost is one |nodes|-row exchange — never
-    *    an edge-table exchange. Identical ranks: the integer arithmetic
-    *    is reduction-order-free by construction.
-    */
   /** Exchange/read width for a |nodes|-row rank/score vector (round
     * 21, guide §2.2 "derive partitioning from input size"): ~4e6 rows
     * (≈64 MB) per partition, floor 1, capped at 2¹⁷. At sf0.1 the
@@ -633,10 +545,65 @@ object Graph {
     math.max(floor, math.min(n / 4000000L + 1L, 1L << 17)).toInt
   }
 
-  def pagerank(edges: DataFrame, iters: Int,
-      broadcastRanks: Boolean = true): DataFrame = {
+  /** Bytes per row of every loop's per-round vector: one `(id, value)`
+    * pair of longs — PageRank and personalized-PageRank ranks, LPA
+    * labels.
+    */
+  private[ops] val VectorRowBytes: Long = 16L
+
+  /** THE join-strategy decision of the iterative loops — PageRank
+    * (q69), personalized PageRank (q90) and LPA (q86). Each round joins
+    * a vector of at most `rows` rows (one per node) to a stationary
+    * edge table, and the loop either BROADCASTS the vector or SHUFFLES
+    * it. It decides once, from a node count it already takes, before it
+    * lays out the edge table for the chosen join. Spark's own
+    * `spark.sql.autoBroadcastJoinThreshold` is the policy: broadcast
+    * while `rows × VectorRowBytes` fits it; a negative threshold turns
+    * broadcasting off, as it does for every Spark join. No caller picks.
+    * The comparison divides instead of multiplying, so no count can
+    * overflow it.
+    *
+    *  - Broadcast (the graded scale: sf0.1's ~2·10⁴ parts are ~320 KB):
+    *    zero per-round shuffle of either side. The edge table keeps the
+    *    layout its round aggregates want — no repartition for the
+    *    PageRanks, `dst` for LPA. Right while the vector fits an
+    *    executor (~tens of millions of nodes at 16 B/row).
+    *  - Shuffle: the edge table persists partitioned by `src` and the
+    *    vector joins it SHUFFLE_HASH, pinned by hint rather than left to
+    *    the planner: the persisted edge side is partitioned but NOT
+    *    sorted, so a merge join would re-sort the 100-TB side every
+    *    round. Its in-memory scan keeps its `src` outputPartitioning, so
+    *    only the vector exchanges per round, never the edge table
+    *    (plan-asserted in ScaleSpec).
+    *
+    * Both sides give bit-identical rows: the integer rank arithmetic
+    * and the LPA argmax are reduction-order-free.
+    *
+    * HITS (q120) always shuffles and does not ask. Its broadcast mode
+    * measured equal within noise at sf0.1/local[32] once the round-17
+    * persist fix landed (focused floors 4.3-4.7 s broadcast vs 4.7-5.3 s
+    * shuffle; full pass 5.38 s vs 5.08 s), it pays six score joins per
+    * three iterations, and its |customers|-row score vector is the first
+    * to outgrow a broadcast build at 100 TB.
+    */
+  private[ops] def broadcastsVector(rows: Long): Boolean = {
+    val threshold =
+      SparkSession.active.sessionState.conf.autoBroadcastJoinThreshold
+    threshold >= 0 && rows <= threshold / VectorRowBytes
+  }
+
+  /** A round's vector side as [[broadcastsVector]] chose it. */
+  private[ops] def joinSide(vector: DataFrame, broadcasts: Boolean)
+      : DataFrame =
+    if (broadcasts) broadcast(vector) else vector.hint("shuffle_hash")
+
+  /** Core PageRank over any directed `(src, dst)` edge list in which
+    * every node has out-degree ≥ 1 (callers with dangling nodes add
+    * self-loops or drop them first). Returns `(id, rank_fp)` with
+    * `rank_fp` in [[RankScale]] fixed-point units.
+    */
+  def pagerank(edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, s"need at least one iteration, got $iters")
-    val spark = edges.sparkSession
     // DEGREE TABLE AS THE NODE SET (round 21, guide §1.2 "don't compute
     // things you throw away"): the pagerank contract (out-degree ≥ 1)
     // makes deg's key set EXACTLY the node set, so the separate
@@ -645,24 +612,23 @@ object Graph {
     // also feeds every round's zero-contribution union side).
     val deg = CachedStages.track(
       edges.groupBy("src").agg(count(lit(1)).as("deg")).persist())
-    // stationary per-iteration input: edges carrying their source's
-    // out-degree, built once. Partitioned by src ONLY in scale mode —
-    // the broadcast-mode rank join imposes no distribution on the edge
-    // side, so the former unconditional repartition was a pure |E|-row
-    // exchange thrown away every graded run (round 21, guide §2.4;
-    // StageProf q69/q90: 23 MB exchange + a second full cache fill).
-    val edgesDeg = CachedStages.track({
-      val ed = edges.join(deg, "src")
-      (if (broadcastRanks) ed else ed.repartition(col("src"))).persist()
-    })
-    // ONE action fills deg and edgesDeg together: within it the edge
-    // subtree's exchange is shared (ReuseExchange) between the degree
-    // build and the join's probe side, so the upstream self-join still
-    // executes exactly once.
-    edgesDeg.count()
-    val nodes = deg.select(col("src"))
+    // fills the degree cache; |nodes| picks the round join before the
+    // edge table is laid out for it
     val n = deg.count()
     require(n > 0, "empty edge list")
+    val bc = broadcastsVector(n)
+    // stationary per-iteration input: edges carrying their source's
+    // out-degree, built once and filled by round 1. Partitioned by src
+    // ONLY for the shuffle join — a broadcast rank join imposes no
+    // distribution on the edge side, so an unconditional repartition
+    // was a pure |E|-row exchange thrown away every graded run (round
+    // 21, guide §2.4; StageProf q69/q90: 23 MB exchange + a second full
+    // cache fill).
+    val edgesDeg = CachedStages.track({
+      val ed = edges.join(deg, "src")
+      (if (bc) ed else ed.repartition(col("src"))).persist()
+    })
+    val nodes = deg.select(col("src"))
     val teleport = 3L * RankScale / (20L * n)
 
     // ROUND-1 STRENGTH REDUCTION (round 20, guide §1.2): the initial
@@ -690,27 +656,18 @@ object Graph {
       .coalesce(rankParts)
       .localCheckpoint()
     for (_ <- 2 to iters) {
-      ranks = pagerankRound(edgesDeg, nodesSlim, teleport, ranks,
-        broadcastRanks, rankParts).localCheckpoint()
+      ranks = pagerankRound(edgesDeg, nodesSlim, teleport,
+        joinSide(ranks, bc), rankParts).localCheckpoint()
     }
     ranks
   }
 
-  /** One PageRank iteration — extracted so ScaleSpec can plan-audit the
-    * per-round join strategy directly (the loop's localCheckpoint hides
-    * it from the final frame's plan).
+  /** One PageRank iteration over the rank vector's join side (see
+    * [[joinSide]]) — extracted so RoundPlans can print a round's plan,
+    * which the loop's localCheckpoint hides from the final frame.
     */
   private[ops] def pagerankRound(edgesDeg: DataFrame, nodes: DataFrame,
-      teleport: Long, ranks: DataFrame,
-      broadcastRanks: Boolean, rankParts: Int = 0): DataFrame = {
-    // scale mode pins SHUFFLE_HASH (not merge) explicitly: the persisted
-    // edge table is partitioned but NOT sorted, so a merge join would
-    // re-sort the 100-TB side every round; the hint also keeps the mode
-    // deterministic — small-stat rank vectors would otherwise be
-    // silently re-broadcast, un-testing the very path this mode exists
-    // to exercise
-    val rankSide =
-      if (broadcastRanks) broadcast(ranks) else ranks.hint("shuffle_hash")
+      teleport: Long, rankSide: DataFrame, rankParts: Int): DataFrame = {
     // ONE exchange per round (round 21, guide §2.4): the former shape
     // aggregated mass by dst and then LEFT-joined it against the full
     // node set (a second per-round shuffle/join stage) so that nodes
@@ -727,15 +684,14 @@ object Graph {
         expr("rank_fp div deg").as("contrib"))
       .unionByName(nodes.select(col("src").as("dst"),
         lit(0L).as("contrib")))
-    val next = contribs
+    contribs
       .groupBy(col("dst"))
       .agg(sum(col("contrib")).as("mass"))
       .select(col("dst").as("id"),
         (lit(teleport) + expr("17 * mass div 20")).as("rank_fp"))
-    // rankParts: see pprRound — node-count-derived NARROW coalesce of
-    // the bounded final merge; 0 keeps the session default (the
-    // ScaleSpec-audited shape)
-    if (rankParts > 0) next.coalesce(rankParts) else next
+      // node-count-derived NARROW coalesce of the bounded final merge
+      // (see pprRound)
+      .coalesce(rankParts)
   }
 
   /** Fixed-point scale for HITS scores: bigint units of 1e-9. Smaller
@@ -789,80 +745,26 @@ object Graph {
     * bounded 1-row driver pull (round 20), and the first half-round
     * strength-reduces to a per-part count off the cached incidence.
     *
-    * The graded default FLIPPED to shuffle in round 17. The r16 close
-    * read broadcast 10.18 s vs its shuffle variant 6.80 s — an
-    * apparent strategy inversion vs r15. The triage found the real
-    * culprit: the unpersisted raw sums ran every score join TWICE per
-    * half-round, and the duplicated per-half-round broadcast build
-    * made the broadcast mode the more pressure-sensitive of the two.
-    * Post-fix the modes are equal within noise locally (focused
-    * floors 4.3-5.3 s both modes; full-pass shuffle 5.08 s vs
-    * broadcast 5.38 s — all ~2x better than any prior recorded q120),
-    * so the graded mode is the one that survives 100 TB, where the
-    * |customers|-row score vector outgrows any broadcast build.
-    * q69/q86/q90 keep broadcast defaults: their measured broadcast
-    * advantage is real (~2x locally), while HITS pays 6 score joins
-    * per 3 iterations and gets no local win from broadcasting. The
-    * broadcast mode stays available ([[purchaseHitsBroadcast]]) and
-    * Bench times it as `variant_q120_broadcast_scores` so the trade
-    * remains measured, not assumed. Output is the top-`kTop` of each
-    * side via TakeOrdered, rank stamped over the bounded result.
+    * The score joins always shuffle; [[broadcastsVector]] gives the
+    * measurements behind that. Output is the top-`kTop` of each side via
+    * TakeOrdered, rank stamped over the bounded result.
     */
   def purchaseHits(spark: SparkSession, dir: String, iters: Int = 3,
       kTop: Int = 20): DataFrame =
-    purchaseHitsOf(purchaseEdges(spark, dir), iters, kTop,
-      broadcastScores = false)
-
-  /** q120 with the per-half-round score join BROADCAST instead of
-    * shuffled — the classical small-vector optimization, kept as the
-    * measured counter-mode of the graded shuffle default (see
-    * [[purchaseHits]] for the round-17 A/B that flipped the trade).
-    * ScaleSpec plan-asserts both modes; Bench records this one's cost
-    * alongside q120's so the switch point stays a known trade. Same
-    * answer by construction — the integer arithmetic is
-    * reduction-order-free.
-    */
-  def purchaseHitsBroadcast(spark: SparkSession, dir: String, iters: Int = 3,
-      kTop: Int = 20): DataFrame =
-    purchaseHitsOf(purchaseEdges(spark, dir), iters, kTop,
-      broadcastScores = true)
+    purchaseHitsOf(purchaseEdges(spark, dir), iters, kTop)
 
   /** The join+aggregate half of a HITS half-round: sum the score
     * vector over `joinKey`'s in-edges into `outKey` rows
-    * (map-side-combined). Kept free of caching so ScaleSpec can
-    * plan-audit the join strategy directly (the caching in
-    * [[hitsHalfRound]] and the loop's localCheckpoint both hide it
-    * from downstream plans, exactly as for `pagerankRound`).
-    *
-    * `broadcastScores` picks the score-join strategy, mirroring
-    * `pagerankRound` (parameter default `true`; the graded q120 entry
-    * passes `false` explicitly since the round-17 flip):
-    *  - `false` (the graded q120 mode AND the 100 TB mode):
-    *    SHUFFLE_HASH pinned explicitly — the
-    *    persisted incidence copy is partitioned by `joinKey` but
-    *    NOT sorted, so a merge join would re-sort the 100-TB side
-    *    every half-round, and without the hint small-stat score
-    *    vectors would be silently re-broadcast, un-testing the very
-    *    path this mode exists to exercise. The incidence side's
-    *    in-memory scan keeps its outputPartitioning, so only the
-    *    |side|-row score vector exchanges per half-round — never the
-    *    incidence table (plan-asserted in ScaleSpec).
-    *  - `true`: the ≤|side| score vector is broadcast to the
-    *    stationary incidence copy — zero per-round shuffle of either
-    *    side, at the cost of a per-half-round broadcast build. After
-    *    the round-17 persist-raw fix the two modes are equal within
-    *    noise locally (focused floors: broadcast 4.3-4.7 s vs shuffle
-    *    4.7-5.3 s; full-pass: shuffle 5.08 s vs broadcast 5.38 s at
-    *    sf0.1/local[32]), so the graded default stays the mode that
-    *    survives 100 TB; this one stays measured as
-    *    `variant_q120_broadcast_scores`.
+    * (map-side-combined), the vector joined SHUFFLE_HASH to the
+    * incidence copy persisted partitioned by `joinKey` (the shuffle
+    * side of [[broadcastsVector]], for the reasons given there). Kept
+    * free of caching so ScaleSpec can plan-audit the join directly
+    * (the caching in [[hitsHalfRound]] and the loop's localCheckpoint
+    * both hide it from downstream plans).
     */
   private[ops] def hitsScoreJoin(oriented: DataFrame, scores: DataFrame,
-      joinKey: String, outKey: String,
-      broadcastScores: Boolean = true): DataFrame = {
-    val scoreSide =
-      if (broadcastScores) broadcast(scores) else scores.hint("shuffle_hash")
-    oriented.join(scoreSide, Seq(joinKey))
+      joinKey: String, outKey: String): DataFrame = {
+    oriented.join(scores.hint("shuffle_hash"), Seq(joinKey))
       .groupBy(outKey).agg(sum(col("score")).as("raw"))
   }
 
@@ -918,11 +820,8 @@ object Graph {
     * per-half-round localCheckpoint.
     */
   private[ops] def hitsHalfRound(oriented: DataFrame, scores: DataFrame,
-      joinKey: String, outKey: String,
-      broadcastScores: Boolean = true): DataFrame =
-    hitsNormalize(
-      hitsScoreJoin(oriented, scores, joinKey, outKey, broadcastScores),
-      outKey)
+      joinKey: String, outKey: String): DataFrame =
+    hitsNormalize(hitsScoreJoin(oriented, scores, joinKey, outKey), outKey)
 
   /** Core of `purchaseHits` over any `(cust, part)` incidence frame.
     *
@@ -932,8 +831,7 @@ object Graph {
     * caller's first action only pays the bounded top-k. Callers that
     * need lazy construction wrap the call, not the frame.
     */
-  def purchaseHitsOf(e: DataFrame, iters: Int, kTop: Int,
-      broadcastScores: Boolean = true): DataFrame = {
+  def purchaseHitsOf(e: DataFrame, iters: Int, kTop: Int): DataFrame = {
     require(iters >= 1, s"need at least one iteration, got $iters")
     val eCust = CachedStages.track(e.repartition(col("cust")).persist())
     // the part-oriented copy re-shuffles the CACHED cust copy — deriving
@@ -965,10 +863,10 @@ object Graph {
     var auths = hitsNormalize(
       eCust.groupBy("part")
         .agg((count(lit(1)) * HitsScale).as("raw")), "part")
-    var hubs = hitsHalfRound(ePart, auths, "part", "cust", broadcastScores)
+    var hubs = hitsHalfRound(ePart, auths, "part", "cust")
     for (_ <- 2 to iters) {
-      auths = hitsHalfRound(eCust, hubs, "cust", "part", broadcastScores)
-      hubs = hitsHalfRound(ePart, auths, "part", "cust", broadcastScores)
+      auths = hitsHalfRound(eCust, hubs, "cust", "part")
+      hubs = hitsHalfRound(ePart, auths, "part", "cust")
     }
 
     // TakeOrdered cut per side; the rank window runs over the ≤ kTop

@@ -6,11 +6,12 @@ import org.apache.spark.sql.functions._
 /** Dev lever (PlanAudit/StageProf class, not part of the driver
   * contract): prints the FORMATTED PHYSICAL PLAN of one iteration of
   * each iterative-loop kernel (PageRank round, personalized-PageRank
-  * round) in both join modes. The loops localCheckpoint per round, so
-  * the final frame's plan shows only a checkpoint-RDD scan — this is
-  * the only honest way to diff what a round executes (VERDICT r20 #4
-  * called out a checkpoint-truncated before/after pair as
-  * non-evidence).
+  * round) on both sides of [[Graph.broadcastsVector]]: once with the
+  * session's broadcast threshold as it is, once with it at -1. The
+  * loops localCheckpoint per round, so the final frame's plan shows
+  * only a checkpoint-RDD scan — this is the only honest way to diff
+  * what a round executes (VERDICT r20 #4 called out a
+  * checkpoint-truncated before/after pair as non-evidence).
   *
   * Run: runMain graft.ops.RoundPlans
   */
@@ -28,40 +29,26 @@ object RoundPlans {
     val edgesDeg = edges.join(deg, "src").repartition(col("src")).persist()
     edgesDeg.count()
     val nodes = edgesDeg.select("src").distinct().localCheckpoint()
+    val n = nodes.count()
     val ranks = nodes.select(col("src").as("id"),
       lit(1000000L).as("rank_fp")).localCheckpoint()
-    for (bc <- Seq(true, false)) {
-      println(s"\n========== pagerankRound broadcastRanks=$bc ==========")
-      Graph.pagerankRound(edgesDeg, nodes, 7L, ranks, bc)
-        .explain("formatted")
-    }
     val teleportRows = nodes.select(col("src").as("id"),
       lit(7L).as("rank_fp"))
-    for (bc <- Seq(true, false)) {
-      println(s"\n========== pprRound broadcastRanks=$bc ==========")
-      Graph.pprRound(edgesDeg, teleportRows, ranks, bc)
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    for (threshold <- Seq(None, Some("-1"))) {
+      threshold.foreach(spark.conf.set(key, _))
+      val bc = Graph.broadcastsVector(n)
+      val rankSide = Graph.joinSide(ranks, bc)
+      val tag = s"$key=${spark.conf.get(key)}, broadcast=$bc"
+      // 4 rank partitions: the loops' vector width at local[4]
+      println(s"\n========== pagerankRound, $tag ==========")
+      Graph.pagerankRound(edgesDeg, nodes, 7L, rankSide, 4)
+        .explain("formatted")
+      println(s"\n========== pprRound, $tag ==========")
+      Graph.pprRound(edgesDeg, teleportRows, rankSide, 4)
         .explain("formatted")
     }
-    // PREBUILD shapes (round 21): the loop inputs' build plans — the
-    // r20 shape repartitioned edgesDeg by src unconditionally and
-    // derived the node set from a second |E|-row distinct; the r21
-    // broadcast-mode shape persists the degree table as the node set
-    // and skips the repartition exchange (rounds impose no edge-side
-    // distribution in broadcast mode).
-    // fresh frame: CacheManager would otherwise substitute the
-    // persisted edgesDeg above into the "before" plan
-    val edges2 = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
-    val deg2 = edges2.groupBy("src").agg(count(lit(1)).as("deg"))
-    println("\n========== prebuild r20 shape: edgesDeg = edges JOIN deg " +
-      "+ repartition(src); nodes = distinct(src) ==========")
-    edges2.join(deg2, "src").repartition(col("src")).explain("formatted")
-    edges2.join(deg2, "src").select("src").distinct().explain("formatted")
-    println("\n========== prebuild r21 broadcast-mode shape: edgesDeg " +
-      "= edges JOIN deg(persisted); nodes = deg keys ==========")
-    val degP = deg2.persist()
-    degP.count()
-    edges2.join(degP, "src").explain("formatted")
-    degP.select(col("src")).explain("formatted")
+    spark.conf.unset(key)
     spark.stop()
   }
 }

@@ -107,7 +107,8 @@ object Sampling {
     * plan. On a web-scale corpus duplicated docs can be 10-30% of the
     * total; once the cluster table outgrows a broadcast, flip
     * `broadcastClusters` off and the same join runs as a doc_id
-    * shuffle join — the q69 broadcastRanks switch, same trade.
+    * shuffle join — the broadcast-or-shuffle trade the graph loops
+    * derive from their node count (`Graph.broadcastsVector`).
     */
   def clusterAwareSplit(spark: SparkSession, dir: String,
       broadcastClusters: Boolean = true): DataFrame = {

@@ -303,4 +303,82 @@ class GraphSpec extends SparkSpec {
     assert(auths(103L) > auths(102L))
     CachedStages.release(spark)
   }
+
+  // ---- the iterative loops on both sides of the derived join ----
+
+  /** `body` under the session's broadcast threshold and again with it
+    * at -1: both sides of Graph.broadcastsVector give the same answer. */
+  private def onBothJoinSides[T](body: => T): T = {
+    val b = try body finally CachedStages.release(spark)
+    val s = try withoutBroadcast(body) finally CachedStages.release(spark)
+    assert(b == s, s"join sides diverged: broadcast=$b shuffle=$s")
+    b
+  }
+
+  private def failsWith(message: String)(body: => Any): Unit = {
+    val e = intercept[IllegalArgumentException](body)
+    assert(e.getMessage.contains(message), e.getMessage)
+  }
+
+  private def lpa(edges: Seq[(Long, Long)], iters: Int): Map[Long, Long] =
+    Graph.labelPropagation(edges.toDF("src", "dst"), iters)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  private def ppr(edges: Seq[(Long, Long)], seeds: Seq[Long],
+      iters: Int): Map[Long, Long] =
+    Graph.personalizedPagerank(edges.toDF("src", "dst"), seeds.toDF("id"),
+      iters).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  test("iterative loops on an empty edge list: a require message or no rows") {
+    val none = Seq.empty[(Long, Long)]
+    onBothJoinSides {
+      failsWith("empty edge list")(run(none, 3))
+      failsWith("empty seed set")(ppr(none, Seq(1L), 3))
+      assert(lpa(none, 3).isEmpty)
+      assert(runHits(none, 3, 20) == ((Map.empty, Map.empty)))
+    }
+  }
+
+  test("iterative loops on a single self-loop: the whole mass, its own label") {
+    val loop = Seq((7L, 7L))
+    onBothJoinSides {
+      assert(run(loop, 3) == Map(7L -> Graph.RankScale))
+      assert(ppr(loop, Seq(7L), 3) == Map(7L -> Graph.RankScale))
+      assert(lpa(loop, 3) == Map(7L -> 7L))
+      assert(runHits(loop, 3, 20) ==
+        ((Map(7L -> Graph.HitsScale), Map(7L -> Graph.HitsScale))))
+    }
+  }
+
+  test("iterative loops on ids near Long.MaxValue: the small-id answer, relabelled") {
+    // order-preserving relabel, so every min-label and by-id tie-break
+    // picks the same node
+    val top = Long.MaxValue - 10L
+    def up(id: Long): Long = top + id
+    val und = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L))
+    val small = und.flatMap { case (a, b) => Seq((a, b), (b, a)) }
+    val big = small.map { case (a, b) => (up(a), up(b)) }
+    def upKeys(m: Map[Long, Long]) = m.map { case (k, v) => up(k) -> v }
+    onBothJoinSides {
+      assert(run(big, 4) == upKeys(run(small, 4)))
+      assert(run(big, 4) == naivePagerank(big, 4))
+      assert(ppr(big, Seq(up(1L)), 4) == upKeys(ppr(small, Seq(1L), 4)))
+      assert(lpa(big, 3) ==
+        lpa(small, 3).map { case (k, v) => up(k) -> up(v) })
+      val (hubs, auths) = runHits(small, 3, 20)
+      assert(runHits(big, 3, 20) == ((upKeys(hubs), upKeys(auths))))
+    }
+  }
+
+  test("LPA on an asymmetric edge list: pinned round-1 min(src), on both join sides") {
+    // 1 -> 2 <- 3, 2 -> 4 <- 5, 4 -> 3: nodes 1 and 5 have no in-edge
+    val edges = Seq((1L, 2L), (3L, 2L), (2L, 4L), (5L, 4L), (4L, 3L))
+    onBothJoinSides {
+      // round 1 counts every source's vote, labelled or not
+      assert(lpa(edges, 1) == Map(2L -> 1L, 4L -> 2L, 3L -> 4L))
+      // later rounds count only sources holding a label: 1 and 5 hold
+      // none, so node 2 hears only 3's label and node 4 only 2's
+      assert(lpa(edges, 2) == Map(2L -> 4L, 4L -> 1L, 3L -> 2L))
+    }
+  }
 }

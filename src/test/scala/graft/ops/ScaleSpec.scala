@@ -1,6 +1,12 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec, ShuffledHashJoinExec}
 import org.apache.spark.sql.functions._
 
 /** Scale-technique tests: these assert PLAN SHAPES, not just results —
@@ -8,6 +14,9 @@ import org.apache.spark.sql.functions._
   * pruning) are decided at plan time and are checkable at any data size.
   */
 class ScaleSpec extends SparkSpec {
+
+  /** AQE-aware plan traversal: descends into query stages. */
+  private object AQE extends AdaptiveSparkPlanHelper
 
   val dir = "/root/testdata/sf0.001"
 
@@ -614,52 +623,74 @@ class ScaleSpec extends SparkSpec {
     assert(plan.split("FileScan parquet").length - 1 == 2, plan.take(3000))
   }
 
+  /** The per-round vector joins `plan` ran: the joins with a
+    * localCheckpointed (RDD-scan) side, looked up through AQE's stages. */
+  private def roundJoins(plan: SparkPlan): Seq[SparkPlan] =
+    AQE.collect(plan) {
+      case j: BaseJoinExec if j.children.exists(c =>
+        AQE.collect(c) { case r: RDDScanExec => r }.nonEmpty) => j
+    }
+
+  /** Runs `loop` once with the session's broadcast threshold and once
+    * with it at -1, then checks both sides of Graph.broadcastsVector:
+    * the same rows; every round join of the first run broadcasts; every
+    * round join of the second is a shuffle-hash join whose persisted
+    * edge side keeps its partitioning (no exchange above the cache). */
+  private def bothRoundJoins(loop: => DataFrame): Unit = {
+    def run(): (Set[Row], Seq[SparkPlan]) = {
+      val (rows, _, plans) = observed(loop.collect().toSet)
+      CachedStages.release(spark)
+      (rows, plans.flatMap(qe => roundJoins(qe.executedPlan)))
+    }
+    val (bRows, bJoins) = run()
+    val (sRows, sJoins) = withoutBroadcast(run())
+    assert(bRows.nonEmpty && bRows == sRows,
+      s"join sides diverged: broadcast=$bRows shuffle=$sRows")
+    assert(bJoins.nonEmpty && bJoins.forall(_.isInstanceOf[BroadcastHashJoinExec]),
+      bJoins.mkString("\n"))
+    assert(sJoins.nonEmpty && sJoins.forall(_.isInstanceOf[ShuffledHashJoinExec]),
+      sJoins.mkString("\n"))
+    sJoins.foreach { j =>
+      val edgeSides = j.children.filter(c =>
+        AQE.collect(c) { case t: InMemoryTableScanExec => t }.nonEmpty)
+      assert(edgeSides.nonEmpty, s"round join must read the persisted edges\n$j")
+      assert(edgeSides.forall(c =>
+        AQE.collect(c) { case e: ShuffleExchangeLike => e }.isEmpty),
+        s"edge side must reuse the persisted src partitioning, not re-exchange\n$j")
+    }
+  }
+
+  test("broadcastsVector: broadcast up to the threshold, shuffle one byte over or at -1") {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val size = Graph.VectorRowBytes
+    try {
+      spark.conf.set(key, (1000 * size).toString) // exactly at the threshold
+      assert(Graph.broadcastsVector(1000) && Graph.broadcastsVector(0))
+      spark.conf.set(key, (1000 * size - 1).toString) // one byte over
+      assert(!Graph.broadcastsVector(1000) && Graph.broadcastsVector(999))
+      spark.conf.set(key, "-1")
+      assert(!Graph.broadcastsVector(0) && !Graph.broadcastsVector(1))
+      spark.conf.set(key, "0")
+      assert(Graph.broadcastsVector(0) && !Graph.broadcastsVector(1))
+      // rows × size would overflow a long: the comparison must not
+      spark.conf.set(key, Long.MaxValue.toString)
+      assert(Graph.broadcastsVector(Long.MaxValue / size))
+      assert(!Graph.broadcastsVector(Long.MaxValue / size + 1))
+      assert(!Graph.broadcastsVector(Long.MaxValue))
+    } finally spark.conf.unset(key)
+  }
+
   test("pagerank scale mode: identical ranks, edge side reuses its persisted partitioning") {
-    import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     val sess = spark
     import sess.implicits._
     // small asymmetric-but-no-dangling graph: a 6-cycle plus chords
     val edges = Seq(
       (1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L), (6L, 1L),
       (1L, 4L), (4L, 1L), (2L, 5L), (5L, 2L)).toDF("src", "dst")
-    // both modes, same integer arithmetic -> bit-identical ranks
-    val b = Graph.pagerank(edges, 3).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val s = Graph.pagerank(edges, 3, broadcastRanks = false).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(b == s, s"scale mode diverged: broadcast=$b shuffle=$s")
-    // plan-audit one round directly (the loop's localCheckpoint hides
-    // the join from the final frame): the rank join must be a
-    // shuffle-hash join whose edge side is the persisted scan with NO
-    // Exchange above it — only the rank side exchanges per round
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-    val edgesDeg = edges.join(deg, "src").repartition(col("src")).persist()
-    edgesDeg.count()
-    val nodes = edgesDeg.select("src").distinct().localCheckpoint()
-    val ranks = nodes.select(col("src").as("id"),
-      lit(1000000L).as("rank_fp")).localCheckpoint()
-    val round = Graph.pagerankRound(edgesDeg, nodes, 7L, ranks,
-      broadcastRanks = false)
-    val shj = round.queryExecution.sparkPlan.collect {
-      case j: ShuffledHashJoinExec => j }
-    assert(shj.nonEmpty, "scale mode must pin a shuffle-hash rank join\n" +
-      round.queryExecution.sparkPlan.toString.take(3000))
-    val edgeSides = shj.flatMap(_.children).filter(c =>
-      c.collect { case t: InMemoryTableScanExec => t }.nonEmpty)
-    assert(edgeSides.nonEmpty, "rank join must read the persisted edges")
-    assert(edgeSides.forall(c =>
-      c.collect { case e: ShuffleExchangeExec => e }.isEmpty),
-      "edge side must reuse the persisted src partitioning, not re-exchange")
-    edgesDeg.unpersist()
-    CachedStages.release(spark)
+    bothRoundJoins(Graph.pagerank(edges, 3))
   }
 
   test("hits scale mode: identical scores, incidence side reuses its persisted partitioning") {
-    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec}
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     val sess = spark
     import sess.implicits._
     // small bipartite incidence with shared parts and skewed baskets
@@ -667,17 +698,17 @@ class ScaleSpec extends SparkSpec {
       (1L, 10L), (1L, 11L), (1L, 12L), (2L, 10L), (2L, 13L),
       (3L, 11L), (3L, 12L), (3L, 13L), (4L, 10L), (4L, 12L))
       .toDF("cust", "part")
-    // both modes, same integer arithmetic -> bit-identical top lists
-    val b = Graph.purchaseHitsOf(e, 3, 20).collect()
+    // HITS is shuffle-only: the broadcast threshold must not move it
+    def scores() = Graph.purchaseHitsOf(e, 3, 20).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    val s = Graph.purchaseHitsOf(e, 3, 20, broadcastScores = false)
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    assert(b.toSeq == s.toSeq,
-      s"scale mode diverged:\nbroadcast=${b.toSeq}\nshuffle=${s.toSeq}")
+      .toSeq
+    val b = scores()
     CachedStages.release(spark)
-    // plan-audit one half-round directly in each mode (the loop's
-    // localCheckpoint hides the join from the final frame's plan)
+    val s = withoutBroadcast(scores())
+    assert(b.nonEmpty && b == s, s"threshold moved HITS:\ndefault=$b\n-1=$s")
+    CachedStages.release(spark)
+    // plan-audit one half-round directly (the loop's per-round caches
+    // hide the join from the final frame's plan)
     val eCust = e.repartition(col("cust")).persist()
     eCust.count()
     val hubs = eCust.select("cust").distinct()
@@ -685,43 +716,32 @@ class ScaleSpec extends SparkSpec {
     // join-strategy audits run against hitsScoreJoin — the join half is
     // kept cache-free exactly so its plan is directly auditable (the
     // half-round itself persists the raw sums, hiding the join inside
-    // an InMemoryRelation)
-    // broadcast mode: the score join is a broadcast-hash join
-    val bRound = Graph.hitsScoreJoin(eCust, hubs, "cust", "part")
-    assert(bRound.queryExecution.sparkPlan.collect {
-      case j: BroadcastHashJoinExec => j }.nonEmpty,
-      "broadcast mode must broadcast the score vector\n" +
-        bRound.queryExecution.sparkPlan.toString.take(3000))
-    // scale mode (the graded q120 mode since the round-17 flip):
-    // shuffle-hash score join; the incidence side is the persisted
-    // scan with NO Exchange above it — only the score vector
-    // exchanges per half-round
-    val sRound = Graph.hitsScoreJoin(eCust, hubs, "cust", "part",
-      broadcastScores = false)
-    val shj = sRound.queryExecution.sparkPlan.collect {
+    // an InMemoryRelation): shuffle-hash score join; the incidence side
+    // is the persisted scan with NO Exchange above it — only the score
+    // vector exchanges per half-round
+    val sRound = Graph.hitsScoreJoin(eCust, hubs, "cust", "part")
+    val shj = AQE.collect(sRound.queryExecution.executedPlan) {
       case j: ShuffledHashJoinExec => j }
-    assert(shj.nonEmpty, "scale mode must pin a shuffle-hash score join\n" +
-      sRound.queryExecution.sparkPlan.toString.take(3000))
+    assert(shj.nonEmpty, "HITS must pin a shuffle-hash score join\n" +
+      sRound.queryExecution.executedPlan.toString.take(3000))
     val incSides = shj.flatMap(_.children).filter(c =>
-      c.collect { case t: InMemoryTableScanExec => t }.nonEmpty)
+      AQE.collect(c) { case t: InMemoryTableScanExec => t }.nonEmpty)
     assert(incSides.nonEmpty, "score join must read the persisted incidence")
     assert(incSides.forall(c =>
-      c.collect { case ex: ShuffleExchangeExec => ex }.isEmpty),
+      AQE.collect(c) { case ex: ShuffleExchangeLike => ex }.isEmpty),
       "incidence side must reuse the persisted cust partitioning, not re-exchange")
     // the half-round must CACHE the raw sums, and (round 20) its
     // normalize divisor is pulled to the driver by the half-round's
     // one action: the returned frame is a pure PROJECTION over the
     // cached raw — one cache read, no crossJoin(max) broadcast build,
     // and no re-run of the score join per traversal
-    val round = Graph.hitsHalfRound(eCust, hubs, "cust", "part",
-      broadcastScores = false)
+    val round = Graph.hitsHalfRound(eCust, hubs, "cust", "part")
     assert(round.queryExecution.sparkPlan.collect {
       case t: InMemoryTableScanExec => t }.size == 1,
       "the normalize projection must read the persisted raw sums once\n" +
         round.queryExecution.sparkPlan.toString.take(3000))
     assert(round.queryExecution.sparkPlan.collect {
-      case j: ShuffledHashJoinExec => j
-      case j: BroadcastHashJoinExec => j }.isEmpty,
+      case j: BaseJoinExec => j }.isEmpty,
       "the score join must live inside the cached raw plan, not rerun " +
         "per traversal\n" +
         round.queryExecution.sparkPlan.toString.take(3000))
@@ -730,80 +750,23 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("lpa scale mode: identical communities, edge side reuses its persisted partitioning") {
-    import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     val sess = spark
     import sess.implicits._
     // two communities bridged by one edge, symmetrized
     val raw = Seq((1L, 2L), (2L, 3L), (1L, 3L), (4L, 5L), (5L, 6L),
       (4L, 6L), (3L, 4L))
     val edges = (raw ++ raw.map(_.swap)).toDF("src", "dst")
-    val b = Graph.labelPropagation(edges, 3).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val s = Graph.labelPropagation(edges, 3, broadcastLabels = false)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(b == s, s"scale mode diverged: broadcast=$b shuffle=$s")
-    CachedStages.release(spark)
-    // plan-audit one round in scale mode: shuffle-hash label join whose
-    // edge side is the persisted src-partitioned scan, exchange-free
-    val edgesCached = edges.repartition(col("src")).persist()
-    edgesCached.count()
-    val labels = edgesCached.select(col("dst").as("id")).distinct()
-      .select(col("id"), col("id").as("lbl")).localCheckpoint()
-    val round = Graph.lpaRound(edgesCached, labels, broadcastLabels = false)
-    val shj = round.queryExecution.sparkPlan.collect {
-      case j: ShuffledHashJoinExec => j }
-    assert(shj.nonEmpty, "scale mode must pin a shuffle-hash label join\n" +
-      round.queryExecution.sparkPlan.toString.take(3000))
-    val edgeSides = shj.flatMap(_.children).filter(c =>
-      c.collect { case t: InMemoryTableScanExec => t }.nonEmpty)
-    assert(edgeSides.nonEmpty, "label join must read the persisted edges")
-    assert(edgeSides.forall(c =>
-      c.collect { case e: ShuffleExchangeExec => e }.isEmpty),
-      "edge side must reuse the persisted src partitioning, not re-exchange")
-    edgesCached.unpersist()
-    CachedStages.release(spark)
+    bothRoundJoins(Graph.labelPropagation(edges, 3))
   }
 
   test("ppr scale mode: identical ranks, edge side reuses its persisted partitioning") {
-    import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     val sess = spark
     import sess.implicits._
     val raw = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 3L),
       (4L, 5L), (5L, 4L))
     val edges = raw.toDF("src", "dst")
     val seeds = Seq(1L, 4L).toDF("id")
-    val b = Graph.personalizedPagerank(edges, seeds, 3).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val s = Graph.personalizedPagerank(edges, seeds, 3,
-      broadcastRanks = false).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(b == s, s"scale mode diverged: broadcast=$b shuffle=$s")
-    CachedStages.release(spark)
-    // plan-audit one round in scale mode
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-    val edgesDeg = edges.join(deg, "src").repartition(col("src")).persist()
-    edgesDeg.count()
-    val teleportRows = seeds.select(col("id"), lit(7L).as("rank_fp"))
-    val ranks = seeds.select(col("id"), lit(1000000L).as("rank_fp"))
-      .localCheckpoint()
-    val round = Graph.pprRound(edgesDeg, teleportRows, ranks,
-      broadcastRanks = false)
-    val shj = round.queryExecution.sparkPlan.collect {
-      case j: ShuffledHashJoinExec => j }
-    assert(shj.nonEmpty, "scale mode must pin a shuffle-hash rank join\n" +
-      round.queryExecution.sparkPlan.toString.take(3000))
-    val edgeSides = shj.flatMap(_.children).filter(c =>
-      c.collect { case t: InMemoryTableScanExec => t }.nonEmpty)
-    assert(edgeSides.nonEmpty, "rank join must read the persisted edges")
-    assert(edgeSides.forall(c =>
-      c.collect { case e: ShuffleExchangeExec => e }.isEmpty),
-      "edge side must reuse the persisted src partitioning, not re-exchange")
-    edgesDeg.unpersist()
-    CachedStages.release(spark)
+    bothRoundJoins(Graph.personalizedPagerank(edges, seeds, 3))
   }
 
   test("q84 plan: anchors broadcast; corpus never exchanges before the rank window") {
@@ -991,25 +954,25 @@ class ScaleSpec extends SparkSpec {
     CachedStages.release(spark)
   }
 
-  test("q120 HITS half-round plan: score vector broadcasts, sums partial-aggregate") {
+  test("q120 HITS half-round plan: shuffle-hash score join, sums partial-aggregate") {
     import spark.implicits._
     val e = Seq((1L, 100L), (1L, 101L), (2L, 100L)).toDF("cust", "part")
     val scores = Seq((1L, Graph.HitsScale), (2L, Graph.HitsScale))
       .toDF("cust", "score")
-    // the join half carries the strategy: the stationary incidence side
-    // streams; the score vector arrives by broadcast — per-round
-    // exchange volume is the partial-aggregated |side| rows, never the
-    // edge table
+    // the join half carries the strategy: a pinned shuffle-hash join,
+    // never a broadcast or a re-sorting merge join — per-round exchange
+    // volume is the score vector plus the partial-aggregated |side|
+    // rows
     val join = Graph.hitsScoreJoin(e, scores, "cust", "part")
     val jplan = join.queryExecution.executedPlan.toString
-    assert(jplan.contains("BroadcastExchange"), jplan.take(3000))
+    assert(jplan.contains("ShuffledHashJoin"), jplan.take(3000))
+    assert(!jplan.contains("BroadcastExchange"), jplan.take(3000))
     assert(!jplan.contains("SortMergeJoin"), jplan.take(3000))
     assert(jplan.contains("partial_sum") || jplan.contains("HashAggregate"),
       jplan.take(3000))
     // the half-round's normalize (round 20): divisor pulled to the
     // driver by the cache-fill action; the returned frame projects the
     // cached raw sums — no crossJoin(max), no second traversal
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     val round = Graph.hitsHalfRound(e, scores, "cust", "part")
     val tree = round.queryExecution.sparkPlan
     assert(tree.collect { case t: InMemoryTableScanExec => t }.size == 1,

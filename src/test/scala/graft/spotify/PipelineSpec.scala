@@ -2,14 +2,11 @@ package graft.spotify
 
 import graft.SparkSpec
 import java.nio.file.{Files, Paths}
-import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.storage.StorageLevel
 
 /** End-to-end offline runs: explicit raw file, and the synthesized-empty
@@ -72,47 +69,6 @@ class PipelineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(res.error.exists(_.contains("Formato no soportado")))
     // checked before the offline fallback would synthesize a raw file
     assert(!Files.exists(Paths.get(base, "raw")))
-  }
-
-  /** The jobs and query executions `body` starts, in order, seen by a
-    * listener that records only between two marker jobs run before and
-    * after it: events of one listener queue arrive in order, so earlier
-    * events are left out and every later one has arrived once the end
-    * marker has. */
-  private def observed[T](body: => T): (T, Seq[SparkListenerJobStart], Seq[QueryExecution]) = {
-    val sc = spark.sparkContext
-    val jobs = mutable.ArrayBuffer[SparkListenerJobStart]()
-    val plans = mutable.ArrayBuffer[QueryExecution]()
-    val ended = new java.util.concurrent.CountDownLatch(1)
-    object recorder extends SparkListener with QueryExecutionListener {
-      @volatile var recording = false
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        Option(js.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some("spec-start") => recording = true
-          case Some("spec-end") => recording = false; ended.countDown()
-          case _ => if (recording) jobs += js
-        }
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        if (recording) plans += qe
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
-        if (recording) plans += qe
-    }
-    def marker(group: String): Unit = {
-      sc.setJobGroup(group, group)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-    }
-    sc.addSparkListener(recorder)
-    spark.listenerManager.register(recorder)
-    try {
-      marker("spec-start")
-      val result = body
-      marker("spec-end")
-      assert(ended.await(30, java.util.concurrent.TimeUnit.SECONDS))
-      (result, jobs.toSeq, plans.toSeq)
-    } finally {
-      spark.listenerManager.unregister(recorder)
-      sc.removeSparkListener(recorder)
-    }
   }
 
   /** One entry per scan of the raw fixture in `plan`: the cache whose

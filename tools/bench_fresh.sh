@@ -1,15 +1,14 @@
 #!/usr/bin/env bash
 # Fresh-JVM, jar-direct graft.Bench launcher — the ONE invocation shape
-# shared by the round close, broadcast-vs-shuffle A/Bs, and the guard
+# shared by the round close, focused re-times, and the guard
 # triage automation (tools/guard_triage.py), so "controlled re-time"
 # always means the same JVM flags, heap, and core count.
 #
 # Env knobs (all optional):
 #   SPARK_GRAFT_SF_DIR     data dir        (default /root/testdata/sf0.1)
 #   SPARK_GRAFT_CPUS       local[] threads (default 32 — the driver's value)
-#   SPARK_GRAFT_ONLY       comma list of query names and/or
-#                          variant_<name> entries to time (focused A/B:
-#                          each listed variant gets warm-up + min-of-3)
+#   SPARK_GRAFT_ONLY       comma list of query names to time, e.g.
+#                          q69_copurchase_pagerank,q120_purchase_hits
 #   SPARK_GRAFT_BENCH_OUT  sidecar path    (default /tmp/graft_bench_times.json;
 #                          ONLY the round close points this at the repo)
 #   SPARK_GRAFT_HEAP       JVM heap (default 16g — matches the driver's
