@@ -18,7 +18,9 @@ import org.apache.spark.sql.functions._
   * canonical 100 TB dedup shape. The LSH path never compares all pairs:
   * candidates come from equi-joining on (band, minhash) buckets, so the
   * join fan-out is bounded by bucket collision counts, and only
-  * candidates pay the exact-Jaccard verification.
+  * candidates pay the exact-Jaccard verification. Signatures and that
+  * verification run as native kernels (`min_md5`, `overlap_count` in
+  * `graft.functions.DedupKernels`), not as interpreted lambdas.
   */
 object Dedup {
 
@@ -32,9 +34,16 @@ object Dedup {
 
   /** Seeded MinHash over the shingle set: min over shingles of
     * md5(seed || shingle), as a hex string (lexicographic min — identical
-    * in any engine).
+    * in any engine). One `min_md5` kernel call per seed; equal to
+    * [[minhashHofExpr]], the composed form the oracle SQL spells out.
+    * Callers register the kernel (`DedupKernels.register`).
     */
-  def minhashExpr(seed: Int): String =
+  def minhashExpr(seed: Int): String = s"min_md5(shingles, 'seed$seed')"
+
+  /** The composed higher-order form `min_md5` replaces, kept as the
+    * reference the kernel is tested against (DedupKernelsSpec).
+    */
+  def minhashHofExpr(seed: Int): String =
     s"array_min(transform(shingles, s -> md5(concat('seed$seed', s))))"
 
   /** documents corpus with every 100th doc re-added verbatim under
@@ -83,6 +92,7 @@ object Dedup {
   /** Per-document 4-seed MinHash signature (on the unmodified corpus). */
   def minhashSignatures(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.WordShingles.register(spark)
+    graft.functions.DedupKernels.register(spark)
     Tables(spark, dir, "documents")
       .withColumn("shingles", expr("word_shingles(text, 3)"))
       .select(col("doc_id") +: (0 until 4).map(k =>
@@ -113,12 +123,26 @@ object Dedup {
     * clear the session cache between passes (Bench does) so a later run
     * of the same canonical plan re-executes the signature stage instead
     * of reading it back from cache.
+    *
+    * Acceptance `jaccard ≥ 0.5` is decided in integers over ONE
+    * overlap count, `3·n_common ≥ |a| + |b|` (the same answer: the sizes
+    * are far below where the division could round across 0.5, and an
+    * empty shingle set has null minhashes, so it never joins). Pushed
+    * into the verify join's condition, the kernel then runs once per
+    * candidate. The accepted pairs are persisted: the final sort's
+    * range partitioner samples its input in a job of its own, which
+    * would otherwise run the band join, distinct and verification a
+    * second time.
     */
   def nearDupPairs(spark: SparkSession, dir: String): DataFrame = {
     val (verified, sigs) = contentPairCandidates(spark, dir)
+    val accepted = CachedStages.track(verified
+      .filter(col("n_common") * 3 >= size(col("sh_a")) + size(col("sh_b")))
+      .select("docs_a", "docs_b", "jaccard")
+      .persist())
     // identical-text docs pair at Jaccard 1 with no join; empty shingle
     // sets are excluded (doc-level LSH never pairs them)
-    expandDocPairs(verified.filter(col("jaccard") >= 0.5),
+    expandDocPairs(accepted,
       sigs.filter(size(col("docs")) > 1 && size(col("shingles")) > 0))
   }
 
@@ -130,6 +154,7 @@ object Dedup {
   private def contentPairCandidates(spark: SparkSession,
       dir: String): (DataFrame, DataFrame) = {
     graft.functions.WordShingles.register(spark)
+    graft.functions.DedupKernels.register(spark)
     // shuffle keyed by md5(text), not the text itself: the same document
     // bytes move either way (first(text) carries them), but the exchange
     // hashes/compares 32-hex-char keys instead of full document bodies —
@@ -147,16 +172,14 @@ object Dedup {
       .transform(s => CachedStages.track(s.persist()))
 
     // (cid, band, h): one row per band; bucket key is (band, h).
-    // NOT persisted by default: each self-join side re-runs the
-    // 4-element posexplode over the persisted `sigs` cache — O(rows)
-    // array indexing, no shuffle or aggregate inside the duplicate
-    // (tools/dup_exec.py allowlist). The GRAFT_AB_PERSIST_BANDS lever
-    // measures the alternative (cache the 4x|contents| exploded rows);
-    // the measured sf0.1 A/B lives beside the allowlist entry.
-    val bands0 = sigs.select(col("cid"), posexplode(
+    // NOT persisted: each self-join side re-runs the 4-element
+    // posexplode over the persisted `sigs` cache — O(rows) array
+    // indexing, no shuffle or aggregate inside the duplicate
+    // (tools/dup_exec.py allowlist). Caching the 4x|contents| exploded
+    // rows instead measured a wash at sf0.1 (the A/B lives beside the
+    // allowlist entry).
+    val bands = sigs.select(col("cid"), posexplode(
       array((0 until 4).map(k => col(s"mh$k")): _*)).as(Seq("band", "h")))
-    val bands = if (sys.env.contains("GRAFT_AB_PERSIST_BANDS"))
-      CachedStages.track(bands0.persist()) else bands0
 
     val cand = bands.as("a")
       .join(bands.as("b"),
@@ -170,8 +193,7 @@ object Dedup {
         col("docs").as("docs_a")), "ca")
       .join(sigs.select(col("cid").as("cb"), col("shingles").as("sh_b"),
         col("docs").as("docs_b")), "cb")
-      .withColumn("n_common",
-        size(array_intersect(col("sh_a"), col("sh_b"))))
+      .withColumn("n_common", expr("overlap_count(sh_a, sh_b)"))
       .withColumn("jaccard", col("n_common").cast("double") /
         (size(col("sh_a")) + size(col("sh_b")) - col("n_common")))
     (verified, sigs)
@@ -851,6 +873,7 @@ object Dedup {
     import org.apache.spark.sql.expressions.Window
 
     graft.functions.WordShingles.register(corpus.sparkSession)
+    graft.functions.DedupKernels.register(corpus.sparkSession)
     val contents = corpus
       .groupBy(col("text"))
       .agg(expr("sort_array(collect_list(doc_id))").as("docs"))
@@ -902,7 +925,7 @@ object Dedup {
         col("sz").as("na"), col("docs").as("docs_a")), "ca")
       .join(contents.select(col("cid").as("cb"), col("grams").as("g_b"),
         col("sz").as("nb"), col("docs").as("docs_b")), "cb")
-      .withColumn("n_common", size(array_intersect(col("g_a"), col("g_b"))))
+      .withColumn("n_common", expr("overlap_count(g_a, g_b)"))
       .filter(col("n_common") * tDen >=
         lit(tNum) * (col("na") + col("nb") - col("n_common")))
       .withColumn("jaccard", col("n_common").cast("double") /
@@ -1244,6 +1267,7 @@ object Dedup {
     */
   def snapshotDedupOf(old: DataFrame, nw: DataFrame): DataFrame = {
     graft.functions.WordShingles.register(old.sparkSession)
+    graft.functions.DedupKernels.register(old.sparkSession)
     // exact stage: one equi-join on the content-hash index
     val oldHashes = old.select(md5(col("text")).as("h"), col("doc_id"))
     val exact = nw.select(col("new_id"), md5(col("text")).as("h"))
@@ -1274,7 +1298,7 @@ object Dedup {
         "new_id")
       .join(oldSigs.select(col("doc_id").as("old_id"),
         col("shingles").as("sh_o")), "old_id")
-      .withColumn("c", size(array_intersect(col("sh_n"), col("sh_o"))))
+      .withColumn("c", expr("overlap_count(sh_n, sh_o)"))
       .filter(col("c") * 2 >= size(col("sh_n")) + size(col("sh_o")) - col("c"))
       .groupBy("new_id").agg(min(col("old_id")).as("m_near"))
 

@@ -368,7 +368,7 @@ object Graph {
     // ROUND-1 STRENGTH REDUCTION (round 20, guide §1.2 "don't compute
     // things you throw away"): labels start as (id, id), so round 1's
     // neighbor-label frequency over the DISTINCT edge list is all-ones —
-    // the argmax by (cnt, -lbl) degenerates to min(src) per dst. One
+    // the argmax by (cnt, ~lbl) degenerates to min(src) per dst. One
     // map-side-combined aggregate replaces the initial label-vector
     // build + checkpoint, the round-1 label join, AND the |E|-row
     // (dst, lbl) counting shuffle. Identical labels by construction
@@ -386,11 +386,13 @@ object Graph {
         .join(joinSide(labels, bc), col("src") === col("id"))
         .groupBy(col("dst"), col("lbl"))
         .agg(count(lit(1)).as("cnt"))
-        // argmax by (cnt, -lbl): most frequent neighbor label, smallest
-        // label on ties — one partial-aggregable max, no window
+        // argmax by (cnt, ~lbl): most frequent neighbor label, smallest
+        // label on ties — one partial-aggregable max, no window. ~x is
+        // -x - 1: order-reversing like -x, but it cannot overflow on
+        // Long.MinValue
         .groupBy(col("dst"))
-        .agg(max(struct(col("cnt"), (-col("lbl")).as("neg"))).as("best"))
-        .select(col("dst").as("id"), (-col("best.neg")).as("lbl"))
+        .agg(max(struct(col("cnt"), bitwise_not(col("lbl")).as("rev"))).as("best"))
+        .select(col("dst").as("id"), bitwise_not(col("best.rev")).as("lbl"))
         .localCheckpoint()
     }
     labels.select(col("id"), col("lbl").as("community"))

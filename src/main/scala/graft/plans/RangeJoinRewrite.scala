@@ -151,7 +151,7 @@ object RangeJoinRewrite extends Rule[LogicalPlan] {
   *
   * Registers the range-join rewrite rule and the engine's custom
   * functions (`cosine_sim`, `word_shingles`, `word_ngrams`,
-  * `lsh_buckets`), so an
+  * `lsh_buckets`, `min_md5`, `overlap_count`), so an
   * extensions-built session needs no per-session `register` calls —
   * SQL and `expr` resolve them directly.
   */
@@ -182,5 +182,17 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         classOf[graft.functions.LshBuckets].getCanonicalName,
         "lsh_buckets"),
       graft.functions.LshBuckets.build _))
+    ext.injectFunction((
+      new org.apache.spark.sql.catalyst.FunctionIdentifier("min_md5"),
+      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
+        classOf[graft.functions.MinMd5].getCanonicalName,
+        "min_md5"),
+      graft.functions.MinMd5.build _))
+    ext.injectFunction((
+      new org.apache.spark.sql.catalyst.FunctionIdentifier("overlap_count"),
+      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
+        classOf[graft.functions.OverlapCount].getCanonicalName,
+        "overlap_count"),
+      graft.functions.OverlapCount.build _))
   }
 }

@@ -370,6 +370,25 @@ class GraphSpec extends SparkSpec {
     }
   }
 
+  test("iterative loops on ids near Long.MinValue: the small-id answer, relabelled") {
+    // node 1 becomes Long.MinValue itself: LPA's smallest-label
+    // tie-break must reverse label order without negating it
+    def down(id: Long): Long = Long.MinValue + (id - 1L)
+    val und = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L))
+    val small = und.flatMap { case (a, b) => Seq((a, b), (b, a)) }
+    val big = small.map { case (a, b) => (down(a), down(b)) }
+    def downKeys(m: Map[Long, Long]) = m.map { case (k, v) => down(k) -> v }
+    onBothJoinSides {
+      assert(run(big, 4) == downKeys(run(small, 4)))
+      assert(run(big, 4) == naivePagerank(big, 4))
+      assert(ppr(big, Seq(down(1L)), 4) == downKeys(ppr(small, Seq(1L), 4)))
+      assert(lpa(big, 3) ==
+        lpa(small, 3).map { case (k, v) => down(k) -> down(v) })
+      val (hubs, auths) = runHits(small, 3, 20)
+      assert(runHits(big, 3, 20) == ((downKeys(hubs), downKeys(auths))))
+    }
+  }
+
   test("LPA on an asymmetric edge list: pinned round-1 min(src), on both join sides") {
     // 1 -> 2 <- 3, 2 -> 4 <- 5, 4 -> 3: nodes 1 and 5 have no in-edge
     val edges = Seq((1L, 2L), (3L, 2L), (2L, 4L), (5L, 4L), (4L, 3L))

@@ -3,6 +3,7 @@ package graft.ops
 import graft.SparkSpec
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
@@ -807,6 +808,51 @@ class ScaleSpec extends SparkSpec {
     assert(plan.contains("InMemoryTableScan"), plan.take(3000))
     assert(!plan.contains("CartesianProduct"), plan.take(3000))
     CachedStages.release(spark)
+  }
+
+  /** Every node `plan` executed, through AQE's stages and into the plans
+    * that filled the caches it read. */
+  private def executedNodes(plan: SparkPlan): Seq[SparkPlan] =
+    AQE.collect(plan) { case p => p }.flatMap {
+      case t: InMemoryTableScanExec => t +: executedNodes(t.relation.cachedPlan)
+      case p => Seq(p)
+    }
+
+  test("q19 runs its band join, distinct and verify once: the final sort samples cached pairs") {
+    // a Range exchange runs its input once in a sampling job of its own
+    // (RangePartitioner), then again in its map stage; the accepted
+    // pairs are cached so that both read the cache, not the pipeline.
+    // Row metrics add up over every job that ran a node, so a re-run
+    // shows as twice the candidate count.
+    spark.catalog.clearCache()
+    val candidates = Dedup.thresholdSensitivity(spark, dir)
+      .agg(sum("n_pairs")).head.getLong(0)
+    CachedStages.release(spark)
+    spark.catalog.clearCache()
+    assert(candidates > 0)
+    val (rows, _, plans) = observed(Dedup.nearDupPairs(spark, dir).collect())
+    CachedStages.release(spark)
+    assert(rows.nonEmpty && plans.size == 1, plans.size)
+    val plan = plans.head.executedPlan
+    val nodes = executedNodes(plan)
+    // the candidate distinct: the final aggregate over (ca, cb)
+    val distinct = nodes.collect {
+      case a: HashAggregateExec if a.requiredChildDistributionExpressions.isDefined &&
+        a.groupingExpressions.map(_.toString.takeWhile(_ != '#')) == Seq("ca", "cb") => a
+    }
+    assert(distinct.nonEmpty, plan.toString.take(3000))
+    distinct.foreach { a =>
+      assert(a.metrics("numOutputRows").value == candidates,
+        s"distinct ran ${a.metrics("numOutputRows").value} rows for $candidates candidates")
+    }
+    // no join left under the final range exchange, above the caches
+    val range = AQE.collect(plan) {
+      case e: ShuffleExchangeLike if e.outputPartitioning.isInstanceOf[
+        org.apache.spark.sql.catalyst.plans.physical.RangePartitioning] => e
+    }
+    assert(range.size == 1, plan.toString.take(3000))
+    assert(AQE.collect(range.head.child) { case j: BaseJoinExec => j }.isEmpty,
+      range.head.toString.take(3000))
   }
 
   test("q112 plan: single text pass — no explode, no window, one distinct expand") {

@@ -36,9 +36,10 @@ ALLOWLIST = {
     # isnotnull over the cache — O(rows) array indexing, no shuffle or
     # aggregate inside the duplicate. Persisting the exploded rows
     # would cache 4x|contents| rows to save arithmetic.
-    # MEASURED (round-19, sf0.1, GRAFT_AB_PERSIST_BANDS lever in
-    # Dedup.contentPairCandidates, 3 interleaved fresh-JVM runs each,
-    # healthy box — cpu sentinel 0.39-0.43s): explode-per-side
+    # MEASURED (round-19, sf0.1, bands persisted or not in
+    # Dedup.contentPairCandidates through an env switch since removed,
+    # 3 interleaved fresh-JVM runs each, healthy box — cpu sentinel
+    # 0.39-0.43s): explode-per-side
     # 1.345/1.437/1.49s vs persisted bands 1.30/1.332/1.53s — a wash
     # within the +-0.15s noise band; the persist pays 4x cache memory
     # for no time win even at bench scale, and at 100 TB the extra
