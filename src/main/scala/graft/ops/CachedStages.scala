@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{classic, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Registry of the small intermediate stages operators `persist()` (LSH
   * bucketed stages, dedup content/signature tables, k-means vectors).
@@ -15,12 +16,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * [[release]] after consuming each result, so cached stages do not
   * accumulate for the session's lifetime.
   *
-  * The registry is scoped PER SESSION (weakly keyed, so a stopped
-  * session's entries are collectable): releasing one session's stages
-  * must never evict caches that a different session in the same JVM is
-  * still computing against. Within a session, call [[release]] at a
-  * quiescent point — after the actions consuming the operator results —
-  * exactly like `spark.catalog.clearCache()`, which it narrows.
+  * The registry is scoped PER SESSION (weakly keyed): releasing one
+  * session's stages must never evict caches that a different session in
+  * the same JVM is still computing against. Within a session, call
+  * [[release]] at a quiescent point — after the actions consuming the
+  * operator results — exactly like `spark.catalog.clearCache()`, which it
+  * narrows.
   *
   * PARTITION-COUNT DISCIPLINE (round 20, guide §2.2 "fewer, larger
   * partitions"): a MODEL-SIZED stage (bounded by domain cardinality —
@@ -42,17 +43,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object CachedStages {
 
   private val stages = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.Queue[java.lang.ref.WeakReference[DataFrame]]]())
+    new java.util.WeakHashMap[SparkSession, java.util.Queue[LogicalPlan]]())
 
   /** Record a just-persisted stage under its own session; returns it
-    * unchanged.
+    * unchanged. The registry keeps the stage's analyzed plan, the key the
+    * session's CacheManager holds it under, not the DataFrame: an
+    * operator's persisted frame is unreachable once the operator returns,
+    * and holding the frame would also hold its executed plan (and the
+    * broadcasts in it) until the next release.
     */
   private[ops] def track(df: DataFrame): DataFrame = {
     stages.synchronized {
       stages.computeIfAbsent(df.sparkSession,
         _ => new java.util.concurrent.ConcurrentLinkedQueue())
-    }.add(new java.lang.ref.WeakReference(df))
+    }.add(df.queryExecution.analyzed)
     df
   }
 
@@ -63,14 +67,13 @@ object CachedStages {
   def release(spark: SparkSession, blocking: Boolean = false): Unit = {
     val q = stages.synchronized { stages.remove(spark) }
     if (q != null) {
-      var ref = q.poll()
-      while (ref != null) {
-        val df = ref.get()
-        if (df != null) {
-          try df.unpersist(blocking)
-          catch { case _: IllegalStateException => () } // session stopped
-        }
-        ref = q.poll()
+      val session = spark.asInstanceOf[classic.SparkSession]
+      var plan = q.poll()
+      while (plan != null) {
+        try session.sharedState.cacheManager.uncacheQuery(
+          session, plan, cascade = false, blocking = blocking)
+        catch { case _: IllegalStateException => () } // session stopped
+        plan = q.poll()
       }
     }
   }

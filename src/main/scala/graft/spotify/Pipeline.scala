@@ -6,9 +6,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The E→T→L driver (`scripts/etl_pipeline.py:184-237`) as a Spark
   * program. Stages hand off lazy DataFrames; executors run only at the
-  * count/write actions (SURVEY.md §3.1), one chain of them per table,
-  * concurrently. Offline mode (no transport, a pre-existing raw file, or
-  * nothing at all) mirrors the DAG's test-mode fallback lattice
+  * table writes (SURVEY.md §3.1), one per table, concurrently. Offline
+  * mode (no transport, a pre-existing raw file, or nothing at all)
+  * mirrors the DAG's test-mode fallback lattice
   * (`dags/spotify_etl_dag.py:137-176`):
   * explicit path → newest raw file → synthesized empty dataset.
   */
@@ -25,23 +25,29 @@ object Pipeline {
   val emptyRawJson: String =
     """{"extraction_timestamp": null, "releases": [], "audio_features": [], "categories": []}"""
 
+  /** The raw document as a frame. The file is ONE pretty-printed document
+    * (`load.py:73`), read whole by one task; `coalesce(1)` states that
+    * single partition in the plan, so a join between two of its tables
+    * needs no exchange (`Transforms.all`).
+    */
   def readRaw(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(Schemas.raw)
-      .option("multiLine", "true") // raw file is ONE pretty-printed doc (load.py:73)
+      .option("multiLine", "true")
       .json(path)
+      .coalesce(1)
 
   /** Full run. `client=None` + no raw file ⇒ empty-dataset offline run.
     *
     * The output format is checked first, before extraction and any Spark
-    * work. The raw document is parsed once: it is cached, then each table
-    * is cached after its inputs (`Transforms.all` lists them in that
-    * order), so the tables fill from the parsed document and the merged
-    * view from the tracks and features caches. Each table then runs its
-    * own chain concurrently with the others: one count, then the processed
-    * and final zone writes. A table whose count is 0 is not written
-    * (`load.py:100-102`), and the count is its `stats` entry. `run` waits
-    * for every chain, on failure as well, before it releases the caches;
-    * the first failed table, in table order, fails the run.
+    * work. The raw document is parsed once, into a cache every table reads.
+    * Each table then runs on its own thread, concurrently with the others,
+    * and costs one Spark job: its processed-zone write, which also counts
+    * its rows (`Writers.writeTable`). The final zone gets a driver-side copy
+    * of the written files (`Writers.copyTable`). A table with 0 rows leaves
+    * no output in either zone (`load.py:100-102`); the count is its `stats`
+    * entry. `run` waits for every table, on failure as well, before it
+    * releases the cache; the first failed table, in table order, fails the
+    * run.
     */
   def run(spark: SparkSession, config: AppConfig,
       client: Option[SpotifyClient] = None,
@@ -74,23 +80,24 @@ object Pipeline {
         if (config.getBoolean("transformations.merge_tracks_features", true)) tables0
         else tables0 - "tracks_with_features"
 
-      // Cache the document, then the tables in dependency order; a local
-      // relation (categories) counts without a job, so it stays uncached.
-      // Released dependents first once every chain has finished.
-      val cached = raw +: tables.values.filterNot(_.isLocal).toSeq
-      cached.foreach(_.persist())
+      // The tables all read the parsed document, so it is cached; the
+      // tables themselves are each read once, by their one write.
+      raw.persist()
       try {
-        val zones = Seq(procDir -> "spotify", finalDir -> "spotify_final")
         val done = concurrently(tables.toSeq.map { case (name, df) => () =>
-          val rows = df.count()
-          val written = if (rows == 0) Nil else zones.map { case (zone, prefix) =>
-            s"$zone/$name" -> Writers.writeTable(df, zone, name, format, prefix, ts)
-          }
-          (name -> rows, written)
+          // a local relation (categories) is checked for rows without a job
+          val (rows, written) =
+            if (df.isLocal && df.isEmpty) (0L, None)
+            else Writers.writeTable(df, procDir, name, format, "spotify", ts)
+          (name -> rows, written.toSeq.flatMap { path =>
+            Seq(s"$procDir/$name" -> path,
+              s"$finalDir/$name" -> Writers.copyTable(path, finalDir, name,
+                format, "spotify_final", ts))
+          })
         })
         RunResult("success", (System.nanoTime() - t0) / 1e9, Some(rawPath),
           done.map(_._1).toMap, done.flatMap(_._2).toMap)
-      } finally cached.reverse.foreach(_.unpersist())
+      } finally raw.unpersist()
     } catch {
       case e: Exception =>
         RunResult("failed", (System.nanoTime() - t0) / 1e9, None,

@@ -103,11 +103,10 @@ object Transforms {
       Seq("track_id"), "left")
       .drop("extraction_date_audio")
 
-  /** All five outputs (`transform.py:170-178`): albums, tracks,
-    * audio_features, always-empty categories, and the merged view, in
-    * dependency order: the merged view comes after its two inputs, so
-    * caching the tables in this order lets its cache read theirs.
-    * categories is an empty local relation, which counts without a job.
+  /** All five outputs (`transform.py:170-178`), in the reference's order:
+    * albums, tracks, audio_features, always-empty categories, and the
+    * merged view. categories is an empty local relation, which is
+    * checked for rows without a job.
     */
   def all(spark: SparkSession, raw: DataFrame,
       date: Option[String] = None): ListMap[String, DataFrame] = {
@@ -119,6 +118,10 @@ object Transforms {
       "audio_features" -> f,
       "categories" -> spark.createDataFrame(
         java.util.List.of[Row](), Schemas.categories),
-      "tracks_with_features" -> mergeTracksFeatures(t, f))
+      // hash-joined inside the document's one partition (`Pipeline.readRaw`):
+      // no exchange, and no broadcast, whose driver-side relation (a 16 MB
+      // page for a few thousand feature rows) would outlive the run until
+      // Spark's ContextCleaner removes it after a GC
+      "tracks_with_features" -> mergeTracksFeatures(t, f.hint("shuffle_hash")))
   }
 }

@@ -1,9 +1,12 @@
 package graft.spotify
 
+import java.io.File
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.time.LocalDateTime
 import java.time.format.DateTimeFormatter
-import org.apache.spark.sql.DataFrame
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Zoned sinks (`scripts/load.py`): timestamped outputs in
   * raw/processed/final plus a stable "latest" pointer.
@@ -43,32 +46,55 @@ object Writers {
       throw new IllegalArgumentException(s"Formato no soportado: $format")
 
   /** Table sink (`load.py:81-121`): writes `df` to
-    * `{prefix}_{name}_{ts}.{format}` under the zone dir, points the zone's
-    * latest-pointer at it and returns the written path. `format` must pass
-    * `checkFormat`. The reference's empty-table skip (`load.py:100-102`) is
-    * the caller's: `Pipeline.run` counts each table once, writes only
-    * tables with rows, and reports that count in its stats.
+    * `{prefix}_{name}_{ts}.{format}` under the zone dir in one Spark job,
+    * which also counts its rows (an `Observation` on the written plan, so
+    * no separate count runs). A table with rows gets the zone's
+    * latest-pointer; returns its row count and the written path. An empty
+    * table (`load.py:100-102`) leaves no output directory and no pointer,
+    * and returns `(0, None)`. `format` must pass `checkFormat`.
     */
   def writeTable(df: DataFrame, zoneDir: String, name: String,
       format: String = "csv", prefix: String = "spotify",
-      ts: String = timestamp()): String = {
+      ts: String = timestamp()): (Long, Option[String]) = {
     val out = s"$zoneDir/${prefix}_${name}_$ts.$format"
-    val w = df.write.mode("overwrite")
+    val observed = Observation(s"${name}_rows")
+    val w = df.observe(observed, count(lit(1)).as("rows")).write.mode("overwrite")
     format match {
       case "csv" => w.option("header", "true").csv(out)
       case "parquet" => w.parquet(out)
       case "json" => w.json(out)
     }
-    updateLatest(zoneDir, name, out, format)
-    out
+    val rows = observed.get("rows").asInstanceOf[Long]
+    if (rows == 0) {
+      FileUtils.deleteDirectory(new File(out))
+      (0L, None)
+    } else {
+      updateLatest(zoneDir, name, out)
+      (rows, Some(out))
+    }
+  }
+
+  /** A second zone's copy of a table `writeTable` wrote: copies every file
+    * of the `written` directory, on the driver, into
+    * `{prefix}_{name}_{ts}.{format}` under `zoneDir`, points that zone's
+    * latest-pointer at the copy and returns its path. The copy's file
+    * names and bytes are the written ones, and no Spark job runs; the
+    * reference writes the same frame a second time (`load.py:123-164`).
+    */
+  def copyTable(written: String, zoneDir: String, name: String,
+      format: String, prefix: String, ts: String): String = {
+    val out = Paths.get(zoneDir, s"${prefix}_${name}_$ts.$format")
+    FileUtils.deleteDirectory(out.toFile) // overwrite, as the write does
+    FileUtils.copyDirectory(new File(written), out.toFile)
+    updateLatest(zoneDir, name, out.toString)
+    out.toString
   }
 
   /** Latest-pointer (`load.py:166-195`): object-store-safe manifest plus
     * the reference's local symlink (`{name}_latest.csv` regardless of
     * format — faithfully odd, `load.py:181`).
     */
-  private def updateLatest(zoneDir: String, name: String, target: String,
-      format: String): Unit = {
+  private def updateLatest(zoneDir: String, name: String, target: String): Unit = {
     val manifest = Paths.get(zoneDir, "latest", s"$name.path")
     Files.createDirectories(manifest.getParent)
     val tmp = Files.createTempFile(manifest.getParent, name, ".tmp")

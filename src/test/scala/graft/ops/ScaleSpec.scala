@@ -855,6 +855,20 @@ class ScaleSpec extends SparkSpec {
       range.head.toString.take(3000))
   }
 
+  test("CachedStages.release unpersists q19's stages after a GC has collected their frames") {
+    CachedStages.release(spark)
+    spark.catalog.clearCache()
+    val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    assert(cacheManager.isEmpty)
+    assert(Dedup.nearDupPairs(spark, dir).collect().nonEmpty)
+    assert(!cacheManager.isEmpty)
+    // the operator's persisted frames are unreachable once it has returned
+    System.gc()
+    CachedStages.release(spark, blocking = true)
+    assert(cacheManager.isEmpty)
+  }
+
   test("q112 plan: single text pass — no explode, no window, one distinct expand") {
     val out = Dedup.normalizedDedupGain(spark, dir)
     val plan = out.queryExecution.executedPlan.toString

@@ -1,12 +1,14 @@
 package graft.spotify
 
 import graft.SparkSpec
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, LinkOption, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.storage.StorageLevel
 
 /** End-to-end offline runs: explicit raw file, and the synthesized-empty
@@ -126,6 +128,113 @@ class PipelineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(res.status == "failed")
     assert(res.error.isDefined)
     assertReleased(persisted)
+  }
+
+  test("run: one Spark write per non-empty table, and no count job") {
+    val base = Files.createTempDirectory("graft_jobs").toString
+    val (res, jobs, plans) = observed {
+      Pipeline.run(spark, tmpConfig(base),
+        rawPathOverride = Some(fixturePath("spotify_raw_fixture.json")))
+    }
+    assert(res.status == "success", res.error)
+    val nonEmpty = res.stats.count(_._2 > 0)
+    assert(nonEmpty == 4, res.stats)
+    // one write command per non-empty table, all into the processed zone
+    val writes = plans.map(_.logical).collect {
+      case w: InsertIntoHadoopFsRelationCommand => w.outputPath.toUri.getPath
+    }
+    assert(writes.size == nonEmpty, plans.map(_.logical.nodeName))
+    assert(writes.forall(_.startsWith(s"$base/processed/")), writes)
+    // no exchange, so no broadcast: the merged view's join runs inside the
+    // document's one partition
+    val exchanges = plans.flatMap(qe => collectWithSubqueries(qe.executedPlan) {
+      case e: Exchange => e.nodeName
+    })
+    assert(exchanges.isEmpty, exchanges)
+    // every job runs inside one of those writes' SQL executions: no count
+    // and no other action runs one of its own
+    val executions = jobs.map(j => Option(j.properties.getProperty("spark.sql.execution.id")))
+    assert(!executions.contains(None))
+    assert(executions.distinct.size == nonEmpty, executions)
+    // and each write runs one job besides AQE's reads of the raw cache
+    // (jobs whose final RDD is the cached one)
+    val writeJobs = jobs.filterNot(_.stageInfos.maxBy(_.stageId).rddInfos.head.storageLevel.isValid)
+    assert(writeJobs.map(_.properties.getProperty("spark.sql.execution.id")).sorted ==
+      executions.flatten.distinct.sorted, jobs.map(j => j.jobId -> j.stageInfos.map(
+        _.rddInfos.map(r => s"${r.name}:${r.storageLevel.description}"))))
+  }
+
+  private def listing(dir: Path): Seq[Path] = {
+    val entries = Files.list(dir)
+    try entries.iterator.asScala.toSeq finally entries.close()
+  }
+
+  /** File name -> bytes of every file in `dir` (hidden checksums too). */
+  private def contents(dir: Path): Map[String, Seq[Byte]] =
+    listing(dir).map(f => f.getFileName.toString -> Files.readAllBytes(f).toSeq).toMap
+
+  for (format <- Seq("csv", "parquet"))
+    test(s"run ($format): the final zone holds the processed zone's files; each zone points into itself") {
+      val base = Files.createTempDirectory(s"graft_zones_$format").toString
+      val res = Pipeline.run(spark, tmpConfig(base, format),
+        rawPathOverride = Some(fixturePath("spotify_raw_fixture.json")))
+      assert(res.status == "success", res.error)
+      val tables = res.stats.collect { case (t, n) if n > 0 => t }
+      assert(tables.size == 4, res.stats)
+      tables.foreach { t =>
+        val proc = Paths.get(res.outputs(s"$base/processed/$t"))
+        val fin = Paths.get(res.outputs(s"$base/final/$t"))
+        assert(proc.getParent == Paths.get(base, "processed") &&
+          proc.getFileName.toString.matches(s"spotify_${t}_\\d{8}_\\d{6}\\.$format"), proc)
+        assert(fin.getParent == Paths.get(base, "final") &&
+          fin.getFileName.toString.matches(s"spotify_final_${t}_\\d{8}_\\d{6}\\.$format"), fin)
+        val written = contents(proc)
+        assert(written.keySet.exists(_.startsWith("part-")), written.keySet)
+        assert(contents(fin) == written, t)
+        for (out <- Seq(proc, fin)) {
+          val zone = out.getParent
+          assert(Files.readString(zone.resolve(s"latest/$t.path")) == out.toString)
+          assert(Files.readSymbolicLink(zone.resolve(s"${t}_latest.csv")) == out.toAbsolutePath)
+        }
+      }
+    }
+
+  test("run: a table empty only at run time leaves no output in either zone") {
+    // releases with tracks, but every audio-feature entry is null: the
+    // features table is empty only once the filter has run
+    val track = (id: String, n: Int) =>
+      s"""{"id": "$id", "name": "T$n", "track_number": $n, "duration_ms": 1000,
+         | "explicit": false, "artists": [{"id": "ar1", "name": "X"}],
+         | "external_urls": {"spotify": "https://t/$id"}}""".stripMargin
+    val doc = s"""{"extraction_timestamp": "2024-06-01T12:00:00Z",
+      | "releases": [{"album_id": "a1", "album_name": "A", "album_type": "album",
+      |   "release_date": "2024-01-01", "total_tracks": 2, "popularity": 5,
+      |   "artists": [{"id": "ar1", "name": "X"}],
+      |   "tracks": [${track("t1", 1)}, ${track("t2", 2)}]}],
+      | "audio_features": [null, null], "categories": []}""".stripMargin
+    val raw = Files.createTempFile("raw_null_features", ".json")
+    Files.writeString(raw, doc)
+    val base = Files.createTempDirectory("graft_runtime_empty").toString
+    val res = Pipeline.run(spark, tmpConfig(base), rawPathOverride = Some(raw.toString))
+    assert(res.status == "success", res.error)
+    assert(res.stats("audio_features") == 0)
+    assert(res.stats("albums") == 1 && res.stats("tracks") == 2)
+    assert(res.stats("tracks_with_features") == 2)
+    for (zone <- Seq("processed", "final")) {
+      val dir = Paths.get(base, zone)
+      val names = listing(dir).map(_.getFileName.toString)
+      assert(!names.exists(_.contains("_audio_features_")), names)
+      assert(!Files.exists(dir.resolve("latest/audio_features.path")))
+      assert(!Files.exists(dir.resolve("audio_features_latest.csv"), LinkOption.NOFOLLOW_LINKS))
+      Seq("albums", "tracks", "tracks_with_features").foreach { t =>
+        assert(Writers.latestPath(dir.toString, t).contains(res.outputs(s"$base/$zone/$t")))
+      }
+      val merged = spark.read.parquet(res.outputs(s"$base/$zone/tracks_with_features"))
+      assert(merged.count() == 2)
+      Seq("danceability", "energy", "loudness", "tempo").foreach { c =>
+        assert(merged.filter(merged(c).isNotNull).isEmpty, c)
+      }
+    }
   }
 
   test("CLI: offline run exits 0 and renders the full run report") {
