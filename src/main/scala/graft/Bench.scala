@@ -1,59 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC") // match Verify's shapes
-      // match Verify: legacy TIMESTAMP(NANOS) events files read as raw
-      // longs instead of failing at analysis (no-op on timestamp[us])
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // dev lever: SPARK_GRAFT_BENCH_PROF=1 attaches the StageProf
-    // listener and dumps the top stages of every timed sample to
-    // stderr — for diagnosing timings that differ from focused
-    // graft.StageProf runs of the same query. Never set by the driver.
-    val profStages =
-      scala.collection.mutable.Buffer[(Int, Long, Long, Long, Long, Int)]()
-    if (sys.env.contains("SPARK_GRAFT_BENCH_PROF"))
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              sc: org.apache.spark.scheduler
-                .SparkListenerStageCompleted): Unit = {
-            val si = sc.stageInfo
-            val m = si.taskMetrics
-            profStages.synchronized {
-              profStages += ((si.stageId, m.executorRunTime,
-                m.executorCpuTime / 1000000,
-                m.shuffleReadMetrics.totalBytesRead,
-                m.shuffleWriteMetrics.bytesWritten, si.numTasks))
-            }
-          }
-        })
-    def profDump(tag: String): Unit =
-      if (sys.env.contains("SPARK_GRAFT_BENCH_PROF")) {
-        Thread.sleep(300)
-        profStages.synchronized {
-          profStages.sortBy(-_._2).take(8).foreach {
-            case (id, run, cpu, sr, sw, nt) => System.err.println(
-              f"prof $tag stage $id%5d run ${run}%7dms cpu ${cpu}%7dms " +
-                f"sr ${sr / 1e6}%8.1fMB sw ${sw / 1e6}%8.1fMB tasks $nt%4d")
-          }
-          profStages.clear()
-        }
-      }
-    // dev lever: SPARK_GRAFT_ONLY=q70_...,q73_... times a subset while
-    // iterating on one query's plan; the driver never sets it.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
+    val spark = Harness.session()
+    val names = SparkEntry.queries.keys.toSeq.sorted.filter(Harness.selected)
     // Untimed table warm-up: one full count per parquet table pulls file
     // footers and data pages into the OS page cache, so the timed pass
     // measures plan cost, not cold-disk I/O (recorded rounds have shown
@@ -84,17 +34,13 @@ object Bench {
       // itself accumulates every earlier query's cached plans and
       // localCheckpoint RDDs, and late-alphabet queries warm up under
       // heap pressure (or fail, leaving their timed run cold)
-      graft.ops.CachedStages.release(spark)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      Harness.cleanup(spark)
       val t0 = System.nanoTime()
       try {
         SparkEntry.queries(name)(spark, sfDir).count()
         val sec = (System.nanoTime() - t0) / 1e9
         warmSecs(name) = sec
         System.err.println(f"warmup $name: $sec%.2fs")
-        profDump(s"warmup $name")
       } catch {
         case e: Throwable => System.err.println(s"warmup $name FAILED: $e")
       }
@@ -108,17 +54,7 @@ object Bench {
     // (it measures the plan, not the collector), and N=2 keeps the whole
     // pass under two minutes at sf0.1.
     def cleanup(): Unit = {
-      // Persisted stages from the warm-up pass / earlier queries would
-      // otherwise serve cached results (or pin heap): release them, and
-      // BLOCK on the unpersist so background block-removal threads don't
-      // overlap the next timed region.
-      graft.ops.CachedStages.release(spark)
-      spark.catalog.clearCache()
-      // clearCache only covers SQL-cached plans; the iterative pipelines
-      // (q40/q42/q43/q45/q57) leave localCheckpoint RDDs behind. Their
-      // DataFrames are discarded after each count, so dropping is safe.
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      Harness.cleanup(spark)
       // Start each timed run from a settled heap: a major collection of
       // the previous query's garbage here is one we don't pay mid-timing.
       System.gc()
@@ -247,11 +183,8 @@ object Bench {
       // not disguised as a fast time
       try {
         SparkEntry.queries(name)(spark, sfDir).count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        profDump(f"timed $name $sec%.2fs")
-        sec
-      }
-      catch { case _: Throwable => -1.0 }
+        (System.nanoTime() - t0) / 1e9
+      } catch { case _: Throwable => -1.0 }
     }
     val results0 = names.zipWithIndex.map { case (name, idx) =>
       def timed(): Double = {

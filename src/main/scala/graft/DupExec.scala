@@ -2,7 +2,6 @@ package graft
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.{InputAdapter, RDDScanExec, ReusedSubqueryExec, SubqueryExec, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -249,26 +248,12 @@ object DupExec {
       .collect { case (_, os) if os.size <= 1 => os.head.node.detail }
       .toSeq.sorted
 
-  private def esc(s: String): String =
-    s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => " "
-      case c    => c.toString
-    }
-
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outFile = if (args.length > 1) args(1) else "/tmp/graft_dup_exec.json"
     val names = if (args.length > 2) args.drop(2).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
 
     val captured = java.util.Collections.synchronizedList(
       new java.util.ArrayList[QueryExecution]())
@@ -295,10 +280,7 @@ object DupExec {
       // same isolation as Bench: caches leaking across queries would
       // turn later queries' leaves into InMemoryTableScans and mask an
       // inter-QE recompute (or attribute one query's persist to another)
-      graft.ops.CachedStages.release(spark)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      Harness.cleanup(spark)
       captured.clear()
       // noop WRITE, not count(): under count() Catalyst prunes every
       // branch to an empty-output skeleton (aggregates lose their
@@ -334,18 +316,19 @@ object DupExec {
       }
       val flags = analyze(occs.toSeq)
       val single = singleReaders(occs.toSeq)
+      import Harness.json
       val flagJson = flags.map { f =>
         s"""{"kind":"${f.kind}","n":${f.n},"n_qe":${f.nQe},"size":${f.size},""" +
-          s""""classes":[${f.classes.toSeq.sorted.map("\"" + _ + "\"").mkString(",")}],""" +
-          s""""detail":"${esc(f.detail)}",""" +
-          s""""kids":[${f.kids.map(k => "\"" + esc(k) + "\"").mkString(",")}]}"""
+          s""""classes":[${f.classes.toSeq.sorted.map(json).mkString(",")}],""" +
+          s""""detail":${json(f.detail)},""" +
+          s""""kids":[${f.kids.map(json).mkString(",")}]}"""
       }.mkString("[", ",", "]")
       if (!first) sb.append(",\n")
       first = false
       sb.append(s""""$name":{"n_qe":${qes.size},"err":${
-        err.map("\"" + esc(_) + "\"").getOrElse("null")},"flags":$flagJson,""" +
+        err.map(json).getOrElse("null")},"flags":$flagJson,""" +
         s""""single_reader_caches":[${single.map(d =>
-          "\"" + esc(d.take(160)) + "\"").mkString(",")}]}""")
+          json(d.take(160))).mkString(",")}]}""")
       val mark = if (flags.nonEmpty) s" FLAGS=${flags.size}" else ""
       System.err.println(s"dupexec $name: n_qe=${qes.size}$mark" +
         err.map(e => s" ERR=$e").getOrElse(""))

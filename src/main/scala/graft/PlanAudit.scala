@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-quality diagnostic (not part of the driver contract): for every
   * graded query, prints the number of physical exchanges and the
   * occurrence count of expensive expression nodes in the optimized plan.
@@ -19,10 +17,7 @@ import org.apache.spark.sql.SparkSession
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     val heavy =
       Seq("regexp_extract_all", "md5", "aggregate(", "array_distinct")
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-stage empirical profiler (guide §1.1/§7.1 — "decide whether the
   * time is going to shuffle read, shuffle write, executor compute"):
@@ -11,6 +10,8 @@ import org.apache.spark.sql.SparkSession
   * stage-page numbers the (disabled) UI would show, as text.
   *
   * Not part of the driver contract; a dev lever like PlanAudit.
+  * It runs on Bench's session ([[Harness]]), so it is how to profile
+  * one Bench query.
   *
   * Run: tools/bench_fresh.sh-style jar invocation of
   *   graft.StageProf <sfDir> <queryName> [reps]
@@ -20,23 +21,7 @@ object StageProf {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val name = args.lift(1).getOrElse("q01_pricing_summary")
     val reps = args.lift(2).map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_PROF_PREAMBLE=tables replays Bench's untimed
-    // table warm-up before profiling — for bisecting harness-context
-    // differences between Bench timings and focused profiles
-    if (sys.env.get("SPARK_GRAFT_PROF_PREAMBLE").exists(_.contains("tables")))
-      graft.ops.Tables.all.foreach { t =>
-        try spark.read.parquet(s"$dir/$t.parquet").count()
-        catch { case e: Throwable => System.err.println(s"warmup $t: $e") }
-      }
+    val spark = Harness.session()
     val stages =
       scala.collection.mutable.Buffer[(Int, String, Long, Long, Long,
         Long, Long, Long, Long, Int, Long)]()
@@ -60,10 +45,7 @@ object StageProf {
     // rep 1 warms (JIT, page cache, file index); later reps are the
     // steady state the bench times. Stages reset per rep.
     for (r <- 1 to reps) {
-      graft.ops.CachedStages.release(spark)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      Harness.cleanup(spark)
       stages.clear()
       System.gc()
       val t0 = System.nanoTime()

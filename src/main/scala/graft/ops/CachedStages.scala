@@ -60,6 +60,10 @@ object CachedStages {
     df
   }
 
+  /** How many stages are tracked for `spark` since its last release. */
+  private[graft] def tracked(spark: SparkSession): Int =
+    Option(stages.get(spark)).fold(0)(_.size)
+
   /** Unpersist every stage tracked for `spark` since its last release.
     * Results already materialized are unaffected, and a subsequent
     * operator call re-persists its own stages.

@@ -535,7 +535,7 @@ object Graph {
     * repeated every round and every broadcast read; a billion-node
     * vector still gets ~250 partitions.
     */
-  private def vectorParts(n: Long): Int = {
+  private[ops] def vectorParts(n: Long): Int = {
     // floor min(4, cores), not 1: the final rank/score merge reads one
     // partial-aggregate row per (map task × touched key) — ~660k rows
     // at sf0.1 — and a single-partition vector serializes that merge

@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev lever (PlanAudit/StageProf class, not part of the driver
@@ -17,10 +16,7 @@ import org.apache.spark.sql.functions._
   */
 object RoundPlans {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Harness.session()
     import spark.implicits._
     val edges = Seq(
       (1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L), (6L, 1L),
@@ -34,18 +30,18 @@ object RoundPlans {
       lit(1000000L).as("rank_fp")).localCheckpoint()
     val teleportRows = nodes.select(col("src").as("id"),
       lit(7L).as("rank_fp"))
+    val rankParts = Graph.vectorParts(n)
     val key = "spark.sql.autoBroadcastJoinThreshold"
     for (threshold <- Seq(None, Some("-1"))) {
       threshold.foreach(spark.conf.set(key, _))
       val bc = Graph.broadcastsVector(n)
       val rankSide = Graph.joinSide(ranks, bc)
       val tag = s"$key=${spark.conf.get(key)}, broadcast=$bc"
-      // 4 rank partitions: the loops' vector width at local[4]
       println(s"\n========== pagerankRound, $tag ==========")
-      Graph.pagerankRound(edgesDeg, nodes, 7L, rankSide, 4)
+      Graph.pagerankRound(edgesDeg, nodes, 7L, rankSide, rankParts)
         .explain("formatted")
       println(s"\n========== pprRound, $tag ==========")
-      Graph.pprRound(edgesDeg, teleportRows, rankSide, 4)
+      Graph.pprRound(edgesDeg, teleportRows, rankSide, rankParts)
         .explain("formatted")
     }
     spark.conf.unset(key)

@@ -39,15 +39,12 @@ import org.apache.spark.sql.SparkSession
   * pass no key and always train, because a DataFrame's identity is
   * not a safe cache key.
   *
-  * `enabled` is a test/bench lever (settable, and initialized false
-  * when SPARK_GRAFT_NO_MODEL_MEMO is set) so specs can A/B memoized
-  * vs fresh training in one session and Bench can measure the
-  * cold-train cost on demand.
+  * `enabled` is a test lever (settable, initially true) so specs can
+  * A/B memoized vs fresh training in one session.
   */
 object TrainedModels {
 
-  @volatile var enabled: Boolean =
-    !sys.env.contains("SPARK_GRAFT_NO_MODEL_MEMO")
+  @volatile var enabled: Boolean = true
 
   private val models = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession,

@@ -10,16 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one per suite, lazy). */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    // match Verify/Bench: legacy TIMESTAMP(NANOS) parquet reads as raw
-    // longs (the LongType branch of Events.withTimeColumns) instead of
-    // failing at analysis; no-op on timestamp[us] fixtures
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  // 4 threads whatever SPARK_GRAFT_CPUS says: suites assert 4-task shapes
+  lazy val spark: SparkSession = Harness.session(cpus = 4)
 
   def fixturePath(name: String): String =
     getClass.getClassLoader.getResource(name).getPath

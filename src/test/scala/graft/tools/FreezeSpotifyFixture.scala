@@ -2,8 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.SparkSession
-
+import graft.Harness
 import graft.spotify.Schemas
 
 /** Dev tool (test scope, not library surface): freezes the checked-in
@@ -20,8 +19,7 @@ import graft.spotify.Schemas
   */
 object FreezeSpotifyFixture {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Harness.session(cpus = 2)
     val raw = spark.read.schema(Schemas.raw)
       .option("multiLine", value = true)
       .json("src/test/resources/spotify_raw_fixture.json")

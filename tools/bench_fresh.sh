@@ -6,7 +6,8 @@
 #
 # Env knobs (all optional):
 #   SPARK_GRAFT_SF_DIR     data dir        (default /root/testdata/sf0.1)
-#   SPARK_GRAFT_CPUS       local[] threads (default 32 — the driver's value)
+#   SPARK_GRAFT_CPUS       local[] threads (default 4, graft.Harness's one
+#                          default; graded runs set 32)
 #   SPARK_GRAFT_ONLY       comma list of query names to time, e.g.
 #                          q69_copurchase_pagerank,q120_purchase_hits
 #   SPARK_GRAFT_BENCH_OUT  sidecar path    (default /tmp/graft_bench_times.json;
@@ -14,6 +15,10 @@
 #   SPARK_GRAFT_HEAP       JVM heap (default 16g — matches the driver's
 #                          sbt-forked bench so close numbers stay
 #                          comparable to driver numbers)
+#
+# Bench has no stage profiler of its own: to see one query's stages,
+# run graft.StageProf with these flags on the same jar (it builds the
+# same session through graft.Harness).
 #
 # Module flags below are Spark 4.1.2's own JavaModuleOptions defaults.
 # Heap is FIXED (-Xms=-Xmx) and PRE-TOUCHED (round 20): this sandbox
