@@ -260,14 +260,13 @@ object Cdc {
     def packed(df: DataFrame, side: String): DataFrame =
       df.select(col(pk), struct(cols.map(col): _*).as(side))
     val same = cols.map(c => col(s"b.$c") <=> col(s"s.$c")).reduce(_ && _)
-    val j = CachedStages.track(
+    val j = CachedStages.data(
       packed(base, "b").join(packed(snap, "s"), Seq(pk), "full_outer")
         .withColumn("change_type",
           when(col("b").isNull, "added")
             .when(col("s").isNull, "removed")
             .when(same, "unchanged")
-            .otherwise("modified"))
-        .persist())
+            .otherwise("modified")))
     val summary = j.groupBy("change_type").agg(count(lit(1)).as("n"))
       .select(concat(lit("n_"), col("change_type")).as("metric"), col("n"))
     // ONE aggregate computes every per-column count; stack melts the

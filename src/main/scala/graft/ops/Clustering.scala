@@ -173,10 +173,8 @@ object Clustering {
     */
   private def trainCentroids(spark: SparkSession, dir: String, k: Int,
       iters: Int, exact: Boolean): Seq[(Long, Seq[Double])] = {
-    val vecs = CachedStages.track(
-      Tables(spark, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").as("v"))
-        .persist())
+    val vecs = CachedStages.data(Tables(spark, dir, "embeddings")
+        .select(col("vec_id"), col("embedding").as("v")))
     var cents = vecs.filter(col("vec_id") < k)
       .select(col("vec_id").as("cluster"),
         expr("transform(v, x -> CAST(x AS DOUBLE))").as("c"))
@@ -395,10 +393,9 @@ object Clustering {
     * a one-row fold of it. The k-means pass is q42's, unchanged.
     */
   def randIndexOf(assigned: DataFrame): DataFrame = {
-    val cont = CachedStages.track(assigned
+    val cont = CachedStages.model(assigned
       .groupBy("cluster", "label")
-      .agg(count(lit(1)).as("n_ij"))
-      .coalesce(1).persist())
+      .agg(count(lit(1)).as("n_ij")))
     val a = cont.groupBy("cluster").agg(sum(col("n_ij")).as("ai"))
       .agg(sum(expr("ai * (ai - 1) div 2")).as("a_pairs"),
         count(lit(1)).as("k_clusters"))

@@ -136,10 +136,9 @@ object Dedup {
     */
   def nearDupPairs(spark: SparkSession, dir: String): DataFrame = {
     val (verified, sigs) = contentPairCandidates(spark, dir)
-    val accepted = CachedStages.track(verified
+    val accepted = CachedStages.data(verified
       .filter(col("n_common") * 3 >= size(col("sh_a")) + size(col("sh_b")))
-      .select("docs_a", "docs_b", "jaccard")
-      .persist())
+      .select("docs_a", "docs_b", "jaccard"))
     // identical-text docs pair at Jaccard 1 with no join; empty shingle
     // sets are excluded (doc-level LSH never pairs them)
     expandDocPairs(accepted,
@@ -169,7 +168,7 @@ object Dedup {
       .withColumn("shingles", expr("word_shingles(text, 3)"))
       .select(Seq(col("cid"), col("docs"), col("shingles")) ++
         (0 until 4).map(k => expr(minhashExpr(k)).as(s"mh$k")): _*)
-      .transform(s => CachedStages.track(s.persist()))
+      .transform(s => CachedStages.data(s))
 
     // (cid, band, h): one row per band; bucket key is (band, h).
     // NOT persisted: each self-join side re-runs the 4-element
@@ -252,7 +251,7 @@ object Dedup {
     // final report) — unpersisted, the corpus SCAN + explode ran twice
     // from files (round-18 DupExec sweep, 9-node from-files subtree
     // x2); 4 rows cached
-    val perF = CachedStages.track(quartered.groupBy(col("f"), col("h"))
+    val perF = CachedStages.model(quartered.groupBy(col("f"), col("h"))
       .agg(count(lit(1)).as("cnt"))
       .groupBy("f")
       .agg(sum(col("cnt")).as("n_docs"),
@@ -260,8 +259,7 @@ object Dedup {
         sum(when(col("cnt") > 1, 1L).otherwise(0L)).as("n_dup_groups"),
         sum(when(col("cnt") > 1, col("cnt") - 1).otherwise(0L))
           .as("n_redundant"))
-      .withColumn("dup_ppm", expr("n_redundant * 1000000 div n_docs"))
-      .coalesce(1).persist())
+      .withColumn("dup_ppm", expr("n_redundant * 1000000 div n_docs")))
     val full = broadcast(perF.filter(col("f") === 4L)
       .select(col("dup_ppm").as("full_dup_ppm")))
     perF.crossJoin(full)
@@ -298,7 +296,13 @@ object Dedup {
     def mhs(side: String) = sigs.select(
       col("cid").as(side) +: (0 until 4).map(k =>
         col(s"mh$k").as(s"${side}_mh$k")): _*)
-    val scored = verified
+    // cached: traversed twice (global MAE/bias + per-band rollup) —
+    // uncached, both signature joins executed twice (round-18 DupExec
+    // sweep, 25-node subtree x2). SLIMMED to the four report columns
+    // first: the un-projected frame drags both shingle arrays and both
+    // doc lists into the cache (measured 0.8 -> 2.9s on the focused A/B
+    // before the projection).
+    val scored = CachedStages.data(verified
       .join(mhs("ca"), Seq("ca"))
       .join(mhs("cb"), Seq("cb"))
       .withColumn("matches", expr((0 until 4).map(k =>
@@ -308,15 +312,7 @@ object Dedup {
         """CAST(n_common AS BIGINT) * 1000000
           | div (size(sh_a) + size(sh_b) - n_common)""".stripMargin))
       .withColumn("err_ppm", expr("est_ppm - exact_ppm"))
-      // persisted: traversed twice (global MAE/bias + per-band rollup)
-      // — unpersisted, both signature joins executed twice (round-18
-      // DupExec sweep, 25-node subtree x2). SLIMMED to the four report
-      // columns first: the un-projected frame drags both shingle
-      // arrays and both doc lists into the cache (measured 0.8 -> 2.9s
-      // on the focused A/B before the projection).
-      .select("matches", "est_ppm", "exact_ppm", "err_ppm")
-      .persist()
-    CachedStages.track(scored)
+      .select("matches", "est_ppm", "exact_ppm", "err_ppm"))
     val glob = broadcast(scored.agg(
       expr("sum(abs(err_ppm)) div count(1)").as("mae_ppm"),
       expr("sum(err_ppm) div count(1)").as("bias_ppm")))
@@ -552,7 +548,7 @@ object Dedup {
     val vals = withSimhash(corpus, bits)
       .groupBy("simhash")
       .agg(expr("sort_array(collect_list(doc_id))").as("docs"))
-      .transform(s => CachedStages.track(s.persist()))
+      .transform(s => CachedStages.data(s))
     val bands = vals.select(col("simhash"), posexplode(
       expr(s"""transform(sequence(0, ${nBands - 1}), b ->
               |  shiftrightunsigned(simhash, b * $bandWidth) & $bandMask)"""
@@ -699,15 +695,13 @@ object Dedup {
     def grams(df: DataFrame, idCol: String): DataFrame = df
       .select(col(idCol),
         explode(expr(s"word_shingles(text, $n)")).as("gram"))
-    // persisted: the benchmark gram stream feeds TWO consumers — the
+    // cached: the benchmark gram stream feeds TWO consumers — the
     // sketch-collect action and the exact broadcast join — and would
     // otherwise re-scan and re-shingle the benchmark per consumer.
-    // NOT coalesced (ADVICE r20): the gram stream is DATA-sized (an
-    // explode over the benchmark slice of the corpus), so a coalesce(1)
-    // here fuses the scan + shingling into one task — the narrow-
-    // upstream trap the round-20 sweep documented. Neither consumer
-    // needs a 1-partition cache.
-    val bg = CachedStages.track(grams(bench, "bench_id").persist())
+    // DATA-sized (an explode over the benchmark slice of the corpus): a
+    // `model` cache here would fuse the scan + shingling into one task,
+    // the narrow-upstream trap (ADVICE r20).
+    val bg = CachedStages.data(grams(bench, "bench_id"))
     // `might_contain` requires its sketch operand to be a CONSTANT (or
     // scalar subquery) — the same contract Spark's own runtime join
     // filters satisfy by materializing the aggregate on the driver and
@@ -888,7 +882,7 @@ object Dedup {
       // gram rows for them, so they can never become candidates — only
       // `intra` below must exclude them explicitly.
       .select("cid", "docs", "grams", "sz")
-      .transform(s => CachedStages.track(s.persist()))
+      .transform(s => CachedStages.data(s))
 
     val gramRows = contents.select(col("cid"), col("sz"),
       explode(col("grams")).as("gram"))
@@ -901,11 +895,10 @@ object Dedup {
     // executed once PER SIDE (round-18 DupExec sweep: 18-node subtree
     // x2; ReuseExchange misses across the self-join dealiasing, the
     // q120 class). Prefix rows are ~20% of gram rows by design.
-    val ranked = CachedStages.track(gramRows.join(freq, "gram")
+    val ranked = CachedStages.data(gramRows.join(freq, "gram")
       .withColumn("rn", row_number().over(
         Window.partitionBy("cid").orderBy(col("df"), col("gram"))))
-      .filter(col("rn") <= prefixLen)
-      .persist())
+      .filter(col("rn") <= prefixLen))
 
     val left = ranked.select(col("cid").as("ca"), col("sz").as("sza"),
       col("rn").as("pa"), col("gram"))
@@ -1011,7 +1004,10 @@ object Dedup {
   /** Core of `blockDedup` over any `(doc_id, text)` corpus. */
   def blockDedupOf(df: DataFrame, blockSize: Int): DataFrame = {
     require(blockSize >= 1, s"blockSize must be >= 1, got $blockSize")
-    val blocks = df
+    // cached: traversed twice (first-occurrence rollup + join-back) —
+    // uncached, the tokenize + block explode ran twice (round-18
+    // DupExec sweep, 11-node subtree x2)
+    val blocks = CachedStages.data(df
       .filter(col("doc_id").isNotNull)
       .withColumn("toks", expr(TextOps.tokensExpr))
       .filter(size(col("toks")) > 0)
@@ -1020,12 +1016,7 @@ object Dedup {
              sequence(0, cast(ceil(size(toks) / ${blockSize}.0) as int) - 1),
              j -> array_join(slice(toks, j * $blockSize + 1, $blockSize), ' '))"""
         )).as(Seq("pos", "blk")))
-      .withColumn("h", md5(col("blk")))
-      // persisted: traversed twice (first-occurrence rollup +
-      // join-back) — unpersisted, the tokenize + block explode ran
-      // twice (round-18 DupExec sweep, 11-node subtree x2)
-      .persist()
-    CachedStages.track(blocks)
+      .withColumn("h", md5(col("blk"))))
     val first = blocks.groupBy("h")
       .agg(min(struct(col("doc_id"), col("pos"))).as("first_occ"))
     blocks.join(first, "h")
@@ -1081,12 +1072,11 @@ object Dedup {
     graft.functions.WordShingles.register(train.sparkSession)
     // NULL text surgically cleans to the empty string, not NULL — the
     // coalesce keeps both engines' empty-document behavior identical
-    val toks = CachedStages.track(train
+    val toks = CachedStages.data(train
       .filter(col("doc_id").isNotNull)
       .withColumn("toks", expr(
         s"coalesce(${TextOps.tokensExpr}, cast(array() as array<string>))"))
-      .select("doc_id", "toks")
-      .persist())
+      .select("doc_id", "toks"))
     // positional grams (1-based start); a doc shorter than n has none
     val tg = toks.filter(size(col("toks")) >= n)
       .select(col("doc_id"), posexplode(expr(
@@ -1202,7 +1192,7 @@ object Dedup {
     // persisted: traversed twice (shared-hash rollup + join-back) —
     // unpersisted, the rolling-hash chunking ran twice (round-18
     // DupExec sweep, 18-node subtree x2)
-    val chunks = CachedStages.track(cdcChunksOf(df, window, mask).persist())
+    val chunks = CachedStages.data(cdcChunksOf(df, window, mask))
     val shared = chunks.groupBy("chunk_hash")
       .agg(countDistinct(col("doc_id")).as("n_docs"))
     chunks.join(shared, "chunk_hash")
@@ -1286,9 +1276,9 @@ object Dedup {
     // both signature tables are read twice (band join + Jaccard verify)
     // — persisted so each side shingles ONCE (the q19 discipline; in
     // production the old side is the stored index and never recomputes)
-    val oldSigs = CachedStages.track(sigsOf(old, "doc_id").persist())
-    val newSigs = CachedStages.track(sigsOf(
-      nw.join(exact, Seq("new_id"), "left_anti"), "new_id").persist())
+    val oldSigs = CachedStages.data(sigsOf(old, "doc_id"))
+    val newSigs = CachedStages.data(sigsOf(
+      nw.join(exact, Seq("new_id"), "left_anti"), "new_id"))
     val cand = bandsOf(newSigs, "new_id")
       .join(bandsOf(oldSigs, "doc_id")
         .withColumnRenamed("doc_id", "old_id"), Seq("band", "h"))
@@ -1332,8 +1322,8 @@ object Dedup {
     * set plus three 1-row aggregates.
     */
   def nearDupEval(spark: SparkSession, dir: String): DataFrame =
-    nearDupEvalOf(spark, dir, CachedStages.track(nearDupPairs(spark, dir)
-      .select("doc_a", "doc_b").persist()))
+    nearDupEvalOf(spark, dir, CachedStages.data(nearDupPairs(spark, dir)
+      .select("doc_a", "doc_b")))
 
   /** q140 parameterized on an already-materialized detected-pair set,
     * so the composed q167 suite can feed one shared pair table to this
@@ -1453,9 +1443,9 @@ object Dedup {
     * the two small persisted frames.
     */
   def dedupReportSuite(spark: SparkSession, dir: String): DataFrame = {
-    val det = CachedStages.track(nearDupPairs(spark, dir)
-      .select("doc_a", "doc_b").persist())
-    val canon = CachedStages.track(connectedComponents(det).persist())
+    val det = CachedStages.data(nearDupPairs(spark, dir)
+      .select("doc_a", "doc_b"))
+    val canon = CachedStages.data(connectedComponents(det))
     val savings = dedupSavingsOf(spark, dir, canon)
       .select(lit("savings").as("report"), col("source").as("k"), expr(
         """stack(5, 'n_docs', n_docs, 'n_tokens', n_tokens,

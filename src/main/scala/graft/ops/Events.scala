@@ -582,15 +582,14 @@ object Events {
   def sessionTransitionsOf(evs: DataFrame): DataFrame = {
     val w = Window.partitionBy("user_id")
       .orderBy(col("ts_us").asc, col("event_id").asc)
-    val trans = CachedStages.track(evs
+    val trans = CachedStages.model(evs
       .withColumn("prev_type", lag(col("event_type"), 1).over(w))
       .withColumn("prev_sec", lag(col("ts_sec"), 1).over(w))
       .filter(col("prev_sec").isNotNull &&
         col("ts_sec") - col("prev_sec") <= 1800)
       .select(col("prev_type"), col("event_type").as("next_type"))
       .groupBy("prev_type", "next_type")
-      .agg(count(lit(1)).as("n_trans"))
-      .coalesce(1).persist())
+      .agg(count(lit(1)).as("n_trans")))
     val totals = trans.groupBy("prev_type")
       .agg(sum(col("n_trans")).as("n_from"))
     trans.join(broadcast(totals), Seq("prev_type"))
@@ -631,7 +630,7 @@ object Events {
       .orderBy(col("ts_us").asc, col("event_id").asc)
     val bounds = evs.agg(min(col("ts_us")).as("mn"), max(col("ts_us")).as("mx"))
       .select(expr("mn + (mx - mn) * 8 div 10").as("cutoff"))
-    val trans = CachedStages.track(evs
+    val trans = CachedStages.model(evs
       .withColumn("prev_type", lag(col("event_type"), 1).over(w))
       .withColumn("prev_sec", lag(col("ts_sec"), 1).over(w))
       .filter(col("prev_sec").isNotNull &&
@@ -639,8 +638,7 @@ object Events {
       .crossJoin(broadcast(bounds))
       .groupBy(col("prev_type"), col("event_type").as("next_type"),
         (col("ts_us") > col("cutoff")).as("is_test"))
-      .agg(count(lit(1)).as("n"))
-      .coalesce(1).persist())
+      .agg(count(lit(1)).as("n")))
     // train-side argmax: the rank window runs over the model-sized
     // matrix (|types|² rows), never the event stream
     val model = trans.filter(!col("is_test"))
@@ -682,10 +680,9 @@ object Events {
     * `(event_type, ts_sec)`.
     */
   def volumeBurstsOf(evs: DataFrame): DataFrame = {
-    val daily = CachedStages.track(evs
+    val daily = CachedStages.model(evs
       .groupBy(col("event_type"), expr("ts_sec div 86400").as("day"))
-      .agg(count(lit(1)).as("n"))
-      .coalesce(1).persist())
+      .agg(count(lit(1)).as("n")))
     val w = Window.partitionBy("event_type")
     val med = daily
       .withColumn("rn", row_number().over(
@@ -731,11 +728,10 @@ object Events {
     val touches = evs.filter(col("event_type").isin("view", "click"))
       .select(col("user_id"), col("event_type").as("touch_type"),
         col("event_id").as("t_id"), col("ts_us").as("t_ts"))
-    val pairs = CachedStages.track(purchases.join(touches, Seq("user_id"))
+    val pairs = CachedStages.data(purchases.join(touches, Seq("user_id"))
       .filter(col("t_ts") < col("p_ts") &&
         col("t_ts") >= col("p_ts") - lit(windowSec * 1000000L))
-      .select("p_id", "touch_type", "t_id", "t_ts")
-      .persist())
+      .select("p_id", "touch_type", "t_id", "t_ts"))
     val perPurchase = pairs.groupBy("p_id")
       .agg(count(lit(1)).as("n_touches"),
         max(struct(col("t_ts"), col("t_id"), col("touch_type"))).as("last"))
@@ -790,8 +786,8 @@ object Events {
       .filter(col("ts_us") >= col("v_ts"))
       .groupBy("user_id", "v_ts").agg(min(col("ts_us")).as("p_ts"))
       .withColumn("delay_min", expr("(p_ts - v_ts) div 60000000"))
-    val hist = CachedStages.track(delays.groupBy("delay_min")
-      .agg(count(lit(1)).as("n")).coalesce(1).persist())
+    val hist = CachedStages.model(delays.groupBy("delay_min")
+      .agg(count(lit(1)).as("n")))
     val w = Window.orderBy(col("delay_min").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val cum = hist.withColumn("cum", sum(col("n")).over(w))
@@ -883,14 +879,13 @@ object Events {
       .groupBy("user_id").agg(count(lit(1)).as("np"))
       .filter(col("np") >= heavyMin)
       .select("user_id").withColumn("converted", lit(1L))
-    val counts = CachedStages.track(users
+    val counts = CachedStages.model(users
       .join(conv, Seq("user_id"), "left")
       .na.fill(0L, Seq("converted"))
       .groupBy("arm")
       .agg(count(lit(1)).as("n_users"),
         sum(col("converted")).as("n_converted"))
-      .withColumn("conv_ppm", expr("n_converted * 1000000 div n_users"))
-      .coalesce(1).persist())
+      .withColumn("conv_ppm", expr("n_converted * 1000000 div n_users")))
     val a = counts.filter(col("arm") === "a")
       .select(col("n_users").as("n_a"), col("n_converted").as("conv_a"),
         col("conv_ppm").as("p_a_ppm"))
@@ -954,7 +949,7 @@ object Events {
     val bounds = evs.agg(min(col("ts_us")).as("mn"), max(col("ts_us")).as("mx"))
       .select(expr("mn + (mx - mn) * 8 div 10").as("cutoff"))
     val cents = "CAST(CAST(value AS DECIMAL(12, 2)) * 100 AS BIGINT)"
-    val perUser = CachedStages.track(evs
+    val perUser = CachedStages.data(evs
       .crossJoin(broadcast(bounds))
       .groupBy("user_id")
       .agg(
@@ -963,8 +958,7 @@ object Events {
         coalesce(sum(when(col("event_type") === "purchase" &&
           col("ts_us") > col("cutoff"), expr(cents))), lit(0L)).as("y"))
       .withColumn("arm", expr(
-        s"CASE WHEN ${Sampling.bucketExpr("user_id")} < 50 THEN 'a' ELSE 'b' END"))
-      .persist())
+        s"CASE WHEN ${Sampling.bucketExpr("user_id")} < 50 THEN 'a' ELSE 'b' END")))
     val pooled = perUser.agg(
       count(lit(1)).as("n"),
       sum(col("x")).as("sx"), sum(col("y")).as("sy"),
@@ -1060,14 +1054,14 @@ object Events {
     // persisted: each forecast method's rollup traverses it —
     // unpersisted, the three lag/moving-average windows ran once per
     // method (round-18 DupExec sweep)
-    val scored = CachedStages.track(dense
+    val scored = CachedStages.model(dense
       .withColumn("naive", lag(col("cents"), 1).over(w))
       .withColumn("snaive7", lag(col("cents"), 7).over(w))
       .withColumn("ma7sum", sum(col("cents")).over(w7))
       .withColumn("ma7", expr("ma7sum div 7"))
-      .filter(col("day") > col("cutoff") && col("day") - 7 >= col("mn"))
-      .coalesce(1).persist())
-    val perMethod = Seq("naive", "snaive7", "ma7").map { m =>
+      .filter(col("day") > col("cutoff") && col("day") - 7 >= col("mn")))
+    // cached: traversed twice (naive baseline + final join)
+    val perMethod = CachedStages.model(Seq("naive", "snaive7", "ma7").map { m =>
       scored.groupBy("event_type")
         .agg(count(lit(1)).as("n_forecasts"),
           sum(expr(s"abs(cents - $m)")).as("sae"),
@@ -1078,10 +1072,7 @@ object Events {
           expr("CASE WHEN se >= 0 THEN se div n_forecasts " +
             "ELSE -((-se) div n_forecasts) END").as("bias_cents"),
           col("sae"))
-    }.reduce(_ unionByName _)
-      // persisted: traversed twice (naive baseline + final join)
-      .coalesce(1).persist()
-    CachedStages.track(perMethod)
+    }.reduce(_ unionByName _))
     val naiveSae = perMethod.filter(col("method") === "naive")
       .select(col("event_type"), col("sae").as("naive_sae"))
     perMethod.join(broadcast(naiveSae), Seq("event_type"))
@@ -1121,11 +1112,10 @@ object Events {
   def controlChartOfDaily(daily: DataFrame): DataFrame = {
     val bounds = daily.agg(min(col("day")).as("mn"), max(col("day")).as("mx"))
     val calendar = bounds.select(explode(expr("sequence(mn, mx)")).as("day"))
-    val dense = CachedStages.track(daily.select("event_type").distinct()
+    val dense = CachedStages.model(daily.select("event_type").distinct()
       .crossJoin(broadcast(calendar))
       .join(daily, Seq("event_type", "day"), "left")
-      .na.fill(0L, Seq("cents"))
-      .coalesce(1).persist())
+      .na.fill(0L, Seq("cents")))
     val stats = dense.groupBy("event_type")
       .agg(count(lit(1)).as("n"), sum(col("cents")).as("s1"),
         sum(expr("CAST(cents AS DECIMAL(38, 0)) * cents")).as("s2"))
@@ -1190,11 +1180,10 @@ object Events {
   def cusumChartOfDaily(daily: DataFrame): DataFrame = {
     val bounds = daily.agg(min(col("day")).as("mn"), max(col("day")).as("mx"))
     val calendar = bounds.select(explode(expr("sequence(mn, mx)")).as("day"))
-    val dense = CachedStages.track(daily.select("event_type").distinct()
+    val dense = CachedStages.model(daily.select("event_type").distinct()
       .crossJoin(broadcast(calendar))
       .join(daily, Seq("event_type", "day"), "left")
-      .na.fill(0L, Seq("cents"))
-      .coalesce(1).persist())
+      .na.fill(0L, Seq("cents")))
     val params = dense.groupBy("event_type")
       .agg(count(lit(1)).as("n"), sum(col("cents")).as("s1"))
       .select(col("event_type"), expr("s1 div n").as("mu"),
@@ -1263,11 +1252,10 @@ object Events {
   def ewmaChartOfDaily(daily: DataFrame): DataFrame = {
     val bounds = daily.agg(min(col("day")).as("mn"), max(col("day")).as("mx"))
     val calendar = bounds.select(explode(expr("sequence(mn, mx)")).as("day"))
-    val dense = CachedStages.track(daily.select("event_type").distinct()
+    val dense = CachedStages.model(daily.select("event_type").distinct()
       .crossJoin(broadcast(calendar))
       .join(daily, Seq("event_type", "day"), "left")
-      .na.fill(0L, Seq("cents"))
-      .coalesce(1).persist())
+      .na.fill(0L, Seq("cents")))
     val params = dense.groupBy("event_type")
       .agg(count(lit(1)).as("n"), sum(col("cents")).as("s1"),
         sum(expr("CAST(cents AS DECIMAL(38, 0)) * cents")).as("s2"))
@@ -1335,11 +1323,10 @@ object Events {
   def holtChartOfDaily(daily: DataFrame): DataFrame = {
     val bounds = daily.agg(min(col("day")).as("mn"), max(col("day")).as("mx"))
     val calendar = bounds.select(explode(expr("sequence(mn, mx)")).as("day"))
-    val dense = CachedStages.track(daily.select("event_type").distinct()
+    val dense = CachedStages.model(daily.select("event_type").distinct()
       .crossJoin(broadcast(calendar))
       .join(daily, Seq("event_type", "day"), "left")
-      .na.fill(0L, Seq("cents"))
-      .coalesce(1).persist())
+      .na.fill(0L, Seq("cents")))
     val series = dense.groupBy("event_type")
       .agg(expr("sort_array(collect_list(struct(day, cents)))").as("ss"))
     // l_t interpolated twice: the lambda cannot bind an intermediate
@@ -1402,19 +1389,17 @@ object Events {
   def acfOfDaily(daily: DataFrame, maxLag: Int = 7): DataFrame = {
     val bounds = daily.agg(min(col("day")).as("mn"), max(col("day")).as("mx"))
     val calendar = bounds.select(explode(expr("sequence(mn, mx)")).as("day"))
-    val dense = CachedStages.track(daily.select("event_type").distinct()
+    val dense = CachedStages.model(daily.select("event_type").distinct()
       .crossJoin(broadcast(calendar))
       .join(daily, Seq("event_type", "day"), "left")
-      .na.fill(0L, Seq("cents"))
-      .coalesce(1).persist())
+      .na.fill(0L, Seq("cents")))
     val stats = dense.groupBy("event_type")
       .agg(count(lit(1)).as("n"), sum(col("cents")).as("s1"))
       .select(col("event_type"), col("n"),
         expr("s1 * 1000 div n").as("m_milli"))
-    val dx = CachedStages.track(dense
+    val dx = CachedStages.model(dense
       .join(broadcast(stats), Seq("event_type"))
-      .withColumn("dx", expr("cents * 1000 - m_milli"))
-      .coalesce(1).persist())
+      .withColumn("dx", expr("cents * 1000 - m_milli")))
     val den = dx.groupBy("event_type")
       .agg(sum(expr("CAST(dx AS DECIMAL(38, 0)) * dx")).as("den"),
         max(col("n")).as("n"))
@@ -1428,7 +1413,7 @@ object Events {
         .map(k => s"CAST($k AS BIGINT), dx$k").mkString(", ")})"
         + " AS (lag, dxl)"))
       .filter(col("dxl").isNotNull)
-    val rs = CachedStages.track(melted.groupBy("event_type", "lag")
+    val rs = CachedStages.model(melted.groupBy("event_type", "lag")
       .agg(sum(expr("CAST(dx AS DECIMAL(38, 0)) * dxl")).as("num"))
       .join(broadcast(den), Seq("event_type"))
       .withColumn("r_ppm", expr(
@@ -1438,8 +1423,7 @@ object Events {
           |     WHEN CAST(r_ppm AS DECIMAL(38, 0)) * r_ppm * n
           |       > CAST(4000000000000 AS DECIMAL(38, 0))
           |       THEN CAST(1 AS BIGINT)
-          |     ELSE CAST(0 AS BIGINT) END""".stripMargin))
-      .coalesce(1).persist())
+          |     ELSE CAST(0 AS BIGINT) END""".stripMargin)))
     val lb = rs
       .withColumn("s_k", expr(
         """CAST(r_ppm AS DECIMAL(38, 0)) * r_ppm
@@ -1499,18 +1483,16 @@ object Events {
   def hampelOfDaily(daily: DataFrame): DataFrame = {
     val bounds = daily.agg(min(col("day")).as("mn"), max(col("day")).as("mx"))
     val calendar = bounds.select(explode(expr("sequence(mn, mx)")).as("day"))
-    val dense = CachedStages.track(daily.select("event_type").distinct()
+    val dense = CachedStages.model(daily.select("event_type").distinct()
       .crossJoin(broadcast(calendar))
       .join(daily, Seq("event_type", "day"), "left")
-      .na.fill(0L, Seq("cents"))
-      .coalesce(1).persist())
+      .na.fill(0L, Seq("cents")))
     def pick(src: DataFrame, valCol: String, outName: String) = {
       // persisted: traversed twice (per-type totals + cumulative join)
       // — caught by the round-18 DupExec sweep; value-domain bounded
-      val h = CachedStages.track(src
+      val h = CachedStages.model(src
         .groupBy(col("event_type"), col(valCol))
-        .agg(count(lit(1)).as("cnt"))
-        .coalesce(1).persist())
+        .agg(count(lit(1)).as("cnt")))
       val t = h.groupBy("event_type").agg(sum(col("cnt")).as("n_days"))
       val wc = Window.partitionBy("event_type")
         .orderBy(col(valCol).asc)
@@ -1522,10 +1504,9 @@ object Events {
           .as(outName))
     }
     val med = pick(dense, "cents", "med_cents")
-    val dev = CachedStages.track(dense
+    val dev = CachedStages.model(dense
       .join(broadcast(med), Seq("event_type"))
-      .withColumn("adev", abs(col("cents") - col("med_cents")))
-      .coalesce(1).persist())
+      .withColumn("adev", abs(col("cents") - col("med_cents"))))
     val mad = pick(dev, "adev", "mad_cents")
     dev.join(broadcast(mad), Seq("event_type"))
       .withColumn("outlier", expr(
@@ -1573,9 +1554,8 @@ object Events {
     // min), so the stream is scanned exactly once — the round-13 fix
     // for a second bounds scan that an unrelated suite's leftover
     // cache had been masking
-    val per = CachedStages.track(evs.groupBy("user_id")
-      .agg(min(col("ts_sec")).as("t0"), max(col("ts_sec")).as("t1"))
-      .persist())
+    val per = CachedStages.data(evs.groupBy("user_id")
+      .agg(min(col("ts_sec")).as("t0"), max(col("ts_sec")).as("t1")))
     val bounds = per.agg(min(col("t0")).as("mn"),
       max(col("t1")).as("mx"))
     per.crossJoin(broadcast(bounds))
@@ -1665,13 +1645,13 @@ object Events {
     */
   private[graft] def chi2Of(obsIn: DataFrame, k1: String, k2: String,
       verdict: String): DataFrame = {
-    val obs = CachedStages.track(obsIn.coalesce(1).persist())
+    val obs = CachedStages.model(obsIn)
     val rowM = obs.groupBy(k1).agg(sum(col("observed")).as("r"))
     val colM = obs.groupBy(k2).agg(sum(col("observed")).as("c"))
     val tot = obs.agg(sum(col("observed")).as("n"),
       countDistinct(col(k1)).as("nr"),
       countDistinct(col(k2)).as("nc"))
-    val cells = CachedStages.track(rowM.crossJoin(broadcast(colM))
+    val cells = CachedStages.model(rowM.crossJoin(broadcast(colM))
       .join(obs, Seq(k1, k2), "left")
       .na.fill(0L, Seq("observed"))
       .crossJoin(broadcast(tot))
@@ -1682,8 +1662,7 @@ object Events {
           |   - expected_micro)
           | * (CAST(observed AS DECIMAL(38, 0)) * 1000000
           |   - expected_micro)
-          | div nullif(expected_micro, 0) AS BIGINT)""".stripMargin))
-      .coalesce(1).persist())
+          | div nullif(expected_micro, 0) AS BIGINT)""".stripMargin)))
     val summary = cells.agg(sum(col("contrib_micro")).as("chi2_micro"),
         max(expr("(nr - 1) * (nc - 1)")).as("df"))
       .withColumn("crit_micro", expr(
@@ -1720,12 +1699,11 @@ object Events {
     * model-sized frames.
     */
   def valueDriftChi2Of(evs: DataFrame): DataFrame = {
-    val p = CachedStages.track(evs
+    val p = CachedStages.data(evs
       .filter(col("event_type") === "purchase")
       .select(expr("ts_sec div 86400").as("day"),
         expr("CAST(CAST(value AS DECIMAL(12, 2)) * 100 AS BIGINT) " +
-          "div 1000").as("band"))
-      .persist())
+          "div 1000").as("band")))
     val mid = p.agg(expr("(min(day) + max(day) + 1) div 2").as("mid"))
     val obs = p.crossJoin(broadcast(mid))
       .select(expr("IF(day < mid, 'h1', 'h2')").as("half"), col("band"))
@@ -1805,19 +1783,17 @@ object Events {
     * bounds; the peak resolution is a |types|-row broadcast join.
     */
   def domProfileOf(evs: DataFrame): DataFrame = {
-    val daily = CachedStages.track(evs
+    val daily = CachedStages.model(evs
       .groupBy(col("event_type"), expr("ts_sec div 86400").as("day"))
       .agg(sum(expr(
         "CAST(CAST(value AS DECIMAL(12, 2)) * 100 AS BIGINT)"))
-        .as("cents"))
-      .coalesce(1).persist())
+        .as("cents")))
     val bounds = daily.agg(min(col("day")).as("mn"), max(col("day")).as("mx"))
-    val calendar = CachedStages.track(bounds
+    val calendar = CachedStages.model(bounds
       .select(explode(expr("sequence(mn, mx)")).as("day"))
       .withColumn("dom", expr(
         "CAST(dayofmonth(date_add(DATE '1970-01-01', " +
-          "CAST(day AS INT))) AS BIGINT)"))
-      .coalesce(1).persist())
+          "CAST(day AS INT))) AS BIGINT)")))
     val occ = calendar.groupBy("dom").agg(count(lit(1)).as("occ"))
     val typeTot = daily.groupBy("event_type")
       .agg(sum(col("cents")).as("tot_cents"))
@@ -1829,13 +1805,12 @@ object Events {
     // persisted: traversed twice (peak rollup + final join) — the
     // round-18 DupExec sweep caught the unpersisted chain executing
     // its join+aggregate subtree twice (30-node subtree x2)
-    val idx = CachedStages.track(byDom.join(broadcast(occ), Seq("dom"))
+    val idx = CachedStages.model(byDom.join(broadcast(occ), Seq("dom"))
       .join(broadcast(typeTot), Seq("event_type"))
       .withColumn("idx_ppm", expr(
         """CAST(CAST(cents AS DECIMAL(38, 0)) * total_days * 1000000
           | div (CAST(occ AS DECIMAL(38, 0))
-          |      * nullif(tot_cents, 0)) AS BIGINT)""".stripMargin))
-      .coalesce(1).persist())
+          |      * nullif(tot_cents, 0)) AS BIGINT)""".stripMargin)))
     val peak = idx.groupBy("event_type")
       .agg(max(expr("idx_ppm * 100 - dom")).as("pk"))
     idx.join(broadcast(peak), Seq("event_type"))
@@ -1863,10 +1838,9 @@ object Events {
     * |days| rows.
     */
   def newVsReturningOf(evs: DataFrame): DataFrame = {
-    val ud = CachedStages.track(evs
+    val ud = CachedStages.data(evs
       .select(col("user_id"), expr("ts_sec div 86400").as("day"))
-      .distinct()
-      .persist())
+      .distinct())
     val firstSeen = ud.groupBy("user_id").agg(min(col("day")).as("f"))
     ud.join(firstSeen, Seq("user_id"))
       .groupBy("day")
@@ -1902,13 +1876,12 @@ object Events {
     * broadcasts of the same persisted distinct set.
     */
   def typeCooccurrenceOf(evs: DataFrame): DataFrame = {
-    val bt = CachedStages.track(
-      evs.select("user_id", "day", "event_type").distinct()
-        .persist())
+    val bt = CachedStages.data(
+      evs.select("user_id", "day", "event_type").distinct())
     val nTot = bt.select("user_id", "day").distinct()
       .agg(count(lit(1)).as("n_baskets"))
-    val marg = CachedStages.track(bt.groupBy("event_type")
-      .agg(count(lit(1)).as("m")).coalesce(1).persist())
+    val marg = CachedStages.model(bt.groupBy("event_type")
+      .agg(count(lit(1)).as("m")))
     bt.as("a").join(bt.as("b"),
         col("a.user_id") === col("b.user_id") &&
           col("a.day") === col("b.day") &&
@@ -1954,10 +1927,9 @@ object Events {
     * |types|-row broadcast of the same persisted count table.
     */
   def userDispersionOf(evs: DataFrame): DataFrame = {
-    val per = CachedStages.track(evs
+    val per = CachedStages.data(evs
       .groupBy("event_type", "user_id")
-      .agg(count(lit(1)).as("c"))
-      .persist())
+      .agg(count(lit(1)).as("c")))
     val top = per
       .withColumn("pick", row_number().over(Window
         .partitionBy("event_type")
@@ -2004,10 +1976,9 @@ object Events {
     * cheapest profile in the engine beside q222.
     */
   def loadProfileOf(evs: DataFrame): DataFrame = {
-    val byHour = CachedStages.track(evs
+    val byHour = CachedStages.model(evs
       .groupBy("event_type", "hour")
-      .agg(count(lit(1)).as("n"))
-      .coalesce(1).persist())
+      .agg(count(lit(1)).as("n")))
     val peaks = byHour
       .withColumn("pick", row_number().over(Window
         .partitionBy("event_type")
@@ -2060,7 +2031,7 @@ object Events {
   def seasonalStrengthOfDaily(dailyIn: DataFrame): DataFrame = {
     // the matrix feeds the bounds, the type list and the join —
     // persisted so the stream collapses exactly once
-    val daily = CachedStages.track(dailyIn.coalesce(1).persist())
+    val daily = CachedStages.model(dailyIn)
     val bounds = daily.agg(min(col("day")).as("mn"),
       max(col("day")).as("mx"))
     val calendar = bounds.select(explode(expr("sequence(mn, mx)")).as("day"))
@@ -2115,21 +2086,19 @@ object Events {
       .join(daily, Seq("event_type", "day"), "left")
       .na.fill(0L, Seq("cents"))
       .withColumn("dow", expr("(day + 3) % 7"))
-    val byDow = CachedStages.track(dense
+    val byDow = CachedStages.model(dense
       .groupBy("event_type", "dow")
-      .agg(count(lit(1)).as("n_days"), sum(col("cents")).as("cents"))
-      .coalesce(1).persist())
+      .agg(count(lit(1)).as("n_days"), sum(col("cents")).as("cents")))
     val totals = byDow.groupBy("event_type")
       .agg(sum(col("n_days")).as("n_all"), sum(col("cents")).as("s_all"))
     // persisted: traversed twice (peaks rollup + final join) — caught
     // by the round-18 DupExec sweep as a duplicated join subtree
-    val indexed = CachedStages.track(byDow
+    val indexed = CachedStages.model(byDow
       .join(broadcast(totals), Seq("event_type"))
       .withColumn("index_ppm", expr(
         """CAST(CAST(cents AS DECIMAL(38, 0)) * n_all * 1000000
           | div nullif(CAST(n_days AS DECIMAL(38, 0)) * s_all, 0)
-          | AS BIGINT)""".stripMargin))
-      .coalesce(1).persist())
+          | AS BIGINT)""".stripMargin)))
     val peaks = indexed.groupBy("event_type")
       .agg(max(col("index_ppm")).as("peak_ppm"))
     indexed.join(broadcast(peaks), Seq("event_type"))
@@ -2176,7 +2145,7 @@ object Events {
     * (EventStreams.dailyRevenueStream) feeds the IDENTICAL arithmetic.
     */
   def theilSenTrendOfDaily(dailyIn: DataFrame): DataFrame = {
-    val daily = CachedStages.track(dailyIn.coalesce(1).persist())
+    val daily = CachedStages.model(dailyIn)
     // DELIBERATELY NOT spread like kendallTauOfDaily/mannKendallOfDaily
     // (round 21, attempted and reverted twice): their pair kernels
     // collapse map-side to |types| rows, so the round-robin spread is
@@ -2193,9 +2162,8 @@ object Events {
       .select(col("a.event_type").as("event_type"),
         expr("(b.cents - a.cents) * 1000000 div (b.day - a.day)")
           .as("slope_micro"))
-    val hist = CachedStages.track(pairs
-      .groupBy("event_type", "slope_micro").agg(count(lit(1)).as("cnt"))
-      .coalesce(1).persist())
+    val hist = CachedStages.model(pairs
+      .groupBy("event_type", "slope_micro").agg(count(lit(1)).as("cnt")))
     val totals = hist.groupBy("event_type")
       .agg(sum(col("cnt")).as("n_pairs"))
     val wc = Window.partitionBy("event_type")
@@ -2252,7 +2220,7 @@ object Events {
     * broadcast-sized.
     */
   def mannKendallOfDaily(dailyIn: DataFrame): DataFrame = {
-    val daily = CachedStages.track(dailyIn.coalesce(1).persist())
+    val daily = CachedStages.model(dailyIn)
     // spread before the |days|² sign kernel (ADVICE r20): see
     // RankTests.kendallTauOfDaily — same fix
     val spread = daily.repartition(
@@ -2343,10 +2311,9 @@ object Events {
       .join(broadcast(prefix), Seq("arm", "chunk"))
       .withColumn("late_sec", expr(
         "(greatest(rmax_in, coalesce(pmax, rmax_in)) - ts_us) div 1000000"))
-    val hist = CachedStages.track(late
+    val hist = CachedStages.model(late
       .groupBy("arm", "event_type", "late_sec")
-      .agg(count(lit(1)).as("cnt"))
-      .coalesce(1).persist())
+      .agg(count(lit(1)).as("cnt")))
     val wc = Window.partitionBy("arm", "event_type")
       .orderBy(col("late_sec").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -2409,21 +2376,19 @@ object Events {
           col("purch_day") - col("first_day"))
           .otherwise(col("max_day") - col("first_day")).as("t"),
         col("purch_day").isNotNull.cast("long").as("e"))
-    val hist = CachedStages.track(subjects.groupBy("t")
+    val hist = CachedStages.model(subjects.groupBy("t")
       .agg(sum(col("e")).as("d"),
         sum(lit(1L) - col("e")).as("c"),
-        count(lit(1)).as("n_t"))
-      .coalesce(1).persist())
+        count(lit(1)).as("n_t")))
     val total = hist.agg(sum(col("n_t")).as("n_total"))
     // bounded-domain cumulative: strictly-before mass leaves the risk set
     val w = Window.orderBy(col("t").asc)
       .rowsBetween(Window.unboundedPreceding, -1)
     // persisted: traversed twice (the collected step table + the final
     // fold) — caught by the round-18 DupExec sweep (7-node subtree x2)
-    val risk = CachedStages.track(hist.crossJoin(broadcast(total))
+    val risk = CachedStages.model(hist.crossJoin(broadcast(total))
       .withColumn("n_at_risk",
-        col("n_total") - coalesce(sum(col("n_t")).over(w), lit(0L)))
-      .coalesce(1).persist())
+        col("n_total") - coalesce(sum(col("n_t")).over(w), lit(0L))))
     val steps = risk.agg(expr(
       "sort_array(collect_list(struct(t, n_at_risk, d)))").as("steps"))
     risk.crossJoin(broadcast(steps))
@@ -2460,10 +2425,9 @@ object Events {
     * carry-forward pick is max-over-steps-≤-d on that bounded grid.
     */
   def rmstOfKm(km: DataFrame, tau: Int): DataFrame = {
-    val steps = CachedStages.track(km
+    val steps = CachedStages.model(km
       .select(col("t"), col("km_ppm"), col("n_at_risk"),
-        col("n_events"))
-      .coalesce(1).persist())
+        col("n_events")))
     val nSubj = steps.agg(max(expr("n_at_risk")).as("n_subjects"))
     val median = steps.filter(col("km_ppm") <= 500000L)
       .agg(min(col("t")).as("median_t"))
@@ -2536,20 +2500,18 @@ object Events {
           |  THEN least(day_a, day_b) - first_day
           |  ELSE max_day - first_day END""".stripMargin).as("t"),
         col("ea"), col("eb"))
-    val hist = CachedStages.track(subjects.groupBy("t")
+    val hist = CachedStages.model(subjects.groupBy("t")
       .agg(sum(col("ea")).as("d_a"), sum(col("eb")).as("d_b"),
         sum(lit(1L) - col("ea") - col("eb")).as("c"),
-        count(lit(1)).as("n_t"))
-      .coalesce(1).persist())
+        count(lit(1)).as("n_t")))
     val total = hist.agg(sum(col("n_t")).as("n_total"))
     val w = Window.orderBy(col("t").asc)
       .rowsBetween(Window.unboundedPreceding, -1)
     // persisted: traversed twice (the collected step table + the final
     // fold) — caught by the round-18 DupExec sweep (7-node subtree x2)
-    val risk = CachedStages.track(hist.crossJoin(broadcast(total))
+    val risk = CachedStages.model(hist.crossJoin(broadcast(total))
       .withColumn("n_at_risk",
-        col("n_total") - coalesce(sum(col("n_t")).over(w), lit(0L)))
-      .coalesce(1).persist())
+        col("n_total") - coalesce(sum(col("n_t")).over(w), lit(0L))))
     val steps = risk.agg(expr(
       "sort_array(collect_list(struct(t, n_at_risk, d_a, d_b)))")
       .as("steps"))
@@ -2616,15 +2578,14 @@ object Events {
     * per-user collapse is calendar-bounded.
     */
   def logRankOf(subjects: DataFrame): DataFrame = {
-    val hist = CachedStages.track(subjects.groupBy("grp", "t")
-      .agg(sum(col("e")).as("d"), count(lit(1)).as("n_t"))
-      .coalesce(1).persist())
+    val hist = CachedStages.model(subjects.groupBy("grp", "t")
+      .agg(sum(col("e")).as("d"), count(lit(1)).as("n_t")))
     val spine = hist.select("t").distinct()
     // persisted: broadcast into the risk grid AND the final subject
     // totals — unpersisted, the per-group rollup ran twice (round-18
     // DupExec sweep); 2 rows
-    val totals = CachedStages.track(
-      hist.groupBy("grp").agg(sum(col("n_t")).as("tot")).coalesce(1).persist())
+    val totals = CachedStages.model(
+      hist.groupBy("grp").agg(sum(col("n_t")).as("tot")))
     val w = Window.partitionBy("grp").orderBy(col("t").asc)
       .rowsBetween(Window.unboundedPreceding, -1)
     val grid = spine.crossJoin(broadcast(totals))
@@ -2694,11 +2655,10 @@ object Events {
   def repeatPurchaseOf(evs: DataFrame): DataFrame = {
     val w = Window.partitionBy("user_id")
       .orderBy(col("ts_us").asc, col("event_id").asc)
-    val gaps = CachedStages.track(evs
+    val gaps = CachedStages.data(evs
       .filter(col("event_type") === "purchase")
       .select(col("user_id"), col("ts_us"), col("event_id"))
-      .withColumn("prev_us", lag(col("ts_us"), 1).over(w))
-      .persist())
+      .withColumn("prev_us", lag(col("ts_us"), 1).over(w)))
     val buyers = gaps.groupBy("user_id")
       .agg(count(lit(1)).as("n_purchases"))
       .agg(count(lit(1)).as("n_buyers"),
@@ -2706,10 +2666,9 @@ object Events {
           .as("n_repeat"))
     // persisted: traversed twice (cumulative window + gap total) —
     // caught by the round-18 DupExec sweep; gap-days bounded
-    val hist = CachedStages.track(gaps.filter(col("prev_us").isNotNull)
+    val hist = CachedStages.model(gaps.filter(col("prev_us").isNotNull)
       .select(expr("(ts_us - prev_us) div 86400000000").as("gap_days"))
-      .groupBy("gap_days").agg(count(lit(1)).as("cnt"))
-      .coalesce(1).persist())
+      .groupBy("gap_days").agg(count(lit(1)).as("cnt")))
     val wg = Window.orderBy(col("gap_days").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val q = hist
@@ -2749,15 +2708,13 @@ object Events {
     * distinct-shuffle keyed by day.
     */
   def activeUsersOf(evs: DataFrame): DataFrame = {
-    val ud = CachedStages.track(evs
+    val ud = CachedStages.data(evs
       .select(col("user_id"), expr("ts_sec div 86400").as("day"))
-      .distinct()
-      .persist())
+      .distinct())
     // persisted: broadcast by BOTH trailing windows — unpersisted, the
     // distinct-days pass over the activity cache ran once per window
     // (round-18 DupExec sweep, x3)
-    val days = CachedStages.track(
-      ud.select("day").distinct().coalesce(1).persist())
+    val days = CachedStages.model(ud.select("day").distinct())
     def windowed(span: Int, out: String): DataFrame =
       ud.select(col("user_id"),
           explode(expr(s"sequence(day, day + ${span - 1})")).as("day"))
@@ -2797,12 +2754,11 @@ object Events {
       alphaPerMille: Long = 709L): DataFrame = {
     val kMax = 41 - Integer.numberOfTrailingZeros(m)
     val numerator = alphaPerMille * m.toLong * m.toLong * (1L << kMax)
-    val daily = CachedStages.track(dailyUserRegisters(evs, m).coalesce(1).persist())
+    val daily = CachedStages.model(dailyUserRegisters(evs, m))
     // persisted: read by more than one downstream branch — unpersisted,
     // the distinct-days pass over the register cache ran once per
     // consumer (round-18 DupExec sweep)
-    val days = CachedStages.track(
-      daily.select("day").distinct().coalesce(1).persist())
+    val days = CachedStages.model(daily.select("day").distinct())
     val joined = days.crossJoin(
         broadcast(evs.sparkSession.range(m).select(col("id").as("idx"))))
       .join(daily, Seq("day", "idx"), "left")
@@ -2891,12 +2847,11 @@ object Events {
     val restBits = 40 - Integer.numberOfTrailingZeros(m)
     val kMax = restBits + 1
     val numerator = alphaPerMille * m.toLong * m.toLong * (1L << kMax)
-    val daily = CachedStages.track(dailyUserRegisters(evs, m).coalesce(1).persist())
+    val daily = CachedStages.model(dailyUserRegisters(evs, m))
     // persisted: read by more than one downstream branch — unpersisted,
     // the distinct-days pass over the register cache ran once per
     // consumer (round-18 DupExec sweep)
-    val days = CachedStages.track(
-      daily.select("day").distinct().coalesce(1).persist())
+    val days = CachedStages.model(daily.select("day").distinct())
     val grid = days.crossJoin(
       broadcast(evs.sparkSession.range(m).select(col("id").as("idx"))))
     val w = Window.partitionBy("idx").orderBy(col("day").asc)
@@ -2953,23 +2908,21 @@ object Events {
     * re-aggregated from it; the grid is |cohorts|·|offsets| rows.
     */
   def cohortLtvOf(evs: DataFrame): DataFrame = {
-    val userWeeks = CachedStages.track(evs
+    val userWeeks = CachedStages.data(evs
       .select(col("user_id"), expr("ts_sec div 604800").as("week"),
         (dec2(col("value")) * 100).cast("long").as("cents"))
       .groupBy("user_id", "week")
-      .agg(count(lit(1)).as("n_events"), sum(col("cents")).as("cents"))
-      .persist())
+      .agg(count(lit(1)).as("n_events"), sum(col("cents")).as("cents")))
     val cohorts = userWeeks.groupBy("user_id")
       .agg(min(col("week")).as("cohort_week"))
     // persisted: traversed twice (cohort sizes + final join) — caught
     // by the round-18 DupExec sweep as a duplicated aggregate subtree
-    val grid = CachedStages.track(userWeeks
+    val grid = CachedStages.model(userWeeks
       .join(broadcast(cohorts), Seq("user_id"))
       .withColumn("week_offset", col("week") - col("cohort_week"))
       .groupBy("cohort_week", "week_offset")
       .agg(countDistinct(col("user_id")).as("n_active"),
-        sum(col("cents")).as("rev_cents"))
-      .coalesce(1).persist())
+        sum(col("cents")).as("rev_cents")))
     val sizes = grid.filter(col("week_offset") === 0L)
       .select(col("cohort_week"), col("n_active").as("cohort_size"))
     val w = Window.partitionBy("cohort_week").orderBy(col("week_offset").asc)
@@ -3037,19 +2990,18 @@ object Events {
     val conv = evs.filter(col("event_type") === "purchase" &&
         dec2(col("value")) >= 200)
       .select("user_id").distinct().withColumn("converted", lit(1L))
-    val users = CachedStages.track(evs.select("user_id").distinct()
+    val users = CachedStages.data(evs.select("user_id").distinct()
       .withColumn("arm", expr(
         s"CASE WHEN ${Sampling.bucketExpr("user_id")} < 50 THEN 'a' ELSE 'b' END"))
       .join(conv, Seq("user_id"), "left")
-      .na.fill(0L, Seq("converted"))
-      .persist())
+      .na.fill(0L, Seq("converted")))
     val poissonW =
       """CASE WHEN bucket < 367879 THEN 0 WHEN bucket < 735759 THEN 1
         | WHEN bucket < 919699 THEN 2 WHEN bucket < 981012 THEN 3
         | WHEN bucket < 996340 THEN 4 WHEN bucket < 999406 THEN 5
         | WHEN bucket < 999917 THEN 6 WHEN bucket < 999990 THEN 7
         | WHEN bucket < 999999 THEN 8 ELSE 9 END""".stripMargin
-    val armRep = CachedStages.track(users
+    val armRep = CachedStages.model(users
       .select(col("user_id"), col("arm"), col("converted"),
         explode(expr(s"sequence(0, ${nBoot - 1})")).as("b"))
       .withColumn("bucket", expr(
@@ -3060,8 +3012,7 @@ object Events {
       .groupBy("arm", "b")
       .agg(sum(col("w")).as("wsum"),
         sum(expr("w * converted")).as("wconv"))
-      .withColumn("ppm", expr("wconv * 1000000 div nullif(wsum, 0)"))
-      .coalesce(1).persist())
+      .withColumn("ppm", expr("wconv * 1000000 div nullif(wsum, 0)")))
     val diffRep = armRep.groupBy("b")
       .agg(max(when(col("arm") === "a", col("ppm"))).as("pa"),
         max(when(col("arm") === "b", col("ppm"))).as("pb"))
@@ -3072,11 +3023,10 @@ object Events {
     // ranked pass must all read the |arms|·B-row cache, not regenerate
     // persisted: traversed twice (count table + ranked pass) — caught
     // by the round-18 DupExec sweep as a duplicated union subtree
-    val reps = CachedStages.track(armRep
+    val reps = CachedStages.model(armRep
       .select(col("arm").as("series"), col("b"), col("ppm"))
       .unionByName(diffRep)
-      .filter(col("ppm").isNotNull)
-      .coalesce(1).persist())
+      .filter(col("ppm").isNotNull))
     val w2 = Window.partitionBy("series").orderBy(col("ppm").asc,
       col("b").asc)
     // the ceil-rank cuts need the per-series replicate count alongside
@@ -3092,12 +3042,11 @@ object Events {
           .as("boot_hi_ppm"))
     // persisted: traversed twice (diff row + final union) — without it
     // the per-arm rollup re-scanned the users cache once per traversal
-    val pointArms = CachedStages.track(users
+    val pointArms = CachedStages.model(users
       .groupBy(col("arm").as("series"))
       .agg(count(lit(1)).as("n_users"), sum(col("converted")).as("nc"))
       .withColumn("point_ppm", expr("nc * 1000000 div n_users"))
-      .select("series", "n_users", "point_ppm")
-      .coalesce(1).persist())
+      .select("series", "n_users", "point_ppm"))
     val pointDiff = pointArms.agg(
         sum(col("n_users")).as("n_users"),
         sum(when(col("series") === "a", col("point_ppm"))).as("pa"),
@@ -3199,13 +3148,12 @@ object Events {
     * broadcast back; the final aggregate is |types| rows.
     */
   def trimmedStatsOf(evs: DataFrame, trimPct: Int): DataFrame = {
-    val hist = CachedStages.track(evs
+    val hist = CachedStages.model(evs
       .select(col("event_type"),
         expr("CAST(CAST(value AS DECIMAL(12, 2)) * 100 AS BIGINT)")
           .as("cents"))
       .groupBy("event_type", "cents")
-      .agg(count(lit(1)).as("cnt"))
-      .coalesce(1).persist())
+      .agg(count(lit(1)).as("cnt")))
     val w = Window.partitionBy("event_type").orderBy(col("cents").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val cum = hist.withColumn("cum", sum(col("cnt")).over(w))

@@ -275,9 +275,9 @@ object Features {
          |  'name_digit', right(c_name, 1),
          |  'nation', CAST(c_nationkey AS STRING))
          |AS (feature, fval)""".stripMargin))
-    val cube = CachedStages.track(melted
+    val cube = CachedStages.data(melted
       .groupBy("feature", "fval", "label")
-      .agg(count(lit(1)).as("cnt")).persist())
+      .agg(count(lit(1)).as("cnt")))
     val perVal = cube.groupBy("feature", "fval")
       .agg(sum(col("cnt")).as("n_v"),
         sum(expr("CAST(cnt AS DECIMAL(38, 0)) * cnt")).as("ssq_v"))
@@ -344,15 +344,9 @@ object Features {
     * reads.
     */
   private[graft] def nbCube(base: DataFrame): DataFrame =
-    // coalesce(1) before the persist (round 20, guide §2.2 "fewer,
-    // larger partitions"): the cube is MODEL-SIZED by construction
-    // (|nat|·|sign|·|seg| ≈ 250 rows at ANY corpus scale — domain
-    // cardinality, not data size), but an un-coalesced persist keeps
-    // the aggregation's 32 shuffle partitions, so every downstream
-    // cache read spawned 32 near-empty tasks. One cached partition
-    // makes each of the NB family's many model-sized stages one task.
-    CachedStages.track(base.groupBy("nat", "sign", "seg")
-      .agg(count(lit(1)).as("n")).coalesce(1).persist())
+    // |nat|·|sign|·|seg| ≈ 250 rows at ANY corpus scale
+    CachedStages.model(base.groupBy("nat", "sign", "seg")
+      .agg(count(lit(1)).as("n")))
 
   /** Laplace-smoothed fixed-point scores per (feature combo, class) —
     * shared by q219's argmax and q224's confidence normalization so
@@ -365,10 +359,8 @@ object Features {
     * the frame through.
     */
   private[graft] def nbClasses(cube: DataFrame): DataFrame =
-    // |classes|-row frame — same coalesce(1) rationale as nbCube
-    CachedStages.track(
-      cube.groupBy("seg").agg(sum(col("n")).as("n_c"))
-        .coalesce(1).persist())
+    // |classes| rows
+    CachedStages.model(cube.groupBy("seg").agg(sum(col("n")).as("n_c")))
 
   private[graft] def nbScores(cube: DataFrame): DataFrame =
     nbScores(cube, nbClasses(cube))
@@ -404,13 +396,13 @@ object Features {
     val pred = combos.withColumn("rn", row_number().over(wp))
       .filter(col("rn") === 1)
       .select(col("nat"), col("sign"), col("seg").as("predicted"))
-    // persisted: traversed twice (the accuracy rollup below and the
-    // final crossJoin) — unpersisted, the whole argmax-window + join
-    // chain executed twice (round-18 DupExec sweep: 46-node subtree x2)
-    val conf = CachedStages.track(cube.join(pred, Seq("nat", "sign"))
+    // cached: traversed twice (the accuracy rollup below and the final
+    // crossJoin) — uncached, the whole argmax-window + join chain
+    // executed twice (round-18 DupExec sweep: 46-node subtree x2);
+    // |segments|² rows
+    val conf = CachedStages.model(cube.join(pred, Seq("nat", "sign"))
       .groupBy(col("seg").as("actual"), col("predicted"))
-      .agg(sum(col("n")).as("n"))
-      .persist())
+      .agg(sum(col("n")).as("n")))
     val acc = conf.agg(
         sum(when(col("actual") === col("predicted"), col("n"))
           .otherwise(0L)).as("n_correct"))
@@ -454,7 +446,7 @@ object Features {
     */
   def nbCalibrationOf(base: DataFrame): DataFrame = {
     val cube = nbCube(base)
-    val scores = CachedStages.track(nbScores(cube).persist())
+    val scores = CachedStages.data(nbScores(cube))
     val wp = Window.partitionBy("nat", "sign")
       .orderBy(col("s_fp").desc, col("seg").asc)
     val pred = scores.withColumn("rn", row_number().over(wp))
@@ -467,7 +459,7 @@ object Features {
       .withColumn("conf_ppm", expr(
         """CAST(CAST(s_pred AS DECIMAL(38, 0)) * 1000000 div s_tot
           | AS BIGINT)""".stripMargin))
-    val bands = CachedStages.track(cube
+    val bands = CachedStages.data(cube
       .join(comboConf.select(col("nat"), col("sign"), col("predicted"),
         col("conf_ppm")), Seq("nat", "sign"))
       .withColumn("correct",
@@ -479,8 +471,7 @@ object Features {
       .withColumn("avg_conf_ppm", expr(
         "CAST(conf_mass div n_rows AS BIGINT)"))
       .withColumn("acc_ppm", expr("n_correct * 1000000 div n_rows"))
-      .withColumn("gap_ppm", expr("abs(acc_ppm - avg_conf_ppm)"))
-      .persist())
+      .withColumn("gap_ppm", expr("abs(acc_ppm - avg_conf_ppm)")))
     val ece = bands.agg(
         sum(expr("CAST(gap_ppm AS DECIMAL(38, 0)) * n_rows")).as("gmass"),
         sum(col("n_rows")).as("nt"))
@@ -513,20 +504,19 @@ object Features {
     * the corpus cost lives in the upstream confusion build.
     */
   def classifierReportOf(conf: DataFrame): DataFrame = {
-    // confusion matrix: |classes|²-sized — one cached partition
-    val c = CachedStages.track(conf.coalesce(1).persist())
+    // confusion matrix: |classes|²-sized
+    val c = CachedStages.model(conf)
     val byActual = c.groupBy(col("actual").as("cls"))
       .agg(sum(col("n")).as("n_actual"))
     val byPred = c.groupBy(col("predicted").as("cls"))
       .agg(sum(col("n")).as("n_predicted"))
     val diag = c.filter(col("actual") === col("predicted"))
       .select(col("actual").as("cls"), col("n").as("n_correct"))
-    val margins = CachedStages.track(byActual
+    val margins = CachedStages.model(byActual
       .join(byPred, Seq("cls"), "outer")
       .na.fill(0L, Seq("n_actual", "n_predicted"))
       .join(diag, Seq("cls"), "left")
-      .na.fill(0L, Seq("n_correct"))
-      .coalesce(1).persist()) // |classes| rows — one cached partition
+      .na.fill(0L, Seq("n_correct"))) // |classes| rows
     val kappa = margins.agg(
         sum(col("n_actual")).as("n_total"),
         sum(col("n_correct")).as("n_diag"),

@@ -69,8 +69,7 @@ object Graph {
     // actions (the degree-cache fill and the edgesDeg probe side) and
     // exchange reuse cannot cross the degree cache's boundary — without
     // the persist the lineitem self-join + distinct executed twice
-    pagerank(CachedStages.track(
-        copurchaseEdges(orderParts(spark, dir)).persist()), iters)
+    pagerank(CachedStages.data(copurchaseEdges(orderParts(spark, dir))), iters)
       .select(col("id").as("part_id"), col("rank_fp"))
       .orderBy(col("rank_fp").desc, col("part_id").asc)
   }
@@ -115,7 +114,7 @@ object Graph {
     // self-join, which the round-18 DupExec sweep caught re-executing
     // per read (re-persisting an already-persisted caller frame is a
     // no-op)
-    val edges = CachedStages.track(und.persist())
+    val edges = CachedStages.data(und)
     // undirected degree: each edge touches both endpoints; persisted
     // because it feeds BOTH sides of the orientation join (du / dv).
     // ONE traversal via explode, not a self-union (round 21): the
@@ -123,10 +122,9 @@ object Graph {
     // they run before the edge cache is filled each branch re-executes
     // the upstream distinct self-join concurrently (StageProf: a
     // 64-task stage burning 2x the und build's CPU).
-    val deg = CachedStages.track(edges.select(explode(array(
+    val deg = CachedStages.data(edges.select(explode(array(
         col("u"), col("v"))).as("id"))
-      .groupBy("id").agg(count(lit(1)).as("deg"))
-      .persist())
+      .groupBy("id").agg(count(lit(1)).as("deg")))
     // orient low-(deg, id) -> high-(deg, id); total order, so exactly
     // one direction survives per edge and every triangle becomes one
     // directed path a->b, b->c plus the closing edge a->c.
@@ -136,15 +134,14 @@ object Graph {
     // sf0.1 that was measured 18.7s vs 2-3s persisted.
     val du = deg.select(col("id").as("u"), col("deg").as("du"))
     val dv = deg.select(col("id").as("v"), col("deg").as("dv"))
-    val oriented = CachedStages.track(edges.join(du, "u").join(dv, "v")
+    val oriented = CachedStages.data(edges.join(du, "u").join(dv, "v")
       .select(
         when(col("du") < col("dv") ||
           (col("du") === col("dv") && col("u") < col("v")),
           struct(col("u").as("a"), col("v").as("b")))
           .otherwise(struct(col("v").as("a"), col("u").as("b")))
           .as("e"))
-      .select(col("e.a").as("a"), col("e.b").as("b"))
-      .persist())
+      .select(col("e.a").as("a"), col("e.b").as("b")))
     // EDGE-ITERATOR enumeration: collapse the oriented list to sorted
     // higher-neighbor adjacency arrays (|V| rows), broadcast them, and
     // intersect `nbrs(a) ∩ nbrs(b)` per edge — every triangle surfaces
@@ -159,9 +156,8 @@ object Graph {
     // persisted: built into BOTH broadcast sides of the intersection
     // join — unpersisted, the sorted-adjacency collect ran once per
     // broadcast (round-18 DupExec sweep, 7-node subtree x2)
-    val adj = CachedStages.track(oriented.groupBy("a")
-      .agg(sort_array(collect_list(col("b"))).as("nbrs"))
-      .persist())
+    val adj = CachedStages.data(oriented.groupBy("a")
+      .agg(sort_array(collect_list(col("b"))).as("nbrs")))
     // EAGER bounded fill (round 21, guide §7.1): the two broadcast(adj)
     // builds below launch as CONCURRENT jobs at action time; with the
     // chain unfilled, their stages race each other through the edge /
@@ -205,9 +201,10 @@ object Graph {
     * degree squared.
     */
   /** Directed STRONG co-purchase edges (≥ `minShared` shared orders,
-    * both directions, no self-loops), persisted — shared by q183's
-    * k-core ladder and q209's degree census so the strong-graph
-    * semantics cannot drift.
+    * both directions, no self-loops) — shared by q183's k-core ladder,
+    * q209's degree census and q211's clustering profile so the
+    * strong-graph semantics cannot drift. Not cached here: each `…Of`
+    * entry point caches its own input, so the table is cached once.
     */
   private[graft] def strongEdges(spark: SparkSession, dir: String,
       minShared: Int): DataFrame = {
@@ -220,17 +217,15 @@ object Graph {
     // p < p2 once and exploding the two directions afterwards halves
     // the exchange (StageProf: 25.9 -> ~13 MB at sf0.1) and the
     // aggregate's key space; the emitted edge set is bit-identical.
-    graft.ops.CachedStages.track(
-      li.join(li.withColumnRenamed("p", "p2"), Seq("k"))
-        .filter(col("p") < col("p2"))
-        .groupBy(col("p").as("src"), col("p2").as("dst"))
-        .agg(count(lit(1)).as("w"))
-        .filter(col("w") >= minShared)
-        .select(explode(array(
-          struct(col("src"), col("dst")),
-          struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst"))
-        .persist())
+    li.join(li.withColumnRenamed("p", "p2"), Seq("k"))
+      .filter(col("p") < col("p2"))
+      .groupBy(col("p").as("src"), col("p2").as("dst"))
+      .agg(count(lit(1)).as("w"))
+      .filter(col("w") >= minShared)
+      .select(explode(array(
+        struct(col("src"), col("dst")),
+        struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
   }
 
   def strongKCoreLadder(spark: SparkSession, dir: String,
@@ -266,8 +261,10 @@ object Graph {
     * a graph needing more rounds would hash-mismatch loudly, never
     * silently).
     */
-  def kCoreLadderOf(edges: DataFrame, ks: Seq[Int],
+  def kCoreLadderOf(input: DataFrame, ks: Seq[Int],
       symmetricEdges: Boolean = false): DataFrame = {
+    // every peel round reads the edge table
+    val edges = CachedStages.data(input)
     val spark = edges.sparkSession
     import spark.implicits._
     // CORENESS IS MONOTONE (Seidman): the (k+1)-core is a subgraph of
@@ -363,8 +360,7 @@ object Graph {
     */
   def labelPropagation(edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, s"need at least one iteration, got $iters")
-    val byDst = CachedStages.track(
-      edges.repartition(col("dst")).persist())
+    val byDst = CachedStages.data(edges.repartition(col("dst")))
     // ROUND-1 STRENGTH REDUCTION (round 20, guide §1.2 "don't compute
     // things you throw away"): labels start as (id, id), so round 1's
     // neighbor-label frequency over the DISTINCT edge list is all-ones —
@@ -380,7 +376,7 @@ object Graph {
     val bc = broadcastsVector(labels.count())
     // lazy: filled by round 2's join, never when iters == 1
     val edgesCached = if (bc) byDst
-      else CachedStages.track(byDst.repartition(col("src")).persist())
+      else CachedStages.data(byDst.repartition(col("src")))
     for (_ <- 2 to iters) {
       labels = edgesCached
         .join(joinSide(labels, bc), col("src") === col("id"))
@@ -423,7 +419,7 @@ object Graph {
     // ReuseExchange; across actions nothing reuses). Interleaved
     // fresh-JVM A/B at sf0.1/local[32]: 5.95 s unpersisted vs 5.18 s
     // persisted (min-of-3 each, healthy sentinels both runs).
-    val edges = CachedStages.track(copurchaseEdges(li).persist())
+    val edges = CachedStages.data(copurchaseEdges(li))
     val seeds = Tables(spark, dir, "orders")
       .filter(col("o_orderpriority") === "1-URGENT")
       .select(col("o_orderkey").as("k"))
@@ -451,16 +447,15 @@ object Graph {
     require(iters >= 1, s"need at least one iteration, got $iters")
     // degree table as the node set + conditional edge repartition: the
     // [[pagerank]] round-21 disciplines, same rationale
-    val deg = CachedStages.track(
-      edges.groupBy("src").agg(count(lit(1)).as("deg")).persist())
+    val deg = CachedStages.data(
+      edges.groupBy("src").agg(count(lit(1)).as("deg")))
     // seeds restricted to graph nodes HERE, against the degree cache
     // (round 21): a non-node seed has no out-edges and its teleport
     // mass would leak, so the restriction is part of this operator's
     // contract — callers used to pay a separate |E|-row distinct for
     // the same semi-join this does against the |nodes|-row cache.
-    val seedIds = CachedStages.track(seeds.select("id").distinct()
-      .join(deg.select(col("src").as("id")), Seq("id"), "left_semi")
-      .persist())
+    val seedIds = CachedStages.data(seeds.select("id").distinct()
+      .join(deg.select(col("src").as("id")), Seq("id"), "left_semi"))
     // one action fills both caches, so the seed and degree builds run
     // concurrently rather than one after the other
     val nSeeds = seedIds.count()
@@ -470,10 +465,10 @@ object Graph {
     // and picks the round join before the edge table is laid out for it
     val nNodes = deg.count()
     val bc = broadcastsVector(nNodes)
-    val edgesDeg = CachedStages.track({
+    val edgesDeg = {
       val ed = edges.join(deg, "src")
-      (if (bc) ed else ed.repartition(col("src"))).persist()
-    })
+      CachedStages.data(if (bc) ed else ed.repartition(col("src")))
+    }
     val rankParts = vectorParts(nNodes)
     val teleport = 3L * RankScale / (20L * nSeeds)
     val teleportRows = seedIds.coalesce(vectorParts(nSeeds))
@@ -612,8 +607,8 @@ object Graph {
     // |edges|-row distinct + checkpoint the node side used to pay is
     // replaced by reads of this one persisted |nodes|-row table (it
     // also feeds every round's zero-contribution union side).
-    val deg = CachedStages.track(
-      edges.groupBy("src").agg(count(lit(1)).as("deg")).persist())
+    val deg = CachedStages.data(
+      edges.groupBy("src").agg(count(lit(1)).as("deg")))
     // fills the degree cache; |nodes| picks the round join before the
     // edge table is laid out for it
     val n = deg.count()
@@ -626,10 +621,10 @@ object Graph {
     // was a pure |E|-row exchange thrown away every graded run (round
     // 21, guide §2.4; StageProf q69/q90: 23 MB exchange + a second full
     // cache fill).
-    val edgesDeg = CachedStages.track({
+    val edgesDeg = {
       val ed = edges.join(deg, "src")
-      (if (bc) ed else ed.repartition(col("src"))).persist()
-    })
+      CachedStages.data(if (bc) ed else ed.repartition(col("src")))
+    }
     val nodes = deg.select(col("src"))
     val teleport = 3L * RankScale / (20L * n)
 
@@ -807,7 +802,7 @@ object Graph {
     */
   private[ops] def hitsNormalize(rawSums: DataFrame,
       outKey: String): DataFrame = {
-    val raw = CachedStages.track(rawSums.persist())
+    val raw = CachedStages.data(rawSums)
     val mxRow = raw.agg(max(col("raw"))).head
     // empty side: no rows survive the projection, any divisor works
     val mx = if (mxRow.isNullAt(0)) 1L else mxRow.getLong(0)
@@ -835,12 +830,12 @@ object Graph {
     */
   def purchaseHitsOf(e: DataFrame, iters: Int, kTop: Int): DataFrame = {
     require(iters >= 1, s"need at least one iteration, got $iters")
-    val eCust = CachedStages.track(e.repartition(col("cust")).persist())
+    val eCust = CachedStages.data(e.repartition(col("cust")))
     // the part-oriented copy re-shuffles the CACHED cust copy — deriving
     // it from `e` directly would execute the upstream incidence build
     // (orders⋈lineitem + distinct) a second time, since two persists
     // share no work until each materializes
-    val ePart = CachedStages.track(eCust.repartition(col("part")).persist())
+    val ePart = CachedStages.data(eCust.repartition(col("part")))
     // NOT width-coalesced like the PageRank round vectors (round 21,
     // attempted and REVERTED): narrowing each half-round's raw-sum
     // cache to vectorParts(|side|) partitions looked like the same
@@ -920,13 +915,13 @@ object Graph {
     */
   def assocRulesOf(orderParts: DataFrame, minPairCount: Long,
       topK: Int): DataFrame = {
-    val b = CachedStages.track(orderParts.persist())
+    val b = CachedStages.data(orderParts)
     val nBaskets = b.agg(countDistinct(col("k")).as("n_baskets"))
     // persisted: built into TWO broadcasts (antecedent and consequent
     // sides) — unpersisted, the item-count shuffle agg executed once
     // per broadcast (round-18 DupExec sweep)
-    val itemCounts = CachedStages.track(
-      b.groupBy("p").agg(count(lit(1)).as("n_item")).persist())
+    val itemCounts = CachedStages.data(
+      b.groupBy("p").agg(count(lit(1)).as("n_item")))
     val undirected = b.join(b.withColumnRenamed("p", "p2"), Seq("k"))
       .filter(col("p") < col("p2"))
       .groupBy(col("p").as("a"), col("p2").as("b"))
@@ -995,9 +990,9 @@ object Graph {
     */
   def degreeCensusOf(edges: DataFrame,
       symmetricEdges: Boolean = false): DataFrame = {
-    val e = graft.ops.CachedStages.track(edges.persist())
-    val deg = graft.ops.CachedStages.track(e.groupBy("src")
-      .agg(count(lit(1)).as("d")).persist())
+    val e = CachedStages.data(edges)
+    val deg = CachedStages.data(e.groupBy("src")
+      .agg(count(lit(1)).as("d")))
     // SYMMETRIC MOMENT SHORTCUT (round 21, guide §1.2 "don't compute
     // things you throw away"): on a caller-declared symmetric edge
     // list (both directions present — the kCoreLadderOf gating
@@ -1038,7 +1033,7 @@ object Graph {
       } else {
         // general directed path, unchanged: the pair table persists
         // because BOTH moment passes traverse it
-        val pairs = graft.ops.CachedStages.track(pairsJoin.persist())
+        val pairs = CachedStages.data(pairsJoin)
         val p1 = pairs.agg(count(lit(1)).as("m"), sum(col("x")).as("sx"),
             sum(col("y")).as("sy"))
           .withColumn("mx", expr("sx * 1000 div m"))
@@ -1098,7 +1093,7 @@ object Graph {
     * projection.
     */
   def aprioriLadderOf(orderParts: DataFrame, minSupport: Long): DataFrame = {
-    val b = CachedStages.track(orderParts.persist())
+    val b = CachedStages.data(orderParts)
     def rollup(k: Long, counts: DataFrame): DataFrame =
       counts.agg(count(lit(1)).as("n_itemsets"),
           sum(when(col("n") >= minSupport, 1L).otherwise(0L))
@@ -1122,10 +1117,9 @@ object Graph {
     // (triples from FREQUENT pairs only) would be wrong here: the
     // report counts ALL occurring itemsets per k, not the pruned
     // candidate set.
-    val pairRows = CachedStages.track(
+    val pairRows = CachedStages.data(
       b.join(b.withColumnRenamed("p", "p2"), Seq("k"))
-        .filter(col("p") < col("p2"))
-        .persist())
+        .filter(col("p") < col("p2")))
     val pairs = pairRows.groupBy("p", "p2").agg(count(lit(1)).as("n"))
     val triples = pairRows
       .join(b.withColumnRenamed("p", "p3"), Seq("k"))
@@ -1164,29 +1158,28 @@ object Graph {
     * [[triangleCounts]] — shared with q70 so the triangle semantics
     * cannot drift.
     *
-    * Scale shape: the persisted strong-edge table (shared with
-    * q183/q209) collapses once to degrees; triangles run Suri &
+    * Scale shape: the strong-edge table, cached once here (shared with
+    * q183/q209), collapses once to degrees; triangles run Suri &
     * Vassilvitskii's degree-oriented edge-iterator (the q70 shape —
     * wedge work bounded at the lowest-degree corner, no d² hub
     * blow-up); nodes join triangles on the node key both sides already
     * shuffle by; bands and the global summary are model-sized.
     */
   def clusteringProfileOf(edges: DataFrame): DataFrame = {
-    val e = CachedStages.track(edges.persist())
+    val e = CachedStages.data(edges)
     val und = e.filter(col("src") < col("dst"))
       .select(col("src").as("u"), col("dst").as("v"))
     val deg = e.groupBy(col("src").as("id"))
       .agg(count(lit(1)).as("d"))
     val tri = triangleCounts(und)
-    val nodes = CachedStages.track(deg
+    val nodes = CachedStages.data(deg
       .join(tri.select(col("id"), col("n_triangles")), Seq("id"), "left")
       .withColumn("t", coalesce(col("n_triangles"), lit(0L)))
       .withColumn("cc_ppm", expr(
         """CASE WHEN d >= 2 THEN
           |  CAST(CAST(t AS DECIMAL(38, 0)) * 2 * 1000000
           |    div (CAST(d AS DECIMAL(38, 0)) * (d - 1)) AS BIGINT)
-          |END""".stripMargin))
-      .persist())
+          |END""".stripMargin)))
     val glob = nodes.agg(
         sum(when(col("d") >= 2, lit(1L)).otherwise(lit(0L)))
           .as("n_eligible_g"),
@@ -1327,17 +1320,16 @@ object Graph {
     * degrees ride a broadcast. Never an all-pairs product.
     */
   def linkPredictionOf(und: DataFrame, k: Int): DataFrame = {
-    val edges = CachedStages.track(und.persist())
+    val edges = CachedStages.data(und)
     // persisted: built into TWO broadcasts (deg_u / deg_v sides) —
     // unpersisted, the degree shuffle agg executed once per broadcast
     // (round-18 DupExec sweep, 12-node subtree x2). ONE traversal via
     // explode, not a self-union (round 21): the union's two branches
     // race the unfilled edge cache and re-execute the upstream
     // distinct self-join concurrently (the q70 StageProf finding).
-    val deg = CachedStages.track(edges.select(explode(array(
+    val deg = CachedStages.data(edges.select(explode(array(
         col("u"), col("v"))).as("id"))
-      .groupBy("id").agg(count(lit(1)).as("deg"))
-      .persist())
+      .groupBy("id").agg(count(lit(1)).as("deg")))
     // adjacency as (w, nbr) both directions: wedge (u -w- v), u < v.
     // ONE traversal (explode, not a self-union), shuffled ONCE to the
     // wedge join key and persisted w-partitioned — the self-join then
@@ -1347,12 +1339,11 @@ object Graph {
     // sf0.01 sweep missed it because AQE broadcasts the small side
     // there; q251's `capped` frame proves the cached-partitioning
     // pattern in this file).
-    val adj = CachedStages.track(edges.select(explode(array(
+    val adj = CachedStages.data(edges.select(explode(array(
         struct(col("u").as("w"), col("v").as("nbr")),
         struct(col("v").as("w"), col("u").as("nbr")))).as("e"))
       .select(col("e.w").as("w"), col("e.nbr").as("nbr"))
-      .repartition(col("w"))
-      .persist())
+      .repartition(col("w")))
     // RAW pairs repartitioned by (u, v) into a wedge-count-derived
     // task count BEFORE any aggregation (round 21, guide §2.2/§2.5):
     // the former map-side partial aggregate saw ~4.6e6 mostly-unique
@@ -1426,30 +1417,28 @@ object Graph {
   def linkPredictionCappedOf(und: DataFrame, k: Int,
       cap: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val edges = CachedStages.track(und.persist())
+    val edges = CachedStages.data(und)
     // persisted: built into THREE broadcasts (the cap window's
     // deg_nbr side plus deg_u / deg_v) — unpersisted, the degree
     // shuffle agg executed once per broadcast (round-18 DupExec sweep).
     // explode, not self-union: see linkPredictionOf (round 21)
-    val deg = CachedStages.track(edges.select(explode(array(
+    val deg = CachedStages.data(edges.select(explode(array(
         col("u"), col("v"))).as("id"))
-      .groupBy("id").agg(count(lit(1)).as("deg"))
-      .persist())
+      .groupBy("id").agg(count(lit(1)).as("deg")))
     val adj = edges.select(explode(array(
         struct(col("u").as("w"), col("v").as("nbr")),
         struct(col("v").as("w"), col("u").as("nbr")))).as("e"))
       .select(col("e.w").as("w"), col("e.nbr").as("nbr"))
     // persisted: BOTH wedge sides read the capped lists, and the
     // window (the one extra shuffle the cap costs) must run once
-    val capped = CachedStages.track(adj
+    val capped = CachedStages.data(adj
       .join(broadcast(deg.select(col("id").as("nbr"),
         col("deg").as("deg_nbr"))), Seq("nbr"))
       .withColumn("rk", row_number().over(
         Window.partitionBy("w")
           .orderBy(col("deg_nbr").desc, col("nbr").asc)))
       .filter(col("rk") <= cap)
-      .select("w", "nbr")
-      .persist())
+      .select("w", "nbr"))
     // same two round-21 disciplines as q233 (see linkPredictionOf):
     // pair aggregation partitioned by the exact CAPPED wedge fan-out
     // Σ_w C(min(deg_w, cap), 2), and the anti-join's dim side pinned

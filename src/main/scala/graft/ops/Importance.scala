@@ -173,7 +173,7 @@ object Importance {
   }
 
   def importanceReportOf(docs: DataFrame, targetLang: String): DataFrame = {
-    val perDoc = CachedStages.track(hashedBigramCounts(docs).persist())
+    val perDoc = CachedStages.data(hashedBigramCounts(docs))
     val lean = leanOf(perDoc, targetLang)
     perDoc.join(broadcast(lean), "bucket")
       .groupBy("doc_id")

@@ -264,11 +264,10 @@ object Layout {
     * |predicates|-row list.
     */
   def zonemapReportOf(orders: DataFrame, files: Int): DataFrame = {
-    val base = CachedStages.track(orders
+    val base = CachedStages.data(orders
       .select(col("o_orderkey"),
         expr("CAST(CAST(o_totalprice AS DECIMAL(12, 2)) * 100 AS BIGINT)")
-          .as("cents"))
-      .persist())
+          .as("cents")))
     val n = base.agg(count(lit(1)).as("n"))
     val w = Window.orderBy(col("cents").asc, col("o_orderkey").asc)
     val sorted = base

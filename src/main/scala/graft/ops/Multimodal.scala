@@ -438,7 +438,7 @@ object Multimodal {
     */
   def audioNearDups(spark: SparkSession, dir: String,
       maxHamming: Int = 3): DataFrame = {
-    val fps = CachedStages.track(audioFingerprints(spark, dir).toDF().persist())
+    val fps = CachedStages.data(audioFingerprints(spark, dir).toDF())
     def bands(side: String): DataFrame = fps
       .select(col("doc_id").as(s"id_$side"), col("fp").as(s"fp_$side"),
         explode(expr("sequence(0, 3)")).as("band"))
@@ -591,7 +591,7 @@ object Multimodal {
     */
   def imageNearDups(spark: SparkSession, dir: String,
       maxHamming: Int = 3): DataFrame = {
-    val hashes = CachedStages.track(imageDHashes(spark, dir).toDF().persist())
+    val hashes = CachedStages.data(imageDHashes(spark, dir).toDF())
     def bands(side: String): DataFrame = hashes
       .select(col("doc_id").as(s"id_$side"), col("w"), col("h"),
         col("dhash").as(s"dh_$side"),

@@ -151,13 +151,12 @@ object Privacy {
   def kAnonymity(spark: SparkSession, dir: String, k: Long = 5L): DataFrame = {
     val nations = Tables(spark, dir, "nation")
       .select(col("n_nationkey"), col("n_regionkey"))
-    val base = CachedStages.track(Tables(spark, dir, "customer")
+    val base = CachedStages.data(Tables(spark, dir, "customer")
       .join(broadcast(nations),
         col("c_nationkey") === col("n_nationkey"))
       .select(col("c_nationkey").cast("long").as("nat"),
         col("n_regionkey").cast("long").as("reg"),
-        col("c_mktsegment").as("seg"))
-      .persist())
+        col("c_mktsegment").as("seg")))
     def level(name: String, keys: Seq[String]): DataFrame =
       base.groupBy(keys.map(col): _*)
         .agg(count(lit(1)).as("sz"))
@@ -210,7 +209,7 @@ object Privacy {
 
   /** q185 over any `(nat, reg, bal_sign, sens)` frame (spec fixtures). */
   def lDiversityOf(baseIn: DataFrame, l: Long): DataFrame = {
-    val base = CachedStages.track(baseIn.persist())
+    val base = CachedStages.data(baseIn)
     def level(name: String, keys: Seq[String]): DataFrame =
       base.groupBy(keys.map(col): _*)
         .agg(count(lit(1)).as("sz"),
@@ -272,14 +271,13 @@ object Privacy {
     * 5-row global distribution rides a broadcast.
     */
   def tClosenessOf(baseIn: DataFrame, tPpm: Long): DataFrame = {
-    val base = CachedStages.track(baseIn.persist())
+    val base = CachedStages.data(baseIn)
     // persisted: each generalization level broadcasts BOTH rollups —
     // unpersisted, they re-scanned the base cache once per level
     // (round-18 DupExec sweep: both subtrees x3)
-    val global = CachedStages.track(
-      base.groupBy("sens").agg(count(lit(1)).as("n_c")).coalesce(1).persist())
-    val tot = CachedStages.track(
-      base.agg(count(lit(1)).as("n_total")).coalesce(1).persist())
+    val global = CachedStages.model(
+      base.groupBy("sens").agg(count(lit(1)).as("n_c")))
+    val tot = CachedStages.model(base.agg(count(lit(1)).as("n_total")))
     def level(name: String, keys: Seq[String]): DataFrame = {
       val gc = base.groupBy((keys :+ "sens").map(col): _*)
         .agg(count(lit(1)).as("n_gc"))
@@ -396,11 +394,10 @@ object Privacy {
         .select("bal", "nat", "pid")
         .localCheckpoint()
     }
-    val groups = CachedStages.track(cur.groupBy("pid").agg(
+    val groups = CachedStages.model(cur.groupBy("pid").agg(
       min(col("bal")).as("bal_min"), max(col("bal")).as("bal_max"),
       min(col("nat")).as("nat_min"), max(col("nat")).as("nat_max"),
-      count(lit(1)).as("n"))
-      .coalesce(1).persist())
+      count(lit(1)).as("n")))
     val summary = groups.agg(min(col("n")).as("k_achieved"),
       count(lit(1)).as("n_groups"))
     groups.crossJoin(broadcast(summary))

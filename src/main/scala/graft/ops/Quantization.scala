@@ -323,8 +323,7 @@ object Quantization {
     */
   private def trainPqCodebooks(vecs: DataFrame, m: Int, subDim: Int,
       kSub: Int, iters: Int): Seq[(Int, Long, Seq[Double])] = {
-    val sliced = CachedStages.track(
-      slicedOf(vecs, m, subDim).persist())
+    val sliced = CachedStages.data(slicedOf(vecs, m, subDim))
     def collectCents(cents: DataFrame): Seq[(Int, Long, Seq[Double])] =
       cents.collect().map(r =>
         (r.getInt(0), r.getLong(1), r.getSeq[Double](2)))

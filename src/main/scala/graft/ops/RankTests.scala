@@ -35,8 +35,8 @@ object RankTests {
     * tie_term)`).
     */
   private[graft] def midrankStats(df: DataFrame): (DataFrame, DataFrame) = {
-    val h = CachedStages.track(df.groupBy("v")
-      .agg(count(lit(1)).as("cnt")).coalesce(1).persist())
+    val h = CachedStages.model(df.groupBy("v")
+      .agg(count(lit(1)).as("cnt")))
     val wv = Window.orderBy("v")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val mr = h.withColumn("cum", sum(col("cnt")).over(wv))
@@ -100,7 +100,7 @@ object RankTests {
   def mannWhitneyOf(df: DataFrame, grpA: String,
       grpB: String): DataFrame = {
     val (groups, totals) = midrankStats(df)
-    val g = CachedStages.track(groups.coalesce(1).persist())
+    val g = CachedStages.model(groups)
     val a = g.filter(col("g") === grpA)
       .select(col("n_g").as("n_a"), col("r2_g").as("r2_a"))
     val b = g.filter(col("g") === grpB).select(col("n_g").as("n_b"))
@@ -175,7 +175,7 @@ object RankTests {
     */
   def kruskalWallisOf(df: DataFrame): DataFrame = {
     val (groups, totals) = midrankStats(df)
-    val g = CachedStages.track(groups.coalesce(1).persist())
+    val g = CachedStages.model(groups)
     val k = g.agg(count(lit(1)).as("k_groups"))
     val devs = g.crossJoin(broadcast(totals))
       .withColumn("d2", expr(
@@ -270,7 +270,7 @@ object RankTests {
     * persisted |customers|-row rank-pair table.
     */
   def spearmanOf(df: DataFrame): DataFrame = {
-    val d = CachedStages.track(df.persist())
+    val d = CachedStages.data(df)
     def ranks(cName: String) = {
       val h = d.groupBy(col(cName).as("v")).agg(count(lit(1)).as("cnt"))
       val wv = Window.orderBy("v")
@@ -280,12 +280,12 @@ object RankTests {
           expr("CAST(cnt AS DECIMAL(38, 0)) * cnt * cnt - cnt")
             .as("t3"))
     }
-    val rx = CachedStages.track(ranks("x").coalesce(1).persist())
-    val ry = CachedStages.track(ranks("y").coalesce(1).persist())
-    val pairs = CachedStages.track(d
+    val rx = CachedStages.model(ranks("x"))
+    val ry = CachedStages.model(ranks("y"))
+    val pairs = CachedStages.data(d
       .join(rx.select(col("v").as("x"), col("mr2").as("rx2")), Seq("x"))
       .join(ry.select(col("v").as("y"), col("mr2").as("ry2")), Seq("y"))
-      .select("rx2", "ry2").persist())
+      .select("rx2", "ry2"))
     val ties = rx.agg(sum(col("t3")).as("tie_x"))
       .crossJoin(broadcast(ry.agg(sum(col("t3")).as("tie_y"))))
     val p1 = pairs.agg(count(lit(1)).as("n"),
@@ -360,21 +360,19 @@ object RankTests {
     * runs there; totals, the max and the argmax row ride broadcasts.
     */
   def ksTestOf(df: DataFrame, ga: String, gb: String): DataFrame = {
-    val h = CachedStages.track(df.groupBy("v")
+    val h = CachedStages.model(df.groupBy("v")
       .agg(sum(when(col("g") === ga, 1L).otherwise(0L)).as("ca0"),
-        sum(when(col("g") === gb, 1L).otherwise(0L)).as("cb0"))
-      .coalesce(1).persist())
+        sum(when(col("g") === gb, 1L).otherwise(0L)).as("cb0")))
     val wv = Window.orderBy("v")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val tot = h.agg(sum(col("ca0")).as("n_a"), sum(col("cb0")).as("n_b"))
-    val diffs = CachedStages.track(h
+    val diffs = CachedStages.model(h
       .select(col("v"), sum(col("ca0")).over(wv).as("ca"),
         sum(col("cb0")).over(wv).as("cb"))
       .crossJoin(broadcast(tot))
       .withColumn("adiff", expr(
         """abs(CAST(ca AS DECIMAL(38, 0)) * n_b
-          | - CAST(cb AS DECIMAL(38, 0)) * n_a)""".stripMargin))
-      .coalesce(1).persist())
+          | - CAST(cb AS DECIMAL(38, 0)) * n_a)""".stripMargin)))
     val dmax = diffs.agg(max(col("adiff")).as("dmax"))
     diffs.crossJoin(broadcast(dmax))
       .filter(col("adiff") === col("dmax"))
@@ -434,8 +432,8 @@ object RankTests {
     * all |sources| tests in ONE plan, no per-source rescan.
     */
   def sourceLengthDriftOf(lens: DataFrame): DataFrame = {
-    val h = CachedStages.track(lens.groupBy("source", "v")
-      .agg(count(lit(1)).as("c")).coalesce(1).persist())
+    val h = CachedStages.model(lens.groupBy("source", "v")
+      .agg(count(lit(1)).as("c")))
     val gv = h.groupBy("v").agg(sum(col("c")).as("cg"))
     val tot = broadcast(h.agg(sum(col("c")).as("n_total"),
       countDistinct(col("source")).as("m")))
@@ -446,7 +444,7 @@ object RankTests {
       .na.fill(0L, Seq("c"))
     val w = Window.partitionBy("source").orderBy("v")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val diffs = CachedStages.track(grid
+    val diffs = CachedStages.model(grid
       .withColumn("ca", sum(col("c")).over(w))
       .withColumn("cgc", sum(col("cg")).over(w))
       .join(broadcast(nS), Seq("source"))
@@ -455,8 +453,7 @@ object RankTests {
       .withColumn("cb", expr("cgc - ca"))
       .withColumn("adiff", expr(
         """abs(CAST(ca AS DECIMAL(38, 0)) * n_b
-          | - CAST(cb AS DECIMAL(38, 0)) * n_a)""".stripMargin))
-      .coalesce(1).persist())
+          | - CAST(cb AS DECIMAL(38, 0)) * n_a)""".stripMargin)))
     val dmax = diffs.groupBy("source").agg(max(col("adiff")).as("dm"))
     diffs.join(broadcast(dmax), Seq("source"))
       .filter(col("adiff") === col("dm"))
@@ -524,7 +521,7 @@ object RankTests {
     * and the n_days count read one materialization.
     */
   def kendallTauOfDaily(dailyIn: DataFrame): DataFrame = {
-    val daily = CachedStages.track(dailyIn.coalesce(1).persist())
+    val daily = CachedStages.model(dailyIn)
     // spread the calendar-bounded matrix before the |days|² pair
     // kernel (ADVICE r20 — the knnHubnessOf discipline): the stream
     // side of the pair join otherwise inherits the model cache's ONE
@@ -597,7 +594,7 @@ object RankTests {
     * are |types|-row broadcasts.
     */
   def pettittOfDaily(dailyIn: DataFrame): DataFrame = {
-    val daily = CachedStages.track(dailyIn.coalesce(1).persist())
+    val daily = CachedStages.model(dailyIn)
     val wOrd = Window.partitionBy("event_type").orderBy("day")
     val ut = daily.as("a").join(daily.as("b"),
         col("a.event_type") === col("b.event_type"))
@@ -616,14 +613,13 @@ object RankTests {
     // unpersisted, the pairwise self-join + U-statistic windows above
     // executed twice (round-18 DupExec sweep, 16-node subtree x2);
     // |event types| rows
-    val best = CachedStages.track(ut.filter(col("rn") < col("n_days"))
+    val best = CachedStages.model(ut.filter(col("rn") < col("n_days"))
       .withColumn("pick", row_number().over(Window
         .partitionBy("event_type")
         .orderBy(abs(col("ut")).desc, col("day").asc)))
       .filter(col("pick") === 1)
       .select(col("event_type"), col("day").as("cp_day"),
-        col("ut").as("u_at_cp"), abs(col("ut")).as("k_stat"))
-      .coalesce(1).persist())
+        col("ut").as("u_at_cp"), abs(col("ut")).as("k_stat")))
     val levels = daily
       .join(broadcast(best.select("event_type", "cp_day")),
         Seq("event_type"))
@@ -682,7 +678,7 @@ object RankTests {
     * |types|-row aggregate. The stream collapses exactly once.
     */
   def runsTestOfDaily(dailyIn: DataFrame): DataFrame = {
-    val daily = CachedStages.track(dailyIn.coalesce(1).persist())
+    val daily = CachedStages.model(dailyIn)
     val wOrd = Window.partitionBy("event_type").orderBy("day")
     val steps = daily
       .withColumn("prev", lag(col("x"), 1).over(wOrd))
@@ -755,18 +751,17 @@ object RankTests {
     * (block, treatment, v, k, n_blocks_total, mr2).
     */
   private def blockedRanked(obs: DataFrame): DataFrame = {
-    val cells = CachedStages.track(obs
+    val cells = CachedStages.model(obs
       .groupBy(col("block"), col("treatment"))
-      .agg(sum(col("v")).as("v")).coalesce(1).persist())
+      .agg(sum(col("v")).as("v")))
     val kRow = broadcast(cells
       .agg(countDistinct(col("treatment")).as("k"),
         countDistinct(col("block")).as("n_blocks_total")))
-    val complete = CachedStages.track(cells.crossJoin(kRow)
+    val complete = CachedStages.model(cells.crossJoin(kRow)
       .withColumn("nt",
         count(lit(1)).over(Window.partitionBy("block")))
       .filter(col("nt") === col("k"))
-      .select("block", "treatment", "v", "k", "n_blocks_total")
-      .coalesce(1).persist())
+      .select("block", "treatment", "v", "k", "n_blocks_total"))
     val h = complete.groupBy(col("block"), col("v"))
       .agg(count(lit(1)).as("cnt"))
     val wv = Window.partitionBy("block").orderBy("v")
@@ -774,7 +769,7 @@ object RankTests {
     val mr = h.withColumn("cum", sum(col("cnt")).over(wv))
       .select(col("block"), col("v"),
         expr("2 * (cum - cnt) + cnt + 1").as("mr2"))
-    CachedStages.track(complete.join(mr, Seq("block", "v")).coalesce(1).persist())
+    CachedStages.model(complete.join(mr, Seq("block", "v")))
   }
 
   def friedmanOf(obs: DataFrame): DataFrame = {
@@ -841,10 +836,9 @@ object RankTests {
     */
   def cliffsDeltaOf(df: DataFrame, grpA: String,
       grpB: String): DataFrame = {
-    val hist = CachedStages.track(df.groupBy(col("v"))
+    val hist = CachedStages.model(df.groupBy(col("v"))
       .agg(sum(when(col("g") === grpA, 1L).otherwise(0L)).as("ca"),
-        sum(when(col("g") === grpB, 1L).otherwise(0L)).as("cb"))
-      .coalesce(1).persist())
+        sum(when(col("g") === grpB, 1L).otherwise(0L)).as("cb")))
     val wv = Window.orderBy("v")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val tot = broadcast(hist.agg(sum(col("ca")).as("n_a"),
@@ -987,11 +981,10 @@ object RankTests {
       max(col("day")).as("mx"))
     val calendar = bounds.select(explode(expr("sequence(mn, mx)"))
       .as("day"))
-    val dense = CachedStages.track(daily.select("event_type").distinct()
+    val dense = CachedStages.model(daily.select("event_type").distinct()
       .crossJoin(broadcast(calendar))
       .join(daily, Seq("event_type", "day"), "left")
-      .na.fill(0L, Seq("cents"))
-      .coalesce(1).persist())
+      .na.fill(0L, Seq("cents")))
     val types = dense.select(col("event_type")).distinct()
     val lags = daily.sparkSession.range(-maxLag, maxLag + 1)
       .select(col("id").as("lag"))
@@ -1008,15 +1001,14 @@ object RankTests {
     // the lag enters through the day-key equi-join: y reads b's
     // series at day + lag; the inner join against the shared dense
     // calendar IS the overlap window
-    val grid = CachedStages.track(pairsLags
+    val grid = CachedStages.model(pairsLags
       .join(dense.select(col("event_type").as("ta"), col("day"),
         col("cents").as("x")), Seq("ta"))
       .withColumn("yday", col("day") + col("lag"))
       .join(dense.select(col("event_type").as("tb"),
         col("day").as("yday"), col("cents").as("y")),
         Seq("tb", "yday"))
-      .select("ta", "tb", "lag", "day", "x", "y")
-      .coalesce(1).persist())
+      .select("ta", "tb", "lag", "day", "x", "y"))
     def midranks(cName: String, out: String) = {
       val w = Window.partitionBy("ta", "tb", "lag").orderBy("v")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1030,13 +1022,12 @@ object RankTests {
     // persisted: traversed twice (rank means + centered moments) —
     // unpersisted, both midrank window+join chains executed twice
     // (round-18 DupExec sweep, 16-node subtree x2)
-    val ranked = CachedStages.track(grid
+    val ranked = CachedStages.model(grid
       .join(midranks("x", "rx2").withColumnRenamed("v", "x"),
         Seq("ta", "tb", "lag", "x"))
       .join(midranks("y", "ry2").withColumnRenamed("v", "y"),
         Seq("ta", "tb", "lag", "y"))
-      .select("ta", "tb", "lag", "rx2", "ry2")
-      .coalesce(1).persist())
+      .select("ta", "tb", "lag", "rx2", "ry2"))
     val means = ranked.groupBy("ta", "tb", "lag")
       .agg(count(lit(1)).as("n"),
         sum(expr("CAST(rx2 AS DECIMAL(38, 0))")).as("sx"),

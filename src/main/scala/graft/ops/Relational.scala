@@ -441,8 +441,8 @@ object Relational {
     // unpersisted, the value-domain histogram aggregate executed twice
     // per score map (round-18 DupExec sweep, x2 in each of the three
     // q146 maps); bounded by the value domain
-    val hist = CachedStages.track(
-      vals.groupBy(valueCol).agg(count(lit(1)).as("cnt")).coalesce(1).persist())
+    val hist = CachedStages.model(
+      vals.groupBy(valueCol).agg(count(lit(1)).as("cnt")))
     val w = Window.orderBy(col(valueCol).asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val tot = hist.agg(sum(col("cnt")).as("n"))
@@ -478,11 +478,10 @@ object Relational {
         count(lit(1)).as("freq"),
         (sum(dec2(col("o_totalprice"))) * 100).cast("long").as("cents"))
     val maxDate = perCust.agg(max(col("last_date")).as("corpus_max"))
-    val met = CachedStages.track(perCust
+    val met = CachedStages.data(perCust
       .crossJoin(broadcast(maxDate))
       .withColumn("rec_days",
-        datediff(col("corpus_max"), col("last_date")).cast("long"))
-      .persist())
+        datediff(col("corpus_max"), col("last_date")).cast("long")))
     val rq = quintileMap(met.select("rec_days"), "rec_days", "r_q")
     val fq = quintileMap(met.select("freq"), "freq", "f_q")
     val mq = quintileMap(met.select("cents"), "cents", "m_q")
@@ -516,7 +515,7 @@ object Relational {
     * totals are 1-row broadcasts; the rollup is ≤ |priorities|·4 rows.
     */
   def orderAgingOf(orders: DataFrame): DataFrame = {
-    val open = CachedStages.track(orders
+    val open = CachedStages.data(orders
       .filter(col("o_orderstatus") === "O")
       .crossJoin(broadcast(orders.agg(max(col("o_orderdate")).as("snap"))))
       .withColumn("age_days",
@@ -525,8 +524,7 @@ object Relational {
         when(col("age_days") <= 30, "a_0_30")
           .when(col("age_days") <= 90, "b_31_90")
           .when(col("age_days") <= 365, "c_91_365")
-          .otherwise("d_365_plus"))
-      .persist())
+          .otherwise("d_365_plus")))
     val tot = open.agg(count(lit(1)).as("n_open"))
     open.groupBy("o_orderpriority", "bucket")
       .agg(count(lit(1)).as("n_orders"),
@@ -579,23 +577,23 @@ object Relational {
     * report (expected side is the spine).
     *
     * Scale shape: one orders scan collapsing to ≤9 groups with
-    * map-side combine; the expectation table and the total are
-    * broadcast literals.
+    * map-side combine; the total is a broadcast literal. The
+    * expectation table is the preserved side of the left join, which
+    * Spark cannot broadcast; both sides have at most 9 rows.
     */
   def benfordAuditOf(spark: SparkSession, orders: DataFrame): DataFrame = {
     import spark.implicits._
     // ≤9 rows, but the digit counts feed both the join and the total —
     // persisted so the orders scan runs exactly once
-    val counts = CachedStages.track(orders.select(expr(
+    val counts = CachedStages.model(orders.select(expr(
       """CAST(substring(CAST(CAST(CAST(o_totalprice AS DECIMAL(12, 2))
         | * 100 AS BIGINT) AS STRING), 1, 1) AS BIGINT)""".stripMargin)
       .as("digit"))
-      .groupBy("digit").agg(count(lit(1)).as("n_orders"))
-      .coalesce(1).persist())
+      .groupBy("digit").agg(count(lit(1)).as("n_orders")))
     val expected = BenfordPpm
       .map { case (d, p) => (d.toLong, p) }.toDF("digit", "exp_ppm")
     val total = counts.agg(sum(col("n_orders")).as("n_total"))
-    broadcast(expected).join(counts, Seq("digit"), "left")
+    expected.join(counts, Seq("digit"), "left")
       .na.fill(0L, Seq("n_orders"))
       .crossJoin(broadcast(total))
       .withColumn("obs_ppm", expr("n_orders * 1000000 div n_total"))
@@ -636,27 +634,25 @@ object Relational {
   def abcOf(revIn: DataFrame): DataFrame = {
     // the (part, r4) frame feeds both the histogram and the boundary
     // resolution — persisted so the corpus collapses exactly once
-    val rev = CachedStages.track(revIn.persist())
-    val hist = CachedStages.track(rev
+    val rev = CachedStages.data(revIn)
+    val hist = CachedStages.model(rev
       .withColumn("hb", expr("r4 div 10000000"))
       .groupBy("hb")
-      .agg(count(lit(1)).as("n_in"), sum(col("r4")).as("s_in"))
-      .coalesce(1).persist())
+      .agg(count(lit(1)).as("n_in"), sum(col("r4")).as("s_in")))
     val wb = Window.orderBy(col("hb").desc)
       .rowsBetween(Window.unboundedPreceding, -1)
     val cum = hist
       .withColumn("cum_before", coalesce(sum(col("s_in")).over(wb), lit(0L)))
     val total = hist.agg(sum(col("s_in")).as("total"),
       sum(col("n_in")).as("n_parts_total"))
-    val buckets = CachedStages.track(cum.crossJoin(broadcast(total))
+    val buckets = CachedStages.model(cum.crossJoin(broadcast(total))
       // a cut at share p/q lies inside the bucket iff the bucket's
       // prefix interval [cum_before, cum_before + s_in) straddles it
       .withColumn("has_cut",
         (expr("cum_before * 5 < total * 4") &&
           expr("(cum_before + s_in) * 5 >= total * 4")) ||
         (expr("cum_before * 20 < total * 19") &&
-          expr("(cum_before + s_in) * 20 >= total * 19")))
-      .coalesce(1).persist())
+          expr("(cum_before + s_in) * 20 >= total * 19"))))
     def classExpr(cumBefore: String): org.apache.spark.sql.Column = expr(
       s"""CASE WHEN $cumBefore * 5 < total * 4 THEN 'A'
          |     WHEN $cumBefore * 20 < total * 19 THEN 'B'
@@ -765,11 +761,10 @@ object Relational {
       """unix_micros(CAST(l_shipdate AS TIMESTAMP)) div 86400000000
         | - unix_micros(CAST(o_orderdate AS TIMESTAMP)) div 86400000000"""
         .stripMargin).as("gap_days"))
-    val hist = CachedStages.track(gaps
+    val hist = CachedStages.model(gaps
       .filter(col("gap_days") >= 0)
       .groupBy("priority", "gap_days")
-      .agg(count(lit(1)).as("cnt"))
-      .coalesce(1).persist())
+      .agg(count(lit(1)).as("cnt")))
     val invalid = gaps.filter(col("gap_days") < 0)
       .groupBy("priority").agg(count(lit(1)).as("n_invalid"))
     val totals = hist.groupBy("priority")
@@ -834,11 +829,9 @@ object Relational {
     * all, the cheapest inequality plan in the family.
     */
   def theilDecompositionOf(spend: DataFrame): DataFrame = {
-    val pos = CachedStages.track(
-      spend.filter(col("cents") > 0).persist())
-    val g = CachedStages.track(pos.groupBy("nation")
-      .agg(count(lit(1)).as("n_g"), sum(col("cents")).as("s_g"))
-      .coalesce(1).persist())
+    val pos = CachedStages.data(spend.filter(col("cents") > 0))
+    val g = CachedStages.model(pos.groupBy("nation")
+      .agg(count(lit(1)).as("n_g"), sum(col("cents")).as("s_g")))
     val tot = broadcast(g.agg(sum(col("n_g")).as("n"),
       sum(col("s_g")).as("s")))
     val dec18 = org.apache.spark.sql.types.DecimalType(38, 18)
@@ -859,22 +852,20 @@ object Relational {
     // |nations|-row result persists. Before round 18 `terms` was
     // traversed separately for the total (DupExec: 23-node
     // crossJoin subtree x2 — the per-customer join executed twice).
-    val perNation = CachedStages.track(terms.groupBy("nation")
+    val perNation = CachedStages.model(terms.groupBy("nation")
       .agg(max(col("n_g")).as("n_cust"), max(col("s_g")).as("spend_cents"),
         round(sum(col("t_g_term").cast(dec18)).cast("double"), 6)
           .as("theil_g"),
-        sum(col("t_term").cast(dec18)).as("tt_g"))
-      .coalesce(1).persist())
+        sum(col("t_term").cast(dec18)).as("tt_g")))
     // persisted: traversed twice (globals rollup + final join) — the
     // residual x2 the round-18 DupExec re-probe caught after the
     // perNation fold landed; |nations| rows
-    val withBetween = CachedStages.track(perNation.crossJoin(tot)
+    val withBetween = CachedStages.model(perNation.crossJoin(tot)
       .withColumn("share_ppm", expr("spend_cents * 1000000 div s"))
       .withColumn("between_term", round(
         (col("spend_cents").cast("double") / col("s").cast("double")) *
           log((col("spend_cents") * col("n")).cast("double") /
-            (col("s") * col("n_cust")).cast("double")), 6))
-      .coalesce(1).persist())
+            (col("s") * col("n_cust")).cast("double")), 6)))
     val globals = broadcast(withBetween
       .withColumn("within_term",
         (col("spend_cents").cast("double") / col("s").cast("double")) *
@@ -995,7 +986,7 @@ object Relational {
       expr("unix_micros(CAST(l_shipdate AS TIMESTAMP)) div 86400000000")
         .as("ship_day"))
     val valid = d.filter(col("ship_day") >= col("order_day"))
-    val deltas = CachedStages.track(valid
+    val deltas = CachedStages.model(valid
       .select(col("order_day").as("day"), lit(1L).as("delta"),
         lit(1L).as("ordered"), lit(0L).as("shipped"), lit(0L).as("invalid"))
       .unionByName(valid.select(col("ship_day").as("day"),
@@ -1009,8 +1000,7 @@ object Relational {
       .agg(sum(col("delta")).as("delta"),
         sum(col("ordered")).as("n_ordered"),
         sum(col("shipped")).as("n_shipped"),
-        sum(col("invalid")).as("n_invalid"))
-      .coalesce(1).persist())
+        sum(col("invalid")).as("n_invalid")))
     val cal = deltas.agg(min(col("day")).as("mn"), max(col("day")).as("mx"))
       .select(explode(expr("sequence(mn, mx)")).as("day"))
     val w = Window.orderBy(col("day").asc)
@@ -1153,12 +1143,12 @@ object Relational {
     */
   def duplicatePaymentsOf(orders: DataFrame,
       windowDays: Long): DataFrame = {
-    val o = CachedStages.track(orders.select(
+    val o = CachedStages.data(orders.select(
       col("o_custkey"), col("o_orderkey"),
       expr("unix_micros(CAST(o_orderdate AS TIMESTAMP)) div 86400000000")
         .as("day"),
       expr("CAST(CAST(o_totalprice AS DECIMAL(12, 2)) * 100 AS BIGINT)")
-        .as("cents")).persist())
+        .as("cents")))
     val pairs = o.as("a").join(o.as("b"),
         col("a.o_custkey") === col("b.o_custkey") &&
           col("a.o_orderkey") < col("b.o_orderkey"))
@@ -1209,9 +1199,9 @@ object Relational {
     * one broadcast.
     */
   def lorenzOf(spend: DataFrame): DataFrame = {
-    val hist = CachedStages.track(spend
+    val hist = CachedStages.model(spend
       .withColumn("v", expr("cents div 100"))
-      .groupBy("v").agg(count(lit(1)).as("c")).coalesce(1).persist())
+      .groupBy("v").agg(count(lit(1)).as("c")))
     val tot = hist.agg(sum(col("c")).as("n"),
       sum(expr("CAST(v AS DECIMAL(38, 0)) * c")).as("total_d"))
     // bounded-by-construction: the frame runs over the value-domain
@@ -1269,12 +1259,11 @@ object Relational {
     * broadcast; |suppliers| output rows.
     */
   def supplierReturnScreenOf(li: DataFrame): DataFrame = {
-    val per = CachedStages.track(li
+    val per = CachedStages.model(li
       .groupBy(col("l_suppkey"))
       .agg(count(lit(1)).as("n_lines"),
         sum(expr("IF(l_returnflag = 'R', CAST(1 AS BIGINT), " +
-          "CAST(0 AS BIGINT))")).as("n_returned"))
-      .coalesce(1).persist())
+          "CAST(0 AS BIGINT))")).as("n_returned")))
     val glob = per.agg(sum(col("n_lines")).as("nn"),
       sum(col("n_returned")).as("rr"))
     per.crossJoin(broadcast(glob))
@@ -1347,19 +1336,17 @@ object Relational {
     // scalar) — unpersisted, the full supplier return screen over
     // lineitem executed twice (round-18 DupExec sweep, 33-node
     // subtree x2); same idiom for `cum` below (totals + final join)
-    val tested = CachedStages.track(supplierReturnScreenOf(li)
+    val tested = CachedStages.model(supplierReturnScreenOf(li)
       .filter(col("z2_micro").isNotNull)
-      .withColumn("p_ppm", expr(pLadderCase("z2_micro")))
-      .coalesce(1).persist())
+      .withColumn("p_ppm", expr(pLadderCase("z2_micro"))))
     val bands = tested.groupBy("p_ppm")
       .agg(count(lit(1)).as("n_suppliers"))
     val m = tested.agg(count(lit(1)).as("m_tested"))
     val w = Window.orderBy("p_ppm")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = CachedStages.track(bands
+    val cum = CachedStages.model(bands
       .withColumn("cum_tested", sum(col("n_suppliers")).over(w))
-      .crossJoin(broadcast(m))
-      .coalesce(1).persist())
+      .crossJoin(broadcast(m)))
       .withColumn("bh_pass", expr(
         """IF(p_ppm * m_tested <= cum_tested * 100000,
           | CAST(1 AS BIGINT), CAST(0 AS BIGINT))""".stripMargin))
@@ -1466,25 +1453,22 @@ object Relational {
     */
   def mutualInformationOf(df: DataFrame): DataFrame = {
     val dec18 = org.apache.spark.sql.types.DecimalType(38, 18)
-    val cells = CachedStages.track(df.groupBy("x", "y")
-      .agg(count(lit(1)).as("c")).coalesce(1).persist())
+    val cells = CachedStages.model(df.groupBy("x", "y")
+      .agg(count(lit(1)).as("c")))
     // persisted: each marginal feeds the scored join AND its entropy
     // rollup, and the total feeds every branch — unpersisted, the
     // marginal/total aggregates over the cell cache re-ran per
     // consumer (round-18 DupExec sweep)
-    val mx = CachedStages.track(
-      cells.groupBy("x").agg(sum(col("c")).as("cx")).coalesce(1).persist())
-    val my = CachedStages.track(
-      cells.groupBy("y").agg(sum(col("c")).as("cy")).coalesce(1).persist())
-    val tot = broadcast(CachedStages.track(
-      cells.agg(sum(col("c")).as("n")).coalesce(1).persist()))
+    val mx = CachedStages.model(cells.groupBy("x").agg(sum(col("c")).as("cx")))
+    val my = CachedStages.model(cells.groupBy("y").agg(sum(col("c")).as("cy")))
+    val tot = broadcast(CachedStages.model(cells.agg(sum(col("c")).as("n"))))
     def entropy(marg: DataFrame, cnt: String) = broadcast(
       marg.crossJoin(tot)
         .select(round(sum(
           (col(cnt).cast("double") / col("n").cast("double")) *
             log(col("n").cast("double") / col(cnt).cast("double")))
           .cast(dec18).cast("double"), 6).as("h")))
-    val scored = CachedStages.track(cells
+    val scored = CachedStages.model(cells
       .join(broadcast(mx), Seq("x"))
       .join(broadcast(my), Seq("y"))
       .crossJoin(tot)
@@ -1492,8 +1476,7 @@ object Relational {
       .withColumn("pmi_term", round(
         (col("c").cast("double") / col("n").cast("double")) *
           log((col("c") * col("n")).cast("double") /
-            (col("cx") * col("cy")).cast("double")), 6))
-      .coalesce(1).persist())
+            (col("cx") * col("cy")).cast("double")), 6)))
     val hxy = broadcast(scored.select(round(sum(
       (col("c").cast("double") / col("n").cast("double")) *
         log(col("n").cast("double") / col("c").cast("double")))
@@ -1543,23 +1526,21 @@ object Relational {
     * |pairs| rows.
     */
   def cramersVOf(df: DataFrame, cols: Seq[String]): DataFrame = {
-    val base = CachedStages.track(df.persist())
+    val base = CachedStages.data(df)
     // persisted: broadcast into EVERY column-pair branch — unpersisted,
     // the count re-scanned the base cache once per pair (round-18
     // DupExec sweep)
-    val n = CachedStages.track(
-      base.agg(count(lit(1)).as("n")).coalesce(1).persist())
+    val n = CachedStages.model(base.agg(count(lit(1)).as("n")))
     val parts = cols.combinations(2).map { case Seq(a, b) =>
-      val cells = CachedStages.track(base
+      val cells = CachedStages.model(base
         .groupBy(col(a).as("va"), col(b).as("vb"))
-        .agg(count(lit(1)).as("o"))
-        .coalesce(1).persist())
+        .agg(count(lit(1)).as("o")))
       // persisted: each margin feeds its broadcast join AND its
       // cardinality rollup (ka/kb) — two consumers per margin
-      val ra = CachedStages.track(
-        cells.groupBy("va").agg(sum(col("o")).as("r")).coalesce(1).persist())
-      val rb = CachedStages.track(
-        cells.groupBy("vb").agg(sum(col("o")).as("c")).coalesce(1).persist())
+      val ra = CachedStages.model(
+        cells.groupBy("va").agg(sum(col("o")).as("r")))
+      val rb = CachedStages.model(
+        cells.groupBy("vb").agg(sum(col("o")).as("c")))
       val ka = ra.agg(count(lit(1)).as("k_a"))
       val kb = rb.agg(count(lit(1)).as("k_b"))
       cells.join(broadcast(ra), Seq("va"))
@@ -1619,19 +1600,17 @@ object Relational {
     * bucket-bounded; the rollup is 9 rows.
     */
   def abcXyzOf(li: DataFrame): DataFrame = {
-    val monthly = CachedStages.track(li.select(col("l_partkey"),
+    val monthly = CachedStages.data(li.select(col("l_partkey"),
         expr("year(l_shipdate)").as("m"),
         expr("CAST(CAST(l_quantity AS DECIMAL(12, 2)) * 100 AS BIGINT)")
           .as("qc"),
         revenueTerm(col("l_extendedprice"), col("l_discount")).as("rt"))
       .groupBy("l_partkey", "m")
-      .agg(sum(col("qc")).as("qm"), sum(col("rt")).as("rm"))
-      .persist())
-    val perPart = CachedStages.track(monthly.groupBy("l_partkey")
+      .agg(sum(col("qc")).as("qm"), sum(col("rt")).as("rm")))
+    val perPart = CachedStages.data(monthly.groupBy("l_partkey")
       .agg(sum(col("qm")).as("sq"),
         sum(expr("CAST(qm AS DECIMAL(38, 0)) * qm")).as("q2"),
-        (sum(col("rm")) * 10000).cast("long").as("r4"))
-      .persist())
+        (sum(col("rm")) * 10000).cast("long").as("r4")))
     val span = monthly.agg((max(col("m")) - min(col("m")) + 1).as("mm"))
     val xyzed = perPart.crossJoin(broadcast(span))
       .withColumn("var_num", expr(
@@ -1643,24 +1622,22 @@ object Relational {
           |     ELSE 'Z' END""".stripMargin))
       .select("l_partkey", "xyz_class", "r4", "sq")
     // per-part ABC: q174's two-phase, emitting the class per part
-    val hist = CachedStages.track(perPart
+    val hist = CachedStages.model(perPart
       .withColumn("hb", expr("r4 div 10000000"))
       .groupBy("hb")
-      .agg(count(lit(1)).as("n_in"), sum(col("r4")).as("s_in"))
-      .coalesce(1).persist())
+      .agg(count(lit(1)).as("n_in"), sum(col("r4")).as("s_in")))
     val wb = Window.orderBy(col("hb").desc)
       .rowsBetween(Window.unboundedPreceding, -1)
     val total = hist.agg(sum(col("s_in")).as("total"),
       sum(col("n_in")).as("np"))
-    val buckets = CachedStages.track(hist
+    val buckets = CachedStages.model(hist
       .withColumn("cum_before", coalesce(sum(col("s_in")).over(wb), lit(0L)))
       .crossJoin(broadcast(total))
       .withColumn("has_cut",
         (expr("cum_before * 5 < total * 4") &&
           expr("(cum_before + s_in) * 5 >= total * 4")) ||
         (expr("cum_before * 20 < total * 19") &&
-          expr("(cum_before + s_in) * 20 >= total * 19")))
-      .coalesce(1).persist())
+          expr("(cum_before + s_in) * 20 >= total * 19"))))
     def classExpr(cumBefore: String) = expr(
       s"""CASE WHEN $cumBefore * 5 < total * 4 THEN 'A'
          |     WHEN $cumBefore * 20 < total * 19 THEN 'B'
@@ -1778,10 +1755,10 @@ object Relational {
       .agg((sum(col("rt")) * 10000).cast("long").as("r4"))
     val wk = Window.partitionBy("week")
       .orderBy(col("r4").desc, col("l_partkey").asc)
-    val top = CachedStages.track(weekly
+    val top = CachedStages.model(weekly
       .withColumn("rnk", row_number().over(wk))
       .filter(col("rnk") <= topK)
-      .repartition(1).persist())
+      .repartition(1))
     val nWeeks = top.agg(countDistinct(col("week")).as("n_weeks"))
     top.groupBy("l_partkey")
       .agg(count(lit(1)).as("weeks_in_top"),
@@ -1921,7 +1898,7 @@ object Relational {
     */
   def marketShareShiftOf(orders: DataFrame, customer: DataFrame,
       nation: DataFrame): DataFrame = {
-    val ny = CachedStages.track(orders.select(
+    val ny = CachedStages.model(orders.select(
         col("o_custkey").as("c_custkey"),
         expr("year(CAST(o_orderdate AS TIMESTAMP))").as("yr"),
         expr("CAST(CAST(o_totalprice AS DECIMAL(12, 2)) * 100 AS BIGINT)")
@@ -1930,8 +1907,7 @@ object Relational {
       .join(broadcast(nation.select(col("n_nationkey").as("c_nationkey"),
         col("n_name"))), Seq("c_nationkey"))
       .groupBy(col("n_name"), col("yr"))
-      .agg(sum(col("cents")).as("revenue_cents"))
-      .coalesce(1).persist())
+      .agg(sum(col("cents")).as("revenue_cents")))
     val yearTot = ny.groupBy("yr").agg(sum(col("revenue_cents")).as("yt"))
     val wn = Window.partitionBy("n_name").orderBy(col("yr").asc)
     ny.join(broadcast(yearTot), Seq("yr"))
@@ -1976,7 +1952,7 @@ object Relational {
     * prefix immediately bounds the rollup.
     */
   def concentrationOf(spendByNation: DataFrame): DataFrame = {
-    val sp = CachedStages.track(spendByNation.persist())
+    val sp = CachedStages.data(spendByNation)
     val tot = sp.groupBy("nation")
       .agg(count(lit(1)).as("n_customers"),
         sum(col("cents")).as("total_cents"))
@@ -2020,14 +1996,13 @@ object Relational {
     * rows map-side; the baseline is a 1-row broadcast.
     */
   def promoLiftOf(li: DataFrame): DataFrame = {
-    val per = CachedStages.track(li.select(
+    val per = CachedStages.data(li.select(
         expr("CAST(CAST(l_discount AS DECIMAL(8, 6)) * 1000000 " +
           "AS BIGINT)").as("disc_ppm"),
         expr("CAST(CAST(l_quantity AS DECIMAL(12, 2)) * 100 AS BIGINT)")
           .as("qc"))
       .groupBy("disc_ppm")
-      .agg(count(lit(1)).as("n_lines"), sum(col("qc")).as("sum_qty_centi"))
-      .persist())
+      .agg(count(lit(1)).as("n_lines"), sum(col("qc")).as("sum_qty_centi")))
     val base = per.filter(col("disc_ppm") === 0L)
       .select(col("n_lines").as("n0"), col("sum_qty_centi").as("q0"))
     per.crossJoin(broadcast(base))
@@ -2191,12 +2166,11 @@ object Relational {
     */
   def sourcingRiskOf(part: DataFrame, li: DataFrame,
       supplier: DataFrame): DataFrame = {
-    val ps = CachedStages.track(li
+    val ps = CachedStages.data(li
       .groupBy(col("l_partkey"), col("l_suppkey"))
       .agg(sum(expr(
         "CAST(CAST(l_extendedprice AS DECIMAL(12, 2)) * 100 AS BIGINT)"))
-        .as("rev"))
-      .persist())
+        .as("rev")))
     val perPart = ps.groupBy(col("l_partkey").as("p_partkey"))
       .agg(countDistinct(col("l_suppkey")).as("n_supp"),
         sum(col("rev")).as("part_rev"), max(col("rev")).as("top_rev"))

@@ -22,7 +22,8 @@ object RoundPlans {
       (1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L), (6L, 1L),
       (1L, 4L), (4L, 1L), (2L, 5L), (5L, 2L)).toDF("src", "dst")
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-    val edgesDeg = edges.join(deg, "src").repartition(col("src")).persist()
+    val edgesDeg = CachedStages.data(
+      edges.join(deg, "src").repartition(col("src")))
     edgesDeg.count()
     val nodes = edgesDeg.select("src").distinct().localCheckpoint()
     val n = nodes.count()

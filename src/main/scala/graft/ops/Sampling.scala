@@ -153,13 +153,12 @@ object Sampling {
     */
   def tokenBudgetAllocationOf(docs: DataFrame, budget: Long): DataFrame = {
     require(budget >= 1, s"budget must be >= 1, got $budget")
-    val counts = CachedStages.track(docs.filter(col("doc_id").isNotNull)
+    val counts = CachedStages.model(docs.filter(col("doc_id").isNotNull)
       .select(col("source"),
         size(expr(graft.ops.TextOps.tokensExpr)).cast("long").as("n"))
       .groupBy("source").agg(sum(col("n")).as("n_tokens"))
       .withColumn("w_sqrt",
-        expr("CAST(floor(sqrt(CAST(n_tokens AS DOUBLE))) AS BIGINT)"))
-      .coalesce(1).persist())
+        expr("CAST(floor(sqrt(CAST(n_tokens AS DOUBLE))) AS BIGINT)")))
     val denom = counts.agg(sum(col("w_sqrt")).as("denom"))
     counts.crossJoin(broadcast(denom))
       .select(col("source"), col("n_tokens"), col("w_sqrt"),
@@ -396,13 +395,12 @@ object Sampling {
     // tokenizing path, the tokenizer itself: PlanAudit showed
     // regexp_extract_all twice); the cached stage is 4 slim columns,
     // the full text never enters it
-    val toks = CachedStages.track(counts
+    val toks = CachedStages.data(counts
       .filter(col("doc_id").isNotNull)
       .withColumn("n_toks", col("n_toks").cast("long"))
       .withColumn("h", md5(col("doc_id").cast("string")))
       .withColumn("grp", substring(col("h"), 1, 1))
-      .select("doc_id", "n_toks", "h", "grp")
-      .persist())
+      .select("doc_id", "n_toks", "h", "grp"))
     // phase 1: parallel per-group inclusive cumsums (one window each)
     val withinW = Window.partitionBy("grp").orderBy(col("h"), col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -474,14 +472,13 @@ object Sampling {
   def epochOrderOf(df: DataFrame, epochs: Int): DataFrame = {
     require(epochs >= 1, s"epochs must be >= 1, got $epochs")
     import org.apache.spark.sql.expressions.Window
-    val keyed = CachedStages.track(df
+    val keyed = CachedStages.data(df
       .filter(col("doc_id").isNotNull)
       .select(col("doc_id"),
         explode(expr(s"sequence(0, ${epochs - 1})")).as("epoch"))
       .withColumn("h", md5(concat(col("epoch").cast("string"),
         lit("_"), col("doc_id").cast("string"))))
-      .withColumn("grp", substring(col("h"), 1, 1))
-      .persist())
+      .withColumn("grp", substring(col("h"), 1, 1)))
     val withinW = Window.partitionBy("epoch", "grp")
       .orderBy(col("h"), col("doc_id"))
     val within = keyed
@@ -626,11 +623,10 @@ object Sampling {
     require(shards >= 1 && shards + 1 < 32, s"shard code space: $shards")
     def pos(arg: String) =
       s"CAST(conv(substring(md5($arg), 1, 12), 16, 10) AS BIGINT)"
-    val keys = CachedStages.track(Tables(spark, dir, "documents")
+    val keys = CachedStages.data(Tables(spark, dir, "documents")
       .filter(col("doc_id").isNotNull)
       .select(col("doc_id"),
-        expr(pos("concat('key:', CAST(doc_id AS STRING))")).as("kpos"))
-      .persist())
+        expr(pos("concat('key:', CAST(doc_id AS STRING))")).as("kpos")))
     def ringAssign(n: Int, outCol: String): DataFrame = {
       val nds = spark.range(n.toLong * vnodes).select(
         expr(s"id div $vnodes").as("shard"),

@@ -124,14 +124,13 @@ object Similarity {
 
   /** Core of `normOutliers` over any `(label, embedding)` frame. */
   def normOutliersOf(vecs: DataFrame): DataFrame = {
-    val hist = CachedStages.track(vecs
+    val hist = CachedStages.model(vecs
       .withColumn("norm", expr(
         """sqrt(aggregate(
           |  transform(embedding, x -> cast(x as double) * cast(x as double)),
           |  cast(0 as double), (acc, s) -> acc + s))""".stripMargin))
       .withColumn("norm_cu", expr("CAST(floor(norm * 100.0D) AS BIGINT)"))
-      .groupBy("label", "norm_cu").agg(count(lit(1)).as("nv"))
-      .coalesce(1).persist())
+      .groupBy("label", "norm_cu").agg(count(lit(1)).as("nv")))
     val w = Window.partitionBy("label").orderBy(col("norm_cu").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val totals = hist.groupBy("label").agg(sum(col("nv")).as("n_vecs"))
@@ -391,15 +390,14 @@ object Similarity {
         col("crank"))
     val qvecs = rawVectors(spark, dir).filter(col("vec_id") < 8)
       .select(col("vec_id").as("q_id"), col("v").as("q_vec"))
-    val cands = CachedStages.track(rawVectors(spark, dir)
+    val cands = CachedStages.data(rawVectors(spark, dir)
       .join(broadcast(ranked), col("label") === col("probe_label"))
       .join(broadcast(qvecs), Seq("q_id"))
       .filter(col("q_id") =!= col("vec_id"))
       .withColumn("cos", round(expr("cosine_sim(q_vec, v)"), 6))
-      .select("q_id", "vec_id", "crank", "cos")
-      .persist())
-    val exact = CachedStages.track(cosineRanking(spark, dir, k)
-      .select(col("q_id"), col("doc_id").as("vec_id")).repartition(1).persist())
+      .select("q_id", "vec_id", "crank", "cos"))
+    val exact = CachedStages.model(cosineRanking(spark, dir, k)
+      .select(col("q_id"), col("doc_id").as("vec_id")).repartition(1))
     (1 to maxProbe).map { np =>
       val w = Window.partitionBy("q_id")
         .orderBy(col("cos").desc, col("vec_id").asc)
@@ -478,8 +476,8 @@ object Similarity {
     // dot-product folds run once per row, not once per scan (same
     // persist caveat as Dedup.nearDupPairs — harnesses clear the cache;
     // library callers release via CachedStages.release).
-    val bucketed = CachedStages.track(
-      lshBucketed(rawVectors(spark, dir), nTables, bitsPerTable).persist())
+    val bucketed = CachedStages.data(
+      lshBucketed(rawVectors(spark, dir), nTables, bitsPerTable))
     // Candidate generation as ONE melted equi-join instead of nTables
     // separate joins unioned: explode each row to (vec_id, t, bucket),
     // join on (t, bucket), and dedup the SLIM (q_id, vec_id) pairs
@@ -544,8 +542,8 @@ object Similarity {
   def lshAnnMultiProbe(spark: SparkSession, dir: String, nTables: Int = 2,
       bitsPerTable: Int = 4, k: Int = 3): DataFrame = {
     graft.functions.CosineSimilarity.register(spark)
-    val bucketed = CachedStages.track(
-      lshBucketed(rawVectors(spark, dir), nTables, bitsPerTable).persist())
+    val bucketed = CachedStages.data(
+      lshBucketed(rawVectors(spark, dir), nTables, bitsPerTable))
     val buckets = meltedBuckets(bucketed, nTables)
     val probeList = (s"bk" +: (0 until bitsPerTable).map(f => s"bk ^ ${1 << f}"))
       .mkString("array(", ", ", ")")
@@ -591,8 +589,8 @@ object Similarity {
     // the cache the LSH folds run 2*nTables times per row (persist caveat
     // as in Dedup.nearDupPairs — harnesses clear the session cache;
     // library callers release via CachedStages.release).
-    val bucketed = CachedStages.track(
-      lshBucketed(plantedCorpus(spark, dir), nTables, bitsPerTable).persist())
+    val bucketed = CachedStages.data(
+      lshBucketed(plantedCorpus(spark, dir), nTables, bitsPerTable))
     def cands(b: String) = {
       val l = bucketed.select(col("vec_id").as("id_a"), col("v").as("v_a"),
         col(b).as("bk"))
@@ -690,7 +688,7 @@ object Similarity {
       .orderBy(col("cos").desc, col("vec_id").asc)
     val probes = rawVectors(spark, dir).filter(col("vec_id") < nProbes)
       .select(col("vec_id").as("q_id"), col("v").as("q_vec"))
-    val cand = CachedStages.track(rawVectors(spark, dir)
+    val cand = CachedStages.model(rawVectors(spark, dir)
       .crossJoin(broadcast(probes))
       .filter(col("q_id") =!= col("vec_id"))
       .withColumn("cos", round(expr("cosine_sim(q_vec, v)"), 6))
@@ -698,16 +696,15 @@ object Similarity {
       .filter(col("rn") <= nCand)
       .select(col("q_id"), col("vec_id"), col("v"),
         expr("CAST(round(cos * 1000000, 0) AS BIGINT)").as("rel_ppm"))
-      .repartition(1).persist())
-    val pairs = CachedStages.track(cand
+      .repartition(1))
+    val pairs = CachedStages.model(cand
       .select(col("q_id"), col("vec_id").as("a"), col("v").as("va"))
       .join(cand.select(col("q_id"), col("vec_id").as("b"),
         col("v").as("vb")), Seq("q_id"))
       .filter(col("a") =!= col("b"))
       .withColumn("sim_ppm", expr(
         "CAST(round(round(cosine_sim(va, vb), 6) * 1000000, 0) AS BIGINT)"))
-      .select("q_id", "a", "b", "sim_ppm")
-      .coalesce(1).persist())
+      .select("q_id", "a", "b", "sim_ppm"))
     def argmax(scored: DataFrame, rank: Int): DataFrame =
       scored.groupBy("q_id")
         .agg(max(struct(col("mmr_fp"), (-col("vec_id")).as("nid"),
@@ -761,8 +758,8 @@ object Similarity {
   def annRecallLadder(spark: SparkSession, dir: String, k: Int = 3,
       lshTables: Int = 16, lshBits: Int = 4, pqM: Int = 4,
       pqSubDim: Int = 16, pqKSub: Int = 4, pqIters: Int = 2): DataFrame = {
-    val exact = CachedStages.track(cosineRanking(spark, dir, k)
-      .select(col("q_id"), col("doc_id").as("vec_id")).repartition(1).persist())
+    val exact = CachedStages.model(cosineRanking(spark, dir, k)
+      .select(col("q_id"), col("doc_id").as("vec_id")).repartition(1))
     def recallOf(name: String, topk: DataFrame): DataFrame =
       topk.select(col("q_id"), col("vec_id"))
         .join(exact.withColumn("hit", lit(1L)), Seq("q_id", "vec_id"),
@@ -815,7 +812,7 @@ object Similarity {
   def truncatedRecallOf(vectors: DataFrame, k: Int,
       dims: Seq[Int]): DataFrame = {
     graft.functions.CosineSimilarity.register(vectors.sparkSession)
-    val corpus = CachedStages.track(vectors.persist())
+    val corpus = CachedStages.data(vectors)
     val qs = corpus.filter(col("vec_id") < 8)
       .select(col("vec_id").as("q_id"), col("v").as("q_vec"))
     val full = dims.max
@@ -830,7 +827,7 @@ object Similarity {
         .filter(col("rn") <= k)
         .select(col("q_id"), col("vec_id"))
     }
-    val exact = CachedStages.track(topkAt(full).repartition(1).persist())
+    val exact = CachedStages.model(topkAt(full).repartition(1))
     dims.sorted.map { m =>
       val tk = if (m == full) exact else topkAt(m)
       tk.join(exact.withColumn("hit", lit(1L)), Seq("q_id", "vec_id"),
@@ -1006,10 +1003,9 @@ object Similarity {
         col("v").as("q_vec")), None)
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k)
-    val per = CachedStages.track(topk.groupBy("q_id", "q_label")
+    val per = CachedStages.model(topk.groupBy("q_id", "q_label")
       .agg(sum((col("label") =!= col("q_label")).cast("long"))
-        .as("n_diff"))
-      .coalesce(1).persist())
+        .as("n_diff")))
     val glob = broadcast(per.agg(
       sum(when(col("n_diff") === k.toLong, 1L).otherwise(0L))
         .as("total_suspects"),
@@ -1085,11 +1081,10 @@ object Similarity {
       vecs.select(col("vec_id").as("q_id"), col("v").as("q_vec")), None)
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k)
-    val perVec = graft.ops.CachedStages.track(vecs.select("vec_id")
+    val perVec = CachedStages.model(vecs.select("vec_id")
       .join(topk.groupBy("vec_id").agg(count(lit(1)).as("n_k")),
         Seq("vec_id"), "left")
-      .na.fill(0L, Seq("n_k"))
-      .coalesce(1).persist())
+      .na.fill(0L, Seq("n_k")))
     val s1 = perVec.agg(count(lit(1)).as("n_vecs"),
       sum(when(col("n_k") === 0L, 1L).otherwise(0L)).as("n_orphans"),
       max(col("n_k")).as("max_nk"))
@@ -1145,22 +1140,20 @@ object Similarity {
         col("v").as("q_vec")), None)
       .withColumn("d", expr(
         "1000000 - CAST(round(cos * 1000000) AS BIGINT)"))
-    val grp = CachedStages.track(pairs
+    val grp = CachedStages.model(pairs
       .groupBy("q_id", "q_label", "label")
       .agg(sum(col("d")).as("s"), count(lit(1)).as("n"))
-      .withColumn("m", expr("s div n"))
-      .coalesce(1).persist())
+      .withColumn("m", expr("s div n")))
     val a = grp.filter(col("label") === col("q_label"))
       .select(col("q_id"), col("m").as("a"))
     val b = grp.filter(col("label") =!= col("q_label"))
       .groupBy("q_id", "q_label").agg(min(col("m")).as("b"))
-    val sil = CachedStages.track(b.join(a, Seq("q_id"), "left")
+    val sil = CachedStages.model(b.join(a, Seq("q_id"), "left")
       .withColumn("sil", expr(
         """CASE WHEN a IS NULL THEN CAST(0 AS BIGINT)
           |     WHEN greatest(a, b) = 0 THEN CAST(0 AS BIGINT)
           |     ELSE (b - a) * 1000000 div greatest(a, b) END"""
-          .stripMargin))
-      .coalesce(1).persist())
+          .stripMargin)))
     val overall = sil.agg(sum(col("sil")).as("ssum"),
         count(lit(1)).as("nt"))
       .select(expr("ssum div nt").as("overall_mean_micro"))

@@ -66,8 +66,8 @@ object SkewJoin {
       // unpersisted, the two-level group-size collapse ran twice per
       // key column (round-18 DupExec sweep, x3 keys); value-domain
       // bounded
-      val hist = graft.ops.CachedStages.track(
-        sizes.groupBy("sz").agg(count(lit(1)).as("nk")).coalesce(1).persist())
+      val hist = CachedStages.model(
+        sizes.groupBy("sz").agg(count(lit(1)).as("nk")))
       val w = Window.orderBy(col("sz").asc)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val cum = hist.withColumn("cum", sum(col("nk")).over(w))

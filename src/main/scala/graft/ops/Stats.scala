@@ -87,10 +87,9 @@ object Stats {
     // all CPU on one task. The exchange moves the raw scan rows once
     // (cheap); the |cols|× melt and the per-value hashing then run at
     // session parallelism.
-    val melted = CachedStages.track(df
+    val melted = CachedStages.data(df
       .repartition(df.sparkSession.sparkContext.defaultParallelism)
-      .select(expr(s"stack(${cols.size}, $stackArgs) AS (column_name, val)"))
-      .persist())
+      .select(expr(s"stack(${cols.size}, $stackArgs) AS (column_name, val)")))
     val est = ndvSketch(melted)
     melted.groupBy("column_name")
       .agg(count(lit(1)).as("n_rows"),
@@ -176,7 +175,7 @@ object Stats {
     val stats = uses.keys.toSeq
       .map { t =>
         val df = bytesOf(t)
-        t -> (if (uses(t) >= 2) CachedStages.track(df.persist()) else df)
+        t -> (if (uses(t) >= 2) CachedStages.data(df) else df)
       }.toMap
     joins.map { case (name, lt, rt) =>
       stats(lt).select(col("n").as("n_left"),
@@ -276,11 +275,10 @@ object Stats {
     */
   def equidepthOf(df: DataFrame, table: String, column: String,
       buckets: Int): DataFrame = {
-    val hist = CachedStages.track(df
+    val hist = CachedStages.model(df
       .select(expr(s"CAST(CAST($column AS DECIMAL(12, 2)) * 100 AS BIGINT)")
         .as("cents"))
-      .groupBy("cents").agg(count(lit(1)).as("cnt"))
-      .coalesce(1).persist())
+      .groupBy("cents").agg(count(lit(1)).as("cnt")))
     val w = org.apache.spark.sql.expressions.Window.orderBy(col("cents").asc)
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
         org.apache.spark.sql.expressions.Window.currentRow)
@@ -289,10 +287,9 @@ object Stats {
     // persisted: traversed twice (boundary picks + bucket counts) —
     // unpersisted, the cumulative window over the histogram ran twice
     // (round-18 DupExec sweep); value-domain bounded
-    val cum = CachedStages.track(hist
+    val cum = CachedStages.model(hist
       .withColumn("cum", sum(col("cnt")).over(w))
-      .crossJoin(broadcast(tot))
-      .coalesce(1).persist())
+      .crossJoin(broadcast(tot)))
     val picks = (1 to buckets).map(i =>
       min(when(expr(s"cum * $buckets >= n * $i"), col("cents")))
         .as(s"h$i"))
@@ -308,11 +305,10 @@ object Stats {
     // — unpersisted, the stack + lag window and everything above it
     // executed twice (round-18 DupExec sweep, 22-node subtree x2 per
     // column); <= `buckets` rows
-    val ranges = CachedStages.track(bounds
+    val ranges = CachedStages.model(bounds
       .crossJoin(broadcast(tot.select(col("floor_lo"))))
       .withColumn("lo", coalesce(lag(col("hi"), 1).over(wb), col("floor_lo")))
-      .select(col("bucket"), col("lo"), col("hi"))
-      .coalesce(1).persist())
+      .select(col("bucket"), col("lo"), col("hi")))
     val counts = cum.crossJoin(broadcast(ranges))
       .filter(col("cents") > col("lo") && col("cents") <= col("hi"))
       .groupBy("bucket")

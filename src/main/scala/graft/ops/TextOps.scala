@@ -447,12 +447,11 @@ object TextOps {
     // regexp tokenize of the corpus. Kept: the persist is load-bearing
     // exactly in the broadcast regime, and at 100 TB a planner mode
     // change must not silently double the most expensive scan.
-    val postings = CachedStages.track(docs.filter(col("doc_id").isNotNull)
+    val postings = CachedStages.data(docs.filter(col("doc_id").isNotNull)
       .select(col("doc_id"),
-        explode(expr(s"array_distinct($tokensExpr)")).as("term"))
-      .persist())
-    val dfs = CachedStages.track(
-      postings.groupBy("term").agg(count(lit(1)).as("df")).persist())
+        explode(expr(s"array_distinct($tokensExpr)")).as("term")))
+    val dfs = CachedStages.data(
+      postings.groupBy("term").agg(count(lit(1)).as("df")))
     val kept = postings
       .join(dfs.filter(col("df") <= maxDf).select("term"), "term")
       .groupBy("term")
@@ -575,10 +574,9 @@ object TextOps {
 
   /** Core of `bpeEncodeStats` over any `(doc_id, text, source)` corpus. */
   def bpeEncodeStatsOf(docs: DataFrame, k: Int): DataFrame = {
-    val sw = CachedStages.track(docs.filter(col("doc_id").isNotNull)
+    val sw = CachedStages.data(docs.filter(col("doc_id").isNotNull)
       .select(col("source"), explode(expr(tokensExpr)).as("word"))
-      .groupBy("source", "word").agg(count(lit(1)).as("cnt"))
-      .persist())
+      .groupBy("source", "word").agg(count(lit(1)).as("cnt")))
     val words = sw.groupBy("word").agg(sum(col("cnt")).as("freq"))
     val vocab = bpeTrain(words, k)._2
     val pieces = vocab.select(col("word"),
@@ -617,10 +615,9 @@ object TextOps {
   def vocabCoverageOf(docs: DataFrame, sizes: Seq[Int]): DataFrame = {
     require(sizes.nonEmpty && sizes.forall(_ >= 1),
       s"sizes must be >= 1, got $sizes")
-    val counts = CachedStages.track(docs.filter(col("doc_id").isNotNull)
+    val counts = CachedStages.data(docs.filter(col("doc_id").isNotNull)
       .select(explode(expr(tokensExpr)).as("token"))
-      .groupBy("token").agg(count(lit(1)).as("n"))
-      .persist())
+      .groupBy("token").agg(count(lit(1)).as("n")))
     val total = counts.agg(sum(col("n")).as("total"))
     val points = sizes.sorted.map { k =>
       counts.orderBy(col("n").desc, col("token").asc).limit(k)
@@ -722,7 +719,7 @@ object TextOps {
         "r_count * 8 + r_wordlen * 4 + r_alpha * 2 + r_stop"))
       .groupBy("mask")
       .agg(count(lit(1)).as("n_docs"), sum(col("n_toks")).as("n_tokens"))
-    val masked = CachedStages.track(byMask.coalesce(1).persist())
+    val masked = CachedStages.model(byMask)
     def at(m: Int) =
       s"coalesce(sum(CASE WHEN mask = $m THEN n_docs END), CAST(0 AS BIGINT))"
     val glob = broadcast(masked.agg(
@@ -884,10 +881,9 @@ object TextOps {
   /** Core of `cmsHeavyHitters` over any `(doc_id, text)` corpus. */
   def cmsHeavyHittersOf(docs: DataFrame, w: Int, d: Int, k: Int): DataFrame = {
     require(w >= 2 && d >= 1 && k >= 1, s"bad sketch params w=$w d=$d k=$k")
-    val counts = CachedStages.track(docs.filter(col("doc_id").isNotNull)
+    val counts = CachedStages.data(docs.filter(col("doc_id").isNotNull)
       .select(explode(expr(tokensExpr)).as("token"))
-      .groupBy("token").agg(count(lit(1)).as("n"))
-      .persist())
+      .groupBy("token").agg(count(lit(1)).as("n")))
     val counters = cmsCountersOf(counts, w, d)
     val topk = counts.orderBy(col("n").desc, col("token").asc).limit(k)
     topk
@@ -931,9 +927,8 @@ object TextOps {
   /** Core of `ngramNovelty` over any `(doc_id, text)` corpus. */
   def ngramNoveltyOf(docs: DataFrame): DataFrame = {
     graft.functions.WordShingles.register(docs.sparkSession)
-    val grams = CachedStages.track(docs.filter(col("doc_id").isNotNull)
-      .select(col("doc_id"), explode(expr("word_shingles(text, 3)")).as("gram"))
-      .persist())
+    val grams = CachedStages.data(docs.filter(col("doc_id").isNotNull)
+      .select(col("doc_id"), explode(expr("word_shingles(text, 3)")).as("gram")))
     val df = grams.groupBy("gram").agg(count(lit(1)).as("df"))
     grams.join(df, Seq("gram"))
       .groupBy("doc_id")
@@ -983,7 +978,7 @@ object TextOps {
           .stripMargin)).as("kg"))
       .groupBy(col("kg.k").as("k"), col("kg.g").as("g"))
       .agg(count(lit(1)).as("n"))
-    val cached = CachedStages.track(grams.persist())
+    val cached = CachedStages.data(grams)
     val uni = cached.filter(col("k") === 1)
       .select(col("g").as("word"), col("n"))
     val total = uni.agg(sum(col("n")).as("n_total"))
@@ -1046,13 +1041,12 @@ object TextOps {
     graft.functions.KmvDistinct.register(docs.sparkSession)
     // persisted |sources|-row sketch table: the corpus is scanned ONCE
     // to build it; the pair self-join below reads the cache twice
-    val sk = CachedStages.track(docs.filter(col("doc_id").isNotNull)
+    val sk = CachedStages.model(docs.filter(col("doc_id").isNotNull)
       .select(col("source"), explode(expr(tokensExpr)).as("token"))
       .withColumn("hv", expr(
         "cast(conv(substring(md5(token), 1, 14), 16, 10) as bigint)"))
       .groupBy("source")
-      .agg(expr("kmv_values(hv)").as("sk"))
-      .coalesce(1).persist())
+      .agg(expr("kmv_values(hv)").as("sk")))
     def estExpr(skCol: String): String =
       s"""CASE WHEN size($skCol) < $KmvK THEN CAST(size($skCol) AS BIGINT)
          |ELSE (CAST(${KmvK - 1} AS BIGINT) * $KmvDomain)
@@ -1108,10 +1102,9 @@ object TextOps {
 
   /** Core of `relatedDocs` over any `(doc_id, text)` corpus. */
   def relatedDocsOf(docs: DataFrame, maxDf: Long, k: Int): DataFrame = {
-    val postings = CachedStages.track(docs.filter(col("doc_id").isNotNull)
+    val postings = CachedStages.data(docs.filter(col("doc_id").isNotNull)
       .select(col("doc_id"),
-        explode(expr(s"array_distinct($tokensExpr)")).as("term"))
-      .persist())
+        explode(expr(s"array_distinct($tokensExpr)")).as("term")))
     // NOT persisted (round-19): once `rarePostings` below became the
     // persisted frame (round-18 DupExec fix), `rare` is read exactly
     // once — by that fill — so a persist here pays fill+memory for one
@@ -1124,8 +1117,7 @@ object TextOps {
     // persisted: both sides of the pair self-join read it —
     // unpersisted, the rare-term probe join executed once per side
     // (round-18 DupExec sweep); bounded by df <= maxDf
-    val rarePostings = CachedStages.track(
-      postings.join(rare, Seq("term")).persist())
+    val rarePostings = CachedStages.data(postings.join(rare, Seq("term")))
     val pairs = rarePostings.select(col("term"), col("wt"),
         col("doc_id").as("doc_a"))
       .join(rarePostings.select(col("term"), col("doc_id").as("doc_b")),
@@ -1267,12 +1259,11 @@ object TextOps {
 
   /** Core of `weightedLengthQuantiles` over any `(source, text)` corpus. */
   def weightedLengthQuantilesOf(docs: DataFrame): DataFrame = {
-    val hist = CachedStages.track(docs.filter(col("doc_id").isNotNull)
+    val hist = CachedStages.model(docs.filter(col("doc_id").isNotNull)
       .select(col("source"), expr(s"size($tokensExpr)").cast("long").as("len"))
       .groupBy("source", "len")
       .agg(count(lit(1)).as("n_docs_len"))
-      .withColumn("toks_len", col("len") * col("n_docs_len"))
-      .coalesce(1).persist())
+      .withColumn("toks_len", col("len") * col("n_docs_len")))
     val w = Window.partitionBy("source").orderBy(col("len").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val cum = hist
@@ -1349,11 +1340,10 @@ object TextOps {
     */
   def distinctiveTermsOf(docs: DataFrame, topK: Int,
       minCount: Int): DataFrame = {
-    val counts = CachedStages.track(docs.filter(col("doc_id").isNotNull)
+    val counts = CachedStages.data(docs.filter(col("doc_id").isNotNull)
       .select(col("source"), explode(expr(tokensExpr)).as("token"))
       .groupBy("source", "token")
-      .agg(count(lit(1)).as("n"))
-      .persist())
+      .agg(count(lit(1)).as("n")))
     val srcTotals = counts.groupBy("source").agg(sum(col("n")).as("n_src"))
     val tokTotals = counts.groupBy("token").agg(sum(col("n")).as("n_tok"))
     val total = counts.agg(sum(col("n")).as("n_all"))
@@ -1387,7 +1377,7 @@ object TextOps {
     * feed the IDENTICAL arithmetic (DocStreams.driftCounterStream).
     */
   def tokenDriftOfCounts(tokenCounts: DataFrame): DataFrame = {
-    val counts = CachedStages.track(tokenCounts.persist())
+    val counts = CachedStages.data(tokenCounts)
     val srcTotals = counts.groupBy("source")
       .agg(sum(col("n")).as("n_src"), count(lit(1)).as("n_distinct"))
     val vocab = counts.groupBy("token").agg(sum(col("n")).as("n_tok"))
@@ -1485,15 +1475,13 @@ object TextOps {
     * curve costs two shuffles on a 100 TB corpus, both combinable.
     */
   def heapsGrowthOf(docs: DataFrame): DataFrame = {
-    val toks = CachedStages.track(docs
-      .select(col("doc_id"), explode(expr(tokensExpr)).as("tok"))
-      .persist())
-    val ids = CachedStages.track(docs.select("doc_id").persist())
+    val toks = CachedStages.data(docs
+      .select(col("doc_id"), explode(expr(tokensExpr)).as("tok")))
+    val ids = CachedStages.data(docs.select("doc_id"))
     // persisted: broadcast into both decile spines — unpersisted, the
     // id-range rollup ran once per spine (round-18 DupExec sweep)
-    val bounds = CachedStages.track(ids
-      .agg(min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx"))
-      .coalesce(1).persist())
+    val bounds = CachedStages.model(ids
+      .agg(min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx")))
     def dec(c: String) =
       expr(s"CAST(($c - mn) * 10 div (mx - mn + 1) + 1 AS BIGINT)")
     val docDec = ids.crossJoin(broadcast(bounds))
@@ -1601,10 +1589,9 @@ object TextOps {
     // top table — never the vocabulary
     // persisted: traversed twice (pick rows + the doubled-rank probe)
     // — caught by the round-18 DupExec sweep; 512 rows
-    val ranked = CachedStages.track(top
+    val ranked = CachedStages.model(top
       .withColumn("rank", row_number().over(Window
-        .orderBy(col("c").desc, col("token").asc)).cast("long"))
-      .coalesce(1).persist())
+        .orderBy(col("c").desc, col("token").asc)).cast("long")))
     val r2 = ranked.select(col("rank").as("rank2"),
       col("c").as("c2"))
     ranked.filter(col("rank").isin(picks: _*))
@@ -1637,14 +1624,13 @@ object TextOps {
     * on the source axis.
     */
   def vocabContainmentOf(docs: DataFrame): DataFrame = {
-    val st = CachedStages.track(docs
+    val st = CachedStages.data(docs
       .select(col("source"), explode(expr(tokensExpr)).as("token"))
-      .distinct()
-      .persist())
+      .distinct())
     // |sources|-sized, but derived from the big distinct set — cached
     // so the two directional joins don't re-collapse it
-    val sizes = CachedStages.track(
-      st.groupBy("source").agg(count(lit(1)).as("v")).coalesce(1).persist())
+    val sizes = CachedStages.model(
+      st.groupBy("source").agg(count(lit(1)).as("v")))
     val inter = st.as("a").join(st.as("b"),
         col("a.token") === col("b.token") &&
           col("a.source") < col("b.source"))
@@ -1736,17 +1722,15 @@ object TextOps {
     * graded scale needs neither.
     */
   def sourceDivergenceOf(docs: DataFrame): DataFrame = {
-    val counts = CachedStages.track(docs
+    val counts = CachedStages.data(docs
       .select(col("source"), explode(expr(tokensExpr)).as("token"))
       .groupBy("source", "token")
-      .agg(count(lit(1)).as("c"))
-      .persist())
+      .agg(count(lit(1)).as("c")))
     // persisted: traversed by both sides of the source-pair cross —
     // unpersisted, the per-source total aggregate executed twice
     // (round-18 DupExec sweep)
-    val totals = CachedStages.track(counts.groupBy("source")
-      .agg(sum(col("c")).as("n"))
-      .coalesce(1).persist())
+    val totals = CachedStages.model(counts.groupBy("source")
+      .agg(sum(col("c")).as("n")))
     val pairs = totals.select(col("source").as("source_a"),
         col("n").as("n_a"))
       .crossJoin(totals.select(col("source").as("source_b"),

@@ -35,11 +35,11 @@ class HarnessSpec extends SparkSpec {
     val results = Seq("q19_neardup_pairs", "q69_copurchase_pagerank")
       .map { q => val df = SparkEntry.queries(q)(spark, dir); df.count(); df }
     assert(!cacheManager.isEmpty)
-    assert(CachedStages.tracked(spark) > 0)
+    assert(CachedStages.tracked(spark).nonEmpty)
     assert(spark.sparkContext.getPersistentRDDs.nonEmpty)
     Harness.cleanup(spark)
     assert(cacheManager.isEmpty)
-    assert(CachedStages.tracked(spark) == 0)
+    assert(CachedStages.tracked(spark).isEmpty)
     assert(spark.sparkContext.getPersistentRDDs.isEmpty,
       spark.sparkContext.getPersistentRDDs.values.mkString(", "))
     // the frames stay reachable up to here, so their checkpoint RDDs

@@ -1,5 +1,15 @@
 package graft.ops
 
+import scala.annotation.tailrec
+
+import org.apache.spark.sql.classic
+import org.apache.spark.sql.execution.{CoalesceExec, LocalTableScanExec,
+  SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+  ExchangeQueryStageExec, ResultQueryStageExec, TableCacheQueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
+
 import graft.{SparkEntry, SparkSpec}
 
 /** Sanity over the graded surface: every query runs at sf0.001, the
@@ -23,20 +33,130 @@ class QueriesSpec extends SparkSpec {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
+  /** The physical plan under AQE's and the result stage's wrappers. */
+  private def unwrap(p: SparkPlan): SparkPlan = p match {
+    case a: AdaptiveSparkPlanExec => unwrap(a.executedPlan)
+    case r: ResultQueryStageExec => unwrap(r.plan)
+    case t: TableCacheQueryStageExec => unwrap(t.plan)
+    case other => other
+  }
+
+  /** Whether a cached plan ends in one partition: down its unary spine,
+    * the first coalesce or exchange has one output partition. */
+  @tailrec private def endsInOnePartition(p: SparkPlan): Boolean =
+    unwrap(p) match {
+      case c: CoalesceExec => c.numPartitions == 1
+      case e: Exchange => e.outputPartitioning.numPartitions == 1
+      case r: ReusedExchangeExec => endsInOnePartition(r.child)
+      case s: ExchangeQueryStageExec => endsInOnePartition(s.plan)
+      case u if u.children.size == 1 => endsInOnePartition(u.children.head)
+      case _ => false
+    }
+
+  /** The leaves a `CoalesceExec(1)` narrows to one task: everything below
+    * it down to the nearest exchange or exchange stage. */
+  private def narrowLeaves(p: SparkPlan): Seq[SparkPlan] = unwrap(p) match {
+    case _: Exchange | _: ReusedExchangeExec | _: ExchangeQueryStageExec =>
+      Nil
+    case leaf if leaf.children.isEmpty => Seq(leaf)
+    case node => node.children.flatMap(narrowLeaves)
+  }
+
+  private def coalescesToOne(p: SparkPlan): Seq[CoalesceExec] =
+    unwrap(p) match {
+      case c: CoalesceExec =>
+        (if (c.numPartitions == 1) Seq(c) else Nil) ++ coalescesToOne(c.child)
+      case s: ExchangeQueryStageExec => coalescesToOne(s.plan)
+      case r: ReusedExchangeExec => coalescesToOne(r.child)
+      case node => node.children.flatMap(coalescesToOne)
+    }
+
+  /** The one-partition rule over the stages `CachedStages` tracks for
+    * `spark`, as a list of violations: (a) a stage tracked twice, (b) a
+    * one-partition coalesce that narrows a file scan, or a read of a
+    * cache that keeps its upstream width, to one task. A `model` stage
+    * may only narrow local rows and other one-partition caches. */
+  private def partitionRuleViolations(): Seq[String] = {
+    val session = spark.asInstanceOf[classic.SparkSession]
+    val cacheManager = session.sharedState.cacheManager
+    val plans = CachedStages.tracked(spark)
+    val twice = plans.combinations(2).collect {
+      case Seq(a, b) if a.sameResult(b) =>
+        s"(a) tracked twice: ${a.simpleString(200)}"
+    }.toSeq
+    val narrowed = plans.flatMap { plan =>
+      val cached = cacheManager.lookupCachedData(session, plan)
+        .map(_.cachedRepresentation.cacheBuilder.cachedPlan)
+      assert(cached.nonEmpty, s"tracked but not cached: ${plan.simpleString(200)}")
+      coalescesToOne(cached.get).flatMap(c => narrowLeaves(c.child)).collect {
+        case _: LocalTableScanExec => None
+        case s: InMemoryTableScanExec
+            if endsInOnePartition(s.relation.cacheBuilder.cachedPlan) => None
+        case leaf => Some(s"(b) one-partition coalesce over " +
+          s"${leaf.simpleString(200)} in\n${unwrap(cached.get).treeString}")
+      }.flatten
+    }
+    twice ++ narrowed
+  }
+
   for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
     test(s"$name executes at sf0.001") {
       val df = fn(spark, dir)
       val n = df.count()
+      val violations = partitionRuleViolations()
       // the Verify/Bench cleanup discipline: a query's persisted stages
       // must not outlive its test — a leftover cache whose logical plan
       // matches a LATER suite's subtree silently rewrites that suite's
       // asserted plan (q107's token counts shadowed q98's word-frequency
       // scan until this release)
       CachedStages.release(spark)
+      assert(violations.isEmpty, violations.mkString("\n"))
       // q09 legitimately yields 0 rows at sf0.001; everything else must
       // produce data for the oracle compare to be meaningful.
       if (name != "q09_setops_customers") assert(n > 0, s"$name returned 0 rows")
     }
+  }
+
+  test("partition rule flags a model stage over a file scan and a stage " +
+      "tracked twice") {
+    val orders = Tables(spark, dir, "orders").select("o_orderkey")
+    CachedStages.model(orders).count()
+    val fileScan = partitionRuleViolations()
+    CachedStages.release(spark)
+    val once = CachedStages.data(orders)
+    CachedStages.data(once).count()
+    val twice = partitionRuleViolations()
+    CachedStages.release(spark)
+    // a model stage over local rows, one over another model stage and one
+    // over an exchange pass
+    import spark.implicits._
+    val local = CachedStages.model(Seq(1L, 2L, 3L).toDF("x"))
+    CachedStages.model(local.filter("x > 1")).count()
+    CachedStages.model(orders.groupBy("o_orderkey").count()).count()
+    val clean = partitionRuleViolations()
+    CachedStages.release(spark)
+    assert(fileScan.size == 1 && fileScan.head.startsWith("(b)"), fileScan)
+    assert(twice.size == 1 && twice.head.startsWith("(a)"), twice)
+    assert(clean.isEmpty, clean)
+  }
+
+  test("ops code caches only through CachedStages.model and .data") {
+    val sources = new java.io.File("src/main/scala/graft/ops").listFiles()
+      .filter(f => f.getName.endsWith(".scala") &&
+        f.getName != "CachedStages.scala")
+    assert(sources.length > 20)
+    val raw = """\.persist\(|coalesce\(1\)|CachedStages\.track\b""".r
+    val hits = sources.toSeq.sortBy(_.getName).flatMap { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      try src.getLines().zipWithIndex.collect {
+        // the text before a line comment; scaladoc lines are comments
+        case (line, i) if !line.trim.startsWith("*") &&
+            !line.trim.startsWith("/*") &&
+            raw.findFirstIn(line.split("//", 2).head).nonEmpty =>
+          s"${f.getName}:${i + 1}: ${line.trim}"
+      }.toList finally src.close()
+    }
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 
   test("q17 finds exactly the planted duplicate groups") {
