@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ExplainMode
+
 /** Plan auditor: prints the formatted physical plan of each named query
   * (or all) so scan pruning, pushdown, broadcast choices and shuffle
   * counts can be reviewed per round.
@@ -14,8 +17,19 @@ object Explain {
     val spark = Harness.session()
     names.foreach { n =>
       println(s"\n========== $n ==========")
-      SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+      println(plan(spark, sfDir, n))
     }
     spark.stop()
+  }
+
+  /** Query `name`'s formatted physical plan. The session is cleaned up
+    * first, as Bench and Verify do between queries, so the plan reads
+    * no stage an earlier query cached and is the plan the query has
+    * when it runs alone.
+    */
+  def plan(spark: SparkSession, sfDir: String, name: String): String = {
+    Harness.cleanup(spark)
+    SparkEntry.queries(name)(spark, sfDir).queryExecution
+      .explainString(ExplainMode.fromString("formatted"))
   }
 }

@@ -28,9 +28,8 @@ import org.apache.spark.sql.functions._
   * crossJoin + per-vector ROW_NUMBER exchanged and sorted corpus×k
   * rows per round) — and each update is one partial-aggregable
   * groupBy of k*64 groups. The driver loop runs
-  * O(iters) tiny jobs and localCheckpoints each round's centroids —
-  * iterative lineage otherwise nests every prior round into the plan
-  * (see Dedup.connectedComponents). exact=true carries per-group sorted
+  * O(iters) tiny jobs and [[Rounds.fixed]] cuts each round's
+  * centroids. exact=true carries per-group sorted
   * value lists and exists for oracle bit-parity; production runs use
   * exact=false, whose `avg` keeps O(1) state per (cluster, dim) —
   * ScaleSpec asserts the plan shape and the numeric agreement.
@@ -145,16 +144,15 @@ object Clustering {
     // the final assignment pass (shuffle-free literal argmin); on a
     // cold call the scan below still hits the training pass's cached
     // vectors (Spark's CacheManager matches by canonicalized plan)
-    val assigned = assignNearestLit(vecs, "v", cs)
-      .select("vec_id", "v", "cluster", "dist")
-      .localCheckpoint()
+    val assigned = Rounds.cut(assignNearestLit(vecs, "v", cs)
+      .select("vec_id", "v", "cluster", "dist"))
     (cents, assigned)
   }
 
   /** The trained centroid model alone, as driver data — for consumers
     * that only need the FROZEN MODEL (semanticDedup's corpus pass feeds
     * [[assignNearestLit]] directly). `kmeansModel` eagerly materializes
-    * the full-corpus assignment (localCheckpoint); calling it for the
+    * the full-corpus assignment (a cut); calling it for the
     * centroids alone paid a dead corpus scan per call.
     */
   private[graft] def kmeansCentroidModel(spark: SparkSession, dir: String,
@@ -175,20 +173,16 @@ object Clustering {
       iters: Int, exact: Boolean): Seq[(Long, Seq[Double])] = {
     val vecs = CachedStages.data(Tables(spark, dir, "embeddings")
         .select(col("vec_id"), col("embedding").as("v")))
-    var cents = vecs.filter(col("vec_id") < k)
+    val init = vecs.filter(col("vec_id") < k)
       .select(col("vec_id").as("cluster"),
         expr("transform(v, x -> CAST(x AS DOUBLE))").as("c"))
-      .localCheckpoint()
-    for (_ <- 1 until iters) {
+    collectCentroids(Rounds.fixed(init, iters - 1) { (cents, _) =>
       // assignment is shuffle-FREE: argmin over driver-collected
       // literal centroids (see assignNearest) — the corpus streams
       // through one codegen'd projection per Lloyd round
-      val assigned = assignNearest(vecs, "v", cents)
-        .select("vec_id", "v", "cluster", "dist")
-        .localCheckpoint()
-      cents = updateCentroids(assigned, exact).localCheckpoint()
-    }
-    collectCentroids(cents)
+      updateCentroids(Rounds.cut(assignNearest(vecs, "v", cents)
+        .select("vec_id", "v", "cluster", "dist")), exact)
+    })
   }
 
   /** Graded q181: DAVIES–BOULDIN cluster validity (Davies & Bouldin,
@@ -311,7 +305,7 @@ object Clustering {
       iters: Int = 3, tau: Double = 0.95): DataFrame = {
     graft.functions.CosineSimilarity.register(spark)
     // frozen MODEL only: kmeansModel would also materialize the plain-
-    // corpus assignment (localCheckpoint) that this operator never reads
+    // corpus assignment (a cut) that this operator never reads
     // — its own assignment below runs over the AUGMENTED corpus.
     val cs = kmeansCentroidModel(spark, dir, k, iters)
     val base = Tables(spark, dir, "embeddings")
@@ -340,7 +334,7 @@ object Clustering {
   /** One Lloyd update: per-(cluster, dim) mean of the assigned vectors,
     * re-assembled into centroid arrays. Split out (and not yet
     * checkpointed) so ScaleSpec can assert the exact/scale plan shapes
-    * directly — inside `kmeans` the eager localCheckpoint truncates the
+    * directly — inside `kmeans` the eager cut truncates the
     * executed plan, which would make any plan-string assertion on the
     * returned DataFrame vacuous.
     */

@@ -750,13 +750,7 @@ object Dedup {
     *
     * The per-round `count()` is the convergence test, not data movement
     * — only the change COUNT crosses to the driver. Each round's labels
-    * are `localCheckpoint`ed: an iterative plan that merely persists
-    * still NESTS every prior round in its lineage, and the logical tree
-    * grows until explain/codegen itself OOMs (observed on a 13-round
-    * chain) — truncating lineage per round is as much a part of the
-    * iterative-algorithm shape as the join itself. On a real cluster use
-    * reliable `checkpoint(dir)` instead: localCheckpoint state dies with
-    * a lost executor.
+    * are cut by [[Rounds.untilStable]].
     *
     * Expects columns `doc_a`, `doc_b`; returns (doc_id, canonical_id)
     * for every id that appears in a pair.
@@ -766,45 +760,38 @@ object Dedup {
     // instead of a self-union: the union shape traverses `pairs` twice,
     // and since the caller's pair pipeline is unpersisted, BOTH
     // traversals executed the full upstream LSH candidate join into
-    // this checkpoint — the q120 double-execution class, caught by the
+    // this cut — the q120 double-execution class, caught by the
     // round-18 DupExec sweep across all six CC-based queries
     // (q40/q45/q88/q114/q138/q147: a 37-node sort+join subtree x2).
-    val edges = pairs.select(explode(array(
+    val edges = Rounds.cut(pairs.select(explode(array(
         struct(col("doc_a").as("src"), col("doc_b").as("dst")),
         struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     // Each round aggregates SELF rows (the node's current label, tagged)
     // together with NEIGHBOR rows, so one groupBy yields both the new
     // label (min over self+neighbors) and the old one (min over the
     // tagged self rows) — the convergence count then reads the
-    // checkpointed round frame directly instead of paying a per-round
-    // join against the previous labels. Round 1 derives both sides from
-    // the edge list itself (initial label = own id, and every node
-    // appears as a src of the symmetrized edges), which also fuses away
-    // the separate distinct-nodes initialization job.
-    var labels: DataFrame = null
-    var changed = 1L
-    while (changed > 0) {
-      val (self, neighbors) =
-        if (labels == null)
-          (edges.select(col("src").as("doc_id"), col("src").as("label")),
-            edges.select(col("dst").as("doc_id"), col("src").as("label")))
-        else
-          (labels,
-            labels.join(edges, col("doc_id") === col("src"))
-              .select(col("dst").as("doc_id"), col("label")))
-      val prop = self.withColumn("self", lit(true))
+    // cut round frame directly instead of paying a per-round join
+    // against the previous labels. Round 1 derives both sides from the
+    // edge list itself (initial label = own id, and every node appears
+    // as a src of the symmetrized edges), which also fuses away the
+    // separate distinct-nodes initialization job.
+    def propagate(self: DataFrame, neighbors: DataFrame): DataFrame =
+      self.withColumn("self", lit(true))
         .unionByName(neighbors.withColumn("self", lit(false)))
         .groupBy("doc_id")
         .agg(min(col("label")).as("label"),
           min(when(col("self"), col("label"))).as("old_label"))
-        .localCheckpoint()
-      changed = prop.filter(col("label") =!= col("old_label")).count()
-      labels = prop.select("doc_id", "label")
-    }
-    labels.select(col("doc_id"), col("label").as("canonical_id"))
+    val round1 = propagate(
+      edges.select(col("src").as("doc_id"), col("src").as("label")),
+      edges.select(col("dst").as("doc_id"), col("src").as("label")))
+    val fixpoint = Rounds.untilStable(round1) { prop =>
+      val labels = prop.select("doc_id", "label")
+      propagate(labels, labels.join(edges, col("doc_id") === col("src"))
+        .select(col("dst").as("doc_id"), col("label")))
+    }(_.filter(col("label") =!= col("old_label")).count() == 0)
+    fixpoint.select(col("doc_id"), col("label").as("canonical_id"))
       .orderBy("doc_id")
   }
 

@@ -2727,14 +2727,6 @@ object Events {
       .orderBy("day")
   }
 
-  /** q165's routing seam: `exact = true` is the graded bounded-expansion
-    * path; `exact = false` is the sketch fallback below — the switch a
-    * 100 TB deployment flips when even ×30 (user, day) expansion is too
-    * much shuffle.
-    */
-  def activeUsersOf(evs: DataFrame, exact: Boolean): DataFrame =
-    if (exact) activeUsersOf(evs) else activeUsersSketch(evs)
-
   /** The APPROXIMATE q165 (VERDICT r12 next-#5): DAU/WAU/MAU from
     * q163's mergeable daily HLL register tables instead of expanded
     * exact distincts. State is |days|·m register rows; a trailing

@@ -54,9 +54,8 @@ object Graph {
     * from the node count: the 100-TB-shaped edge set never re-shuffles,
     * and the per-iteration exchange is the map-side-combined partial
     * sum by `dst` (≤ |nodes| rows per partition), plus the vector
-    * itself when it is shuffled. Ranks are `localCheckpoint`ed per
-    * round to keep the plan flat (same discipline as q40's components
-    * loop).
+    * itself when it is shuffled. Each round's ranks are cut by
+    * [[Rounds.fixed]].
     *
     * The co-purchase graph is symmetric, so every node has out-degree
     * ≥ 1 and the mass a node emits always lands on ranked nodes —
@@ -195,8 +194,8 @@ object Graph {
     * Scale shape: the symmetric edge list builds once and persists
     * (the q69 discipline); each round is label-join → per-(node, label)
     * partial count → per-node argmax — two map-side-combinable
-    * shuffles, state is one label per node, `localCheckpoint` keeps the
-    * loop's lineage flat. Label frequency counting never materializes a
+    * shuffles, state is one label per node, each round cut by
+    * [[Rounds]]. Label frequency counting never materializes a
     * neighborhood list, so hub nodes cost their degree, not their
     * degree squared.
     */
@@ -250,11 +249,9 @@ object Graph {
     * < k until fixpoint. Rounds needed is the peeling depth (≤11
     * observed across scales, bounded by the degeneracy ordering);
     * each round is one semi-join of the stationary edge table against
-    * the surviving node set plus a degree aggregate, with
-    * `localCheckpoint` truncating lineage per round (the q40/q69
-    * iterative discipline — on a real cluster use reliable
-    * checkpoints). The per-round `count()` is the convergence test —
-    * only the count crosses to the driver.
+    * the surviving node set plus a degree aggregate, each round cut by
+    * [[Rounds.untilStable]]. The per-round `count()` is the convergence
+    * test — only the count crosses to the driver.
     *
     * The DuckDB oracle replays peeling as 24 chained CTE rounds per k
     * (past-fixpoint rounds are no-ops, so over-provisioning is safe;
@@ -267,6 +264,10 @@ object Graph {
     val edges = CachedStages.data(input)
     val spark = edges.sparkSession
     import spark.implicits._
+    // the edges with both ends in `nodes`
+    def inCore(nodes: DataFrame): DataFrame = edges
+      .join(nodes.select(col("id").as("src")), Seq("src"))
+      .join(nodes.select(col("id").as("dst")), Seq("dst"))
     // CORENESS IS MONOTONE (Seidman): the (k+1)-core is a subgraph of
     // the k-core, and peeling from ANY superset of the true core
     // converges to that core — so the ladder peels ASCENDING and seeds
@@ -279,50 +280,41 @@ object Graph {
     var seed: DataFrame = null
     var nAll = -1L // |full node set| — marks identity-seed rounds
     val results = ks.sorted.map { k =>
-      var nodes =
+      val start =
         if (seed == null) {
-          val all =
-            edges.select(col("src").as("id")).distinct().localCheckpoint()
+          val all = Rounds.cut(edges.select(col("src").as("id")).distinct())
           nAll = all.count()
           all
         } else seed
-      var n = nodes.count()
-      var changed = n > 0
-      while (changed) {
-        // IDENTITY-SEED ROUND (round 20, guide §2.4 "remove shuffles
-        // outright"): while the surviving set is still the FULL node
-        // set (n == nAll), both semi-joins keep every edge — the round
-        // is a plain degree aggregate over the stationary cached edge
-        // table. Provably identical ONLY for caller-declared SYMMETRIC
-        // edge lists (both directions present, so distinct-src = the
-        // node set and the dst semi-join is the identity too); the
-        // general directed path is untouched. Every node then has
-        // degree ≥ 1, which is why the k ≤ 1 peel terminates inside
-        // this no-join round.
-        val base =
-          if (symmetricEdges && n == nAll) edges
-          else edges
-            .join(nodes.select(col("id").as("src")), Seq("src"))
-            .join(nodes.select(col("id").as("dst")), Seq("dst"))
-        val next = base
+      // |nodes| of the latest round; its count is the convergence test
+      var n = start.count()
+      // IDENTITY-SEED ROUND (round 20, guide §2.4 "remove shuffles
+      // outright"): while the surviving set is still the FULL node set
+      // (n == nAll), both semi-joins keep every edge — the round is a
+      // plain degree aggregate over the stationary cached edge table.
+      // Provably identical ONLY for caller-declared SYMMETRIC edge lists
+      // (both directions present, so distinct-src = the node set and the
+      // dst semi-join is the identity too); the general directed path is
+      // untouched. Every node then has degree ≥ 1, which is why the
+      // k ≤ 1 peel terminates inside this no-join round.
+      def peel(nodes: DataFrame): DataFrame =
+        (if (symmetricEdges && n == nAll) edges else inCore(nodes))
           .groupBy("src").agg(count(lit(1)).as("deg"))
           .filter(col("deg") >= k)
           .select(col("src").as("id"))
-          .localCheckpoint()
-        val m = next.count()
-        changed = m != n && m > 0
-        n = m
-        nodes = next
-      }
-      seed = nodes // the k-core seeds the (k+1)-peel (monotonicity)
+      val core = if (n == 0) start else
+        Rounds.untilStable(peel(start))(peel) { next =>
+          val m = next.count()
+          val stable = m == n || m == 0
+          n = m
+          stable
+        }
+      seed = core // the k-core seeds the (k+1)-peel (monotonicity)
       val nEdges =
         if (n == 0) 0L
         // symmetric full-set core: every edge survives, no join needed
         else if (symmetricEdges && n == nAll) edges.count()
-        else edges
-          .join(nodes.select(col("id").as("src")), Seq("src"))
-          .join(nodes.select(col("id").as("dst")), Seq("dst"))
-          .count()
+        else inCore(core).count()
       (k.toLong, n, nEdges)
     }
     results.toDF("k", "n_core_nodes", "n_core_edges").orderBy("k")
@@ -369,28 +361,28 @@ object Graph {
     // build + checkpoint, the round-1 label join, AND the |E|-row
     // (dst, lbl) counting shuffle. Identical labels by construction
     // (all counts tie at 1; ties break toward the smallest label).
-    var labels = byDst.groupBy(col("dst"))
+    val labels1 = Rounds.cut(byDst.groupBy(col("dst"))
       .agg(min(col("src")).as("lbl"))
-      .select(col("dst").as("id"), col("lbl")).localCheckpoint()
+      .select(col("dst").as("id"), col("lbl")))
     // one label per node under the both-directions contract
-    val bc = broadcastsVector(labels.count())
+    val bc = broadcastsVector(labels1.count())
     // lazy: filled by round 2's join, never when iters == 1
     val edgesCached = if (bc) byDst
       else CachedStages.data(byDst.repartition(col("src")))
-    for (_ <- 2 to iters) {
-      labels = edgesCached
-        .join(joinSide(labels, bc), col("src") === col("id"))
-        .groupBy(col("dst"), col("lbl"))
-        .agg(count(lit(1)).as("cnt"))
-        // argmax by (cnt, ~lbl): most frequent neighbor label, smallest
-        // label on ties — one partial-aggregable max, no window. ~x is
-        // -x - 1: order-reversing like -x, but it cannot overflow on
-        // Long.MinValue
-        .groupBy(col("dst"))
-        .agg(max(struct(col("cnt"), bitwise_not(col("lbl")).as("rev"))).as("best"))
-        .select(col("dst").as("id"), bitwise_not(col("best.rev")).as("lbl"))
-        .localCheckpoint()
-    }
+    def round(labels: DataFrame): DataFrame = edgesCached
+      .join(joinSide(labels, bc), col("src") === col("id"))
+      .groupBy(col("dst"), col("lbl"))
+      .agg(count(lit(1)).as("cnt"))
+      // argmax by (cnt, ~lbl): most frequent neighbor label, smallest
+      // label on ties — one partial-aggregable max, no window. ~x is
+      // -x - 1: order-reversing like -x, but it cannot overflow on
+      // Long.MinValue
+      .groupBy(col("dst"))
+      .agg(max(struct(col("cnt"), bitwise_not(col("lbl")).as("rev"))).as("best"))
+      .select(col("dst").as("id"), bitwise_not(col("best.rev")).as("lbl"))
+    // round 1 was cut and counted above, so the skeleton starts at round 2
+    val labels = if (iters == 1) labels1
+      else Rounds.fixed(round(labels1), iters - 2)((labels, _) => round(labels))
     labels.select(col("id"), col("lbl").as("community"))
   }
 
@@ -474,13 +466,11 @@ object Graph {
     val teleportRows = seedIds.coalesce(vectorParts(nSeeds))
       .select(col("id"), lit(teleport).as("rank_fp"))
     // init: all mass uniform on the seeds (the t=0 teleport state)
-    var ranks = seedIds.coalesce(vectorParts(nSeeds)).select(col("id"),
-      lit(RankScale / nSeeds).as("rank_fp")).localCheckpoint()
-    for (_ <- 1 to iters) {
-      ranks = pprRound(edgesDeg, teleportRows, joinSide(ranks, bc),
-        rankParts).localCheckpoint()
+    val init = seedIds.coalesce(vectorParts(nSeeds)).select(col("id"),
+      lit(RankScale / nSeeds).as("rank_fp"))
+    Rounds.fixed(init, iters) { (ranks, _) =>
+      pprRound(edgesDeg, teleportRows, joinSide(ranks, bc), rankParts)
     }
-    ranks
   }
 
   /** One personalized-PageRank iteration over the rank vector's join
@@ -643,7 +633,7 @@ object Graph {
     val nodesSlim = nodes.coalesce(rankParts)
     // same zero-row fold as pagerankRound (round 21): the full node
     // set rides the aggregate instead of a second join stage
-    var ranks = edgesDeg
+    val round1 = edgesDeg
       .select(col("dst"), expr(s"${RankScale / n}L div deg").as("contrib"))
       .unionByName(nodesSlim.select(col("src").as("dst"),
         lit(0L).as("contrib")))
@@ -651,17 +641,15 @@ object Graph {
       .select(col("dst").as("id"),
         (lit(teleport) + expr("17 * mass div 20")).as("rank_fp"))
       .coalesce(rankParts)
-      .localCheckpoint()
-    for (_ <- 2 to iters) {
-      ranks = pagerankRound(edgesDeg, nodesSlim, teleport,
-        joinSide(ranks, bc), rankParts).localCheckpoint()
+    Rounds.fixed(round1, iters - 1) { (ranks, _) =>
+      pagerankRound(edgesDeg, nodesSlim, teleport, joinSide(ranks, bc),
+        rankParts)
     }
-    ranks
   }
 
   /** One PageRank iteration over the rank vector's join side (see
     * [[joinSide]]) — extracted so RoundPlans can print a round's plan,
-    * which the loop's localCheckpoint hides from the final frame.
+    * which the loop's [[Rounds.cut]] hides from the final frame.
     */
   private[ops] def pagerankRound(edgesDeg: DataFrame, nodes: DataFrame,
       teleport: Long, rankSide: DataFrame, rankParts: Int): DataFrame = {
@@ -756,8 +744,8 @@ object Graph {
     * incidence copy persisted partitioned by `joinKey` (the shuffle
     * side of [[broadcastsVector]], for the reasons given there). Kept
     * free of caching so ScaleSpec can plan-audit the join directly
-    * (the caching in [[hitsHalfRound]] and the loop's localCheckpoint
-    * both hide it from downstream plans).
+    * (the caching in [[hitsHalfRound]] hides it from downstream
+    * plans).
     */
   private[ops] def hitsScoreJoin(oriented: DataFrame, scores: DataFrame,
       joinKey: String, outKey: String): DataFrame = {

@@ -346,15 +346,13 @@ object Privacy {
     *
     * Scale shape: per round, ONE histogram collapse per dimension
     * (map-side combinable), windows bounded by the VALUE DOMAIN per
-    * partition, cut table broadcast back, and a `localCheckpoint`
-    * truncating the loop lineage (the q40/q42 discipline). Rounds =
-    * log₂(groups) — 6 levels bound any scale's depth cost.
+    * partition, cut table broadcast back, and each round cut by
+    * [[Rounds.fixed]]. Rounds = log₂(groups) — 6 levels bound any
+    * scale's depth cost.
     */
   def mondrianOf(rows: DataFrame, k: Long, rounds: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    var cur = rows.select(col("bal"), col("nat"),
-      lit(0L).as("pid")).localCheckpoint()
-    def medianOf(dim: String) = {
+    def medianOf(cur: DataFrame, dim: String) = {
       val w = Window.partitionBy("pid").orderBy("v")
       cur.groupBy(col("pid"), col(dim).as("v"))
         .agg(count(lit(1)).as("c"))
@@ -368,14 +366,15 @@ object Privacy {
         .select(col("pid"), col("m.v").as(s"med_$dim"),
           col("m.cum").as(s"left_$dim"))
     }
-    for (_ <- 1 to rounds) {
+    val init = rows.select(col("bal"), col("nat"), lit(0L).as("pid"))
+    val boxes = Rounds.fixed(init, rounds) { (cur, _) =>
       val ranges = cur.groupBy("pid").agg(
         min(col("bal")).as("mnb"), max(col("bal")).as("mxb"),
         min(col("nat")).as("mnn"), max(col("nat")).as("mxn"),
         count(lit(1)).as("n"))
       val cuts = ranges
-        .join(medianOf("bal"), Seq("pid"))
-        .join(medianOf("nat"), Seq("pid"))
+        .join(medianOf(cur, "bal"), Seq("pid"))
+        .join(medianOf(cur, "nat"), Seq("pid"))
         .withColumn("dim", expr(
           "IF(mxb - mnb >= mxn - mnn, CAST(0 AS BIGINT), " +
             "CAST(1 AS BIGINT))"))
@@ -385,16 +384,15 @@ object Privacy {
           s"""IF(n >= 2 * $k AND lft >= $k AND n - lft >= $k,
              | CAST(1 AS BIGINT), CAST(0 AS BIGINT))""".stripMargin))
         .select("pid", "dim", "med", "do_cut")
-      cur = cur.join(broadcast(cuts), Seq("pid"))
+      cur.join(broadcast(cuts), Seq("pid"))
         .withColumn("pid", expr(
           """CASE WHEN do_cut = 1 AND ((dim = 0 AND bal <= med)
             |       OR (dim = 1 AND nat <= med)) THEN pid * 3 + 1
             |     WHEN do_cut = 1 THEN pid * 3 + 2
             |     ELSE pid * 3 END""".stripMargin))
         .select("bal", "nat", "pid")
-        .localCheckpoint()
     }
-    val groups = CachedStages.model(cur.groupBy("pid").agg(
+    val groups = CachedStages.model(boxes.groupBy("pid").agg(
       min(col("bal")).as("bal_min"), max(col("bal")).as("bal_max"),
       min(col("nat")).as("nat_min"), max(col("nat")).as("nat_max"),
       count(lit(1)).as("n")))

@@ -253,19 +253,18 @@ object Quantization {
     // final encode pass over a fresh slice projection (on a cold call
     // the scan hits the training pass's cached slice via plan match);
     // codes are the per-vector codewords assembled in sub order
-    val codes = pqAssignLit(slicedOf(vecs, m, subDim), cs, subDim)
+    val codes = Rounds.cut(pqAssignLit(slicedOf(vecs, m, subDim), cs, subDim)
       .groupBy("vec_id")
       .agg(expr(
         "transform(array_sort(collect_list(struct(sub, cluster))), s -> s.cluster)")
-        .as("codes"))
-      .localCheckpoint()
+        .as("codes")))
     (cents, codes)
   }
 
   /** The trained codebook alone, as driver data — for consumers that
     * only need the FROZEN MODEL (the streaming codebook fitter collects
     * exactly this). `pqModel` eagerly materializes the corpus-wide
-    * encode (localCheckpoint); calling it for the codebook alone paid a
+    * encode (a cut); calling it for the codebook alone paid a
     * dead encode pass per call.
     */
   private[graft] def pqCodebookModel(vecs: DataFrame, m: Int, subDim: Int,
@@ -332,7 +331,7 @@ object Quantization {
       .select(col("sub"), col("vec_id").as("cluster"),
         expr("transform(sv, x -> CAST(x AS DOUBLE))").as("c")))
     for (_ <- 1 until iters) {
-      val assigned = pqAssignLit(sliced, cents, subDim).localCheckpoint()
+      val assigned = Rounds.cut(pqAssignLit(sliced, cents, subDim))
       // exact sorted-fold per-(sub, cluster, dim) mean — q42's update
       // with the sub-space in the key; both engines add the same
       // doubles in the same sorted order

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * each iterative-loop kernel (PageRank round, personalized-PageRank
   * round) on both sides of [[Graph.broadcastsVector]]: once with the
   * session's broadcast threshold as it is, once with it at -1. The
-  * loops localCheckpoint per round, so the final frame's plan shows
+  * loops cut every round ([[Rounds]]), so the final frame's plan shows
   * only a checkpoint-RDD scan — this is the only honest way to diff
   * what a round executes (VERDICT r20 #4 called out a
   * checkpoint-truncated before/after pair as non-evidence).
@@ -25,10 +25,10 @@ object RoundPlans {
     val edgesDeg = CachedStages.data(
       edges.join(deg, "src").repartition(col("src")))
     edgesDeg.count()
-    val nodes = edgesDeg.select("src").distinct().localCheckpoint()
+    val nodes = Rounds.cut(edgesDeg.select("src").distinct())
     val n = nodes.count()
-    val ranks = nodes.select(col("src").as("id"),
-      lit(1000000L).as("rank_fp")).localCheckpoint()
+    val ranks = Rounds.cut(nodes.select(col("src").as("id"),
+      lit(1000000L).as("rank_fp")))
     val teleportRows = nodes.select(col("src").as("id"),
       lit(7L).as("rank_fp"))
     val rankParts = Graph.vectorParts(n)

@@ -105,17 +105,15 @@ object Sampling {
     * the corpus — the split itself is the same shuffle-free md5
     * projection as q44, and the expensive half IS q19+q40's proven
     * plan. On a web-scale corpus duplicated docs can be 10-30% of the
-    * total; once the cluster table outgrows a broadcast, flip
-    * `broadcastClusters` off and the same join runs as a doc_id
-    * shuffle join — the broadcast-or-shuffle trade the graph loops
-    * derive from their node count (`Graph.broadcastsVector`).
+    * total, and a cluster table that outgrows a broadcast needs the
+    * same join as a doc_id shuffle join — the broadcast-or-shuffle
+    * trade the graph loops derive from their node count
+    * (`Graph.broadcastsVector`).
     */
-  def clusterAwareSplit(spark: SparkSession, dir: String,
-      broadcastClusters: Boolean = true): DataFrame = {
+  def clusterAwareSplit(spark: SparkSession, dir: String): DataFrame = {
     val corpus = Dedup.corpusWithNearDups(spark, dir).select("doc_id")
-    val comp0 = Dedup.dedupClusters(spark, dir)
-    val comp = if (broadcastClusters) broadcast(comp0) else comp0
-    corpus.join(comp, Seq("doc_id"), "left")
+    corpus.join(broadcast(Dedup.dedupClusters(spark, dir)), Seq("doc_id"),
+        "left")
       .withColumn("canonical_id",
         coalesce(col("canonical_id"), col("doc_id")))
       .withColumn("bucket", expr(bucketExpr("canonical_id")))

@@ -678,8 +678,8 @@ object Similarity {
     * fused cosine kernel). Each of the k rounds is one bounded join
     * (remaining × selected members' sims), a map-side-combined max,
     * and a per-probe struct-max argmax — no window over anything
-    * corpus-sized, no driver loop over rows; rounds localCheckpoint
-    * to keep the plan flat (the q40/q69 iterative discipline).
+    * corpus-sized, no driver loop over rows; each round cut by
+    * [[Rounds.fixed]].
     */
   def mmrRerank(spark: SparkSession, dir: String, nProbes: Int = 4,
       nCand: Int = 10, k: Int = 5): DataFrame = {
@@ -712,9 +712,9 @@ object Similarity {
         .select(col("q_id"), lit(rank.toLong).as("rank"),
           col("m.vec_id").as("vec_id"), col("m.rel_ppm").as("rel_ppm"),
           col("m.mmr_fp").as("mmr_fp"))
-    var out = argmax(cand.withColumn("mmr_fp", expr("7 * rel_ppm")), 1)
-      .localCheckpoint()
-    for (r <- 2 to k) {
+    val first = argmax(cand.withColumn("mmr_fp", expr("7 * rel_ppm")), 1)
+    // round r picks rank r + 1
+    val picked = Rounds.fixed(first, k - 1) { (out, r) =>
       val sel = out.select(col("q_id"), col("vec_id"))
       val redundancy = pairs
         .join(sel.withColumnRenamed("vec_id", "b"), Seq("q_id", "b"))
@@ -727,9 +727,9 @@ object Similarity {
       val scored = remaining
         .join(redundancy, Seq("q_id", "vec_id"))
         .withColumn("mmr_fp", expr("7 * rel_ppm - 3 * ms"))
-      out = out.unionByName(argmax(scored, r)).localCheckpoint()
+      out.unionByName(argmax(scored, r + 1))
     }
-    out.orderBy("q_id", "rank")
+    picked.orderBy("q_id", "rank")
   }
 
   /** Graded q151: ANN QUALITY LADDER — measured recall@k of every

@@ -485,8 +485,7 @@ object TextOps {
     * output) and never re-enters; each of the `k` rounds runs over
     * |vocab| rows, the winning pair is a 1-row TakeOrdered that
     * broadcast-joins back (never a driver collect), and the vocabulary
-    * is `localCheckpoint`ed per round so lineage stays flat (the
-    * q69-pagerank discipline). Training cost is k × O(|vocab|),
+    * is cut per round by [[Rounds.cut]]. Training cost is k × O(|vocab|),
     * independent of corpus size — the same reason real BPE trainers
     * precompute word frequencies.
     */
@@ -507,12 +506,11 @@ object TextOps {
     */
   private[ops] def bpeTrain(words: DataFrame, k: Int): (DataFrame, DataFrame) = {
     require(k >= 1, s"k must be >= 1, got $k")
-    var vocab = words
+    var vocab = Rounds.cut(words
       .select(col("word"), concat(lit(" "), expr(
         "array_join(transform(sequence(1, length(word)), " +
           "i -> substring(word, i, 1)), '  ')"), lit(" ")).as("w"),
-        col("freq"))
-      .localCheckpoint()
+        col("freq")))
     var merges: DataFrame = null
     var step = 1
     var exhausted = false
@@ -525,12 +523,12 @@ object TextOps {
             "i -> concat(element_at(syms, i), ' ', element_at(syms, i + 1)))"))
           .as("pair"))
         .groupBy("pair").agg(sum(col("freq")).as("n_occ"))
-      val best = pairs.orderBy(col("n_occ").desc, col("pair").asc).limit(1)
+      val best = Rounds.cut(pairs
+        .orderBy(col("n_occ").desc, col("pair").asc).limit(1)
         .select(lit(step.toLong).as("step"),
           expr("split_part(pair, ' ', 1)").as("lhs"),
           expr("split_part(pair, ' ', 2)").as("rhs"),
-          col("n_occ"))
-        .localCheckpoint()
+          col("n_occ")))
       // a small vocabulary can run out of adjacent pairs before round k
       // (every word fully merged to one symbol): stop instead of
       // cross-joining the empty winner, which would wipe the vocabulary
@@ -541,10 +539,9 @@ object TextOps {
         exhausted = true
       } else {
         merges = if (merges == null) best else merges.unionByName(best)
-        vocab = vocab.crossJoin(broadcast(best.select("lhs", "rhs")))
+        vocab = Rounds.cut(vocab.crossJoin(broadcast(best.select("lhs", "rhs")))
           .select(col("word"), expr("replace(w, ' ' || lhs || '  ' || rhs || ' ', " +
-            "' ' || lhs || rhs || ' ')").as("w"), col("freq"))
-          .localCheckpoint()
+            "' ' || lhs || rhs || ' ')").as("w"), col("freq")))
       }
       step += 1
     }

@@ -66,17 +66,16 @@ object TrainingPipeline {
     // quality bands computed from the surviving text itself (length is
     // re-derived, not read from the table, so planted docs score too);
     // band constants live once, in TextOps.qualityCol
-    val scored = TextOps.tokenizedOf(survivors)
+    // cut BEFORE the quality filter: predicate pushdown would
+    // otherwise substitute the quality aliases into the pushed
+    // condition and re-run the tokenizer ~11x per row (the q38 bug
+    // class; PlanAudit-confirmed here too). The cut frame is three
+    // slim columns — ~24 bytes/row at any corpus size.
+    val scored = Rounds.cut(TextOps.tokenizedOf(survivors)
       .withColumn("quality", TextOps.qualityCol(
         length(col("text")), col("n_toks"), col("stop_hits")))
       .select(col("doc_id"), col("quality"), col("n_toks").cast("long")
-        .as("n_toks"))
-      // boundary BEFORE the quality filter: predicate pushdown would
-      // otherwise substitute the quality aliases into the pushed
-      // condition and re-run the tokenizer ~11x per row (the q38 bug
-      // class; PlanAudit-confirmed here too). The checkpointed frame is
-      // three slim columns — ~24 bytes/row at any corpus size.
-      .localCheckpoint()
+        .as("n_toks")))
     scored
       .filter(col("quality") >= 60)
       // same null-key contract as Sampling.hashSplit: a NULL doc_id must

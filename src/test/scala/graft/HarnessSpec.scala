@@ -47,6 +47,18 @@ class HarnessSpec extends SparkSpec {
     assert(results.size == 2 && own.columns.nonEmpty)
   }
 
+  test("Explain gives a query the same plan after another query as alone") {
+    val dir = "/root/testdata/sf0.001"
+    // expression ids, exchange plan ids and common-expression alias
+    // numbers count up across the session
+    def masked(q: String) = Explain.plan(spark, dir, q)
+      .replaceAll("#\\d+|plan_id=\\d+|_common_expr_\\d+", "#")
+    val alone = masked("q209_degree_census")
+    // q183 caches and fills the strong-edge table q209 reads
+    Explain.plan(spark, dir, "q183_strong_kcore")
+    assert(masked("q209_degree_census") == alone)
+  }
+
   test("json escape parses back to the original string") {
     val mapper = new ObjectMapper()
     val controls = (0 until 0x20).map(_.toChar.toString)

@@ -1,5 +1,7 @@
 package graft.ops
 
+import org.apache.spark.sql.DataFrame
+
 import graft.SparkSpec
 
 /** Fixed-point PageRank (q69). */
@@ -399,5 +401,49 @@ class GraphSpec extends SparkSpec {
       // none, so node 2 hears only 3's label and node 4 only 2's
       assert(lpa(edges, 2) == Map(2L -> 4L, 4L -> 1L, 3L -> 2L))
     }
+  }
+
+  test("k-core ladder and degree census: the symmetric shortcuts give the " +
+      "general path's rows") {
+    // triangle 1-2-3 (the only 2-core), star 20-{21,22,23} (peels to an
+    // empty core at k = 2) and the isolated pair 10-11; the 3-core is
+    // empty, so k = 4 starts from an empty seed
+    val und = Seq((1L, 2L), (2L, 3L), (1L, 3L), (20L, 21L), (20L, 22L),
+      (20L, 23L), (10L, 11L))
+    val hand = und.flatMap { case (a, b) => Seq((a, b), (b, a)) }
+      .toDF("src", "dst")
+    val strong = Graph.strongEdges(spark, "/root/testdata/sf0.001", 2)
+    val ks = Seq(1, 2, 3, 4)
+    for (edges <- Seq(hand, strong)) {
+      def rows(df: DataFrame) = df.collect().toSeq
+      val ladder = rows(Graph.kCoreLadderOf(edges, ks, symmetricEdges = true))
+      assert(ladder == rows(Graph.kCoreLadderOf(edges, ks)))
+      assert(rows(Graph.degreeCensusOf(edges, symmetricEdges = true)) ==
+        rows(Graph.degreeCensusOf(edges)))
+      if (edges eq hand)
+        assert(ladder.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))) ==
+          Seq((1L, 9L, 14L), (2L, 3L, 6L), (3L, 0L, 0L), (4L, 0L, 0L)))
+      CachedStages.release(spark)
+    }
+  }
+
+  test("Rounds: zero fixed rounds return the cut init; a stable input " +
+      "stops after one round") {
+    val init = Seq(1L, 2L, 3L).toDF("x")
+    def isCut(df: DataFrame) = df.queryExecution.analyzed
+      .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
+    val never: DataFrame => DataFrame = _ => fail("no round may run")
+    val cutJobs = observed(Rounds.cut(init))._2.size
+    val (zero, zeroJobs, _) = observed(
+      Rounds.fixed(init, 0)((state, _) => never(state)))
+    assert(isCut(zero) && zeroJobs.size == cutJobs)
+    assert(zero.as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
+    var tests = 0
+    val stable = Rounds.untilStable(init)(never) { cut =>
+      tests += 1
+      cut.count() == 3L
+    }
+    assert(isCut(stable) && tests == 1)
+    assert(stable.as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
   }
 }

@@ -140,19 +140,24 @@ class QueriesSpec extends SparkSpec {
     assert(clean.isEmpty, clean)
   }
 
-  test("ops code caches only through CachedStages.model and .data") {
+  test("ops code caches only through CachedStages.model and .data and " +
+      "cuts lineage only through Rounds") {
     val sources = new java.io.File("src/main/scala/graft/ops").listFiles()
-      .filter(f => f.getName.endsWith(".scala") &&
-        f.getName != "CachedStages.scala")
+      .filter(_.getName.endsWith(".scala"))
     assert(sources.length > 20)
-    val raw = """\.persist\(|coalesce\(1\)|CachedStages\.track\b""".r
+    // each raw call, and the one file allowed to make it
+    val rules = Seq(
+      """\.persist\(|coalesce\(1\)|CachedStages\.track\b""".r ->
+        "CachedStages.scala",
+      """localCheckpoint\(""".r -> "Rounds.scala")
     val hits = sources.toSeq.sortBy(_.getName).flatMap { f =>
+      val raw = rules.collect { case (re, owner) if owner != f.getName => re }
       val src = scala.io.Source.fromFile(f, "UTF-8")
       try src.getLines().zipWithIndex.collect {
         // the text before a line comment; scaladoc lines are comments
         case (line, i) if !line.trim.startsWith("*") &&
             !line.trim.startsWith("/*") &&
-            raw.findFirstIn(line.split("//", 2).head).nonEmpty =>
+            raw.exists(_.findFirstIn(line.split("//", 2).head).nonEmpty) =>
           s"${f.getName}:${i + 1}: ${line.trim}"
       }.toList finally src.close()
     }
@@ -2342,10 +2347,10 @@ class QueriesSpec extends SparkSpec {
   }
   test("q165 sketch fallback: bit-level window replay, bounded vs exact") {
     val evs = Events.events(spark, dir)
-    val exact = Events.activeUsersOf(evs, exact = true).collect()
+    val exact = Events.activeUsersOf(evs).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     CachedStages.release(spark)
-    val approx = Events.activeUsersOf(evs, exact = false).collect()
+    val approx = Events.activeUsersSketch(evs).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4)))
     assert(approx.map(_._1).toSeq == exact.map(_._1).toSeq)
